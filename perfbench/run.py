@@ -425,7 +425,6 @@ def main():
     args = ap.parse_args()
 
     import build
-    import gen
     t = time.time()
     cp = build.build()
     log(f"build ready in {time.time() - t:.1f}s")
@@ -436,6 +435,7 @@ def main():
     data = os.path.abspath(f".bench_build/data/{args.workload}-s{args.seed}-{key}")
     t = time.time()
     if not os.path.exists(f"{data}/.done"):
+        import gen  # numpy / pyarrow / duckdb load only when generating
         shutil.rmtree(data, ignore_errors=True)
         gen.generate(args.workload, args.seed, data)
         open(f"{data}/.done", "w").close()
