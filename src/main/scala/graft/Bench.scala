@@ -58,20 +58,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same master override as Verify (local-cluster = multi-JVM
-    // executors); timings under it are NOT comparable to local[N]
-    // epochs. The cpus pin alone cannot catch this (a local-cluster
-    // run can carry the same cpus string as the epoch), so the budget
-    // gate below refuses non-local[cpus] masters explicitly and the
-    // artifact records the master for downstream comparability checks.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = MasterConfig(SparkSession.builder()
-      .master(master), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
+    val cpus = GraftSession.cpus
+    // timings under a non-local[cpus] master (local-cluster = multi-JVM
+    // executors) are NOT comparable to local[N] epochs. The cpus pin
+    // alone cannot catch this (a local-cluster run can carry the same
+    // cpus string as the epoch), so the budget gate below refuses
+    // non-local[cpus] masters explicitly and the artifact records the
+    // master for downstream comparability checks.
+    val master = spark.sparkContext.master
     // Warmup at the smallest SF: JIT-compiles every query's code path
     // (parquet reader, codegen, interpreted-expression fallbacks) so the
     // timed loop measures steady-state throughput instead of charging

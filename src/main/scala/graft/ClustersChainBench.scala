@@ -73,14 +73,7 @@ object ClustersChainBench {
     val len = sys.env.getOrElse("SPARK_GRAFT_CHAIN_LEN", "64").toInt
     val chainDir = sys.env.getOrElse("SPARK_GRAFT_CHAIN_DIR",
       "target/benchdata/clusterschain0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-clusterschain")
 
     plantChain(spark, baseDir, chainDir, len)
 

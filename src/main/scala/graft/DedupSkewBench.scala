@@ -93,14 +93,7 @@ object DedupSkewBench {
     val mult = sys.env.getOrElse("SPARK_GRAFT_DEDUP_SKEW_MULT", "512").toInt
     val hotDir = sys.env.getOrElse("SPARK_GRAFT_DEDUP_SKEW_DIR",
       "target/benchdata/dedupskew0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-dedupskew")
 
     plantHotTemplate(spark, baseDir, hotDir, mult)
 

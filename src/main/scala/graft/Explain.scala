@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of named
   * catalog queries (all of them if no KNOWN name is given — unknown
   * args are warned about and ignored, so `tools/verify.sh <sf> out
@@ -18,12 +16,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val (names, unknown) = args.drop(1).toSet.partition(SparkEntry.queries.contains)
     unknown.foreach(a => System.err.println(s"[explain] ignoring unknown query name: $a"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     // NonFatal only: an OOM/StackOverflow must crash the tool, and a
     // scripted plan audit must see a nonzero exit for any broken query

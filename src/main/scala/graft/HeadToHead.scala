@@ -113,14 +113,7 @@ object HeadToHeadData {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, csvDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-h2h-csv")
     retailCsvFrames(spark, sfDir).foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$csvDir/$name")
@@ -143,14 +136,7 @@ object HeadToHead {
       case _ => sys.error("usage: HeadToHead <csvDir> <outBase> [faithful|corrected]")
     }
     require(Set("faithful", "corrected")(mode), s"bad mode '$mode'")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-h2h")
     val inputs = Seq("calendar", "inventory", "product", "sales", "store")
       .map(t => t -> s"$csvDir/$t").toMap
     def once(out: String): Double = {

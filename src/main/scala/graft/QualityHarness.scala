@@ -311,14 +311,7 @@ object QualityHarness {
 object Quality {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-quality")
     val failed = QualityHarness.writeArtifact(spark, sfDir, outFile,
       sys.env.get("SPARK_GRAFT_QUALITY_ANN_DIR"))
     spark.stop()

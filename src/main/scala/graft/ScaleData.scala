@@ -41,14 +41,7 @@ object BenchData {
 
   def main(args: Array[String]): Unit = {
     val Array(baseDir, outRoot) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-benchdata")
     // SPARK_GRAFT_SF10_ONLY skips the (slow, already-on-disk) base
     // tiers when only the 100× tier needs (re)deriving; a bare
     // SPARK_GRAFT_SF100_SUBQUAD run likewise derives from the existing

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{RetailPipeline, SkewJoin}
@@ -35,14 +35,7 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val skewDir = args(0) // extra args (e.g. verify.sh's outDir) ignored
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-skewbench")
 
     def timed(body: => Unit): Double = {
       val t0 = System.nanoTime()

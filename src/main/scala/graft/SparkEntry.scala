@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.GraftFunctions
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -21,6 +22,14 @@ import graft.operators._
   * `spark.catalog.clearCache()` after every query, and any other
   * caller (notebook, long-lived service) must do the same — a query
   * cannot unpersist its own result before the caller materializes it.
+  *
+  * Function convention: every `queries` entry first ensures the graft
+  * native functions on the session it is handed
+  * ([[graft.functions.GraftFunctions.register]], which never replaces
+  * an existing name), so an external driver's plain session resolves
+  * every entry. Operator methods called directly, not through this
+  * map, need a session from [[GraftSession]] or one started with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object SparkEntry {
 
@@ -29,11 +38,17 @@ object SparkEntry {
     RetailPipeline.faithful(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ RetailPipeline.queries ++ Dedup.queries ++
+    (Relational.queries ++ RetailPipeline.queries ++ Dedup.queries ++
       TextAnalysis.queries ++ Similarity.queries ++ Events.queries ++
       Multimodal.queries ++ MediaContainers.queries ++
       AsofJoin.queries ++ Sampling.queries ++
-      Curation.queries ++ Ranking.queries ++ Layout.queries
+      Curation.queries ++ Ranking.queries ++ Layout.queries)
+      .map { case (name, fn) =>
+        name -> { (spark: SparkSession, dir: String) =>
+          GraftFunctions.register(spark)
+          fn(spark, dir)
+        }
+      }
 
   def oracleSql: Map[String, String] =
     Relational.oracles ++ RetailPipeline.oracles ++ Dedup.oracles ++

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query memory diagnostics for the scale tiers: runs named catalog
   * queries (noop sink, same materialization contract as graft.Bench)
@@ -26,18 +25,9 @@ object SpillAudit {
     val names = args.drop(1).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // mirror graft.Bench's session (NO AQE initial-partition override
-      // — measured and rejected, see bench_reports/spill_audit_r18.json);
-      // the env knob exists to re-measure experimental partition shapes
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus).toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // graft.Bench's exact session (no AQE initial-partition override —
+    // measured and rejected, see bench_reports/spill_audit_r18.json)
+    val spark = GraftSession("graft-spillaudit")
     spark.sparkContext.setLogLevel("ERROR")
 
     val memSpilled = new AtomicLong

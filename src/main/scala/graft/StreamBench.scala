@@ -148,17 +148,11 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val splits = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLITS", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one micro-batch per split file: keep every progress entry
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, splits * 2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    // one micro-batch per split file: keep every progress entry
+    val spark = GraftSession("graft-streambench",
+      "spark.sql.streaming.numRecentProgressUpdates" ->
+        math.max(100, splits * 2).toString)
 
     // optional comma-separated op subset (e.g. the sf1 latency probe
     // runs only sessionize + doc_dedup_probe against the big corpus).

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -36,19 +35,12 @@ object StreamSkewBench {
     val uniformDir = args(0) // extra args (verify.sh's outDir) ignored
     val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "target/benchdata/skew0.1")
     val splits = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLITS", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // recentProgress keeps only this many entries (default 100);
-      // with one micro-batch per split, fewer than `splits` would
-      // silently truncate the per-batch metric arrays below.
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, splits * 2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // recentProgress keeps only this many entries (default 100);
+    // with one micro-batch per split, fewer than `splits` would
+    // silently truncate the per-batch metric arrays below.
+    val spark = GraftSession("graft-streamskew",
+      "spark.sql.streaming.numRecentProgressUpdates" ->
+        math.max(100, splits * 2).toString)
 
     // time-split + timed-run helpers shared with the per-round
     // streaming artifact (StreamBench)

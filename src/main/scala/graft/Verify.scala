@@ -1,27 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // local-cluster[<workers>,<cores>,<memMB>] form runs executors as
-    // SEPARATE JVMs, which is the only local way to exercise the
-    // serialization boundary (native Expressions, Aggregators,
-    // broadcast codebooks, bucketed-table metadata all cross it on a
-    // real cluster). MasterConfig supplies the executor classpath +
-    // JDK17 opens those child JVMs need.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = MasterConfig(SparkSession.builder()
-      .master(master), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[<workers>,<cores>,<memMB>] runs
+    // executors as SEPARATE JVMs (see GraftSession)
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (same contract
     // as Bench's SPARK_GRAFT_BENCH_QUERIES); the driver leaves it unset

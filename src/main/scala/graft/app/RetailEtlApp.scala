@@ -143,10 +143,7 @@ object RetailEtlApp {
   }
 
   private def session(conf: RunConfig): SparkSession =
-    SparkSession.builder()
-      .appName(s"retail-etl-${conf.mode}-${conf.date}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    graft.GraftSession(s"retail-etl-${conf.mode}-${conf.date}")
 
   private def execute(conf: RunConfig): Unit = {
     val spark = session(conf)

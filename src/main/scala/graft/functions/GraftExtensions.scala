@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * makes `vec_dot`/`vec_norm`/`simhash60`/`shingles3`/`minhash_sig64`
   * available in every session's SQL and `expr()` without per-session
-  * registration (GraftFunctions.register stays as the programmatic
-  * fallback the operators call themselves).
+  * registration. The in-process path is [[graft.GraftSession]], which
+  * calls [[GraftFunctions.register]]; operators register nothing
+  * themselves.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -248,11 +249,12 @@ case class MinHashSig64(child: Expression)
     copy(child = newChild)
 }
 
-/** One registration point for every graft native function; call at the
-  * top of any query that uses them (idempotent, per-session). The
-  * single `all` list is also what [[GraftExtensions]] injects, so the
-  * programmatic and spark.sql.extensions deployment paths can never
-  * drift apart. */
+/** Every graft native function. A session gets them one of two ways:
+  * [[graft.GraftSession]] (which calls [[register]]) or
+  * `spark.sql.extensions=`[[GraftExtensions]], which injects this same
+  * `all` list, so the two deployment paths can never drift apart.
+  * [[graft.SparkEntry.queries]] also calls [[register]] on the caller's
+  * session; operators never register anything themselves. */
 object GraftFunctions {
 
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
@@ -278,10 +280,17 @@ object GraftFunctions {
     ("lev_banded", classOf[LevBanded],
       (c: Seq[Expression]) => LevBanded(c(0), c(1), c(2))))
 
+  /** Registers the names from [[all]] that `spark` does not resolve
+    * yet. Idempotent: an existing function of the same name (injected by
+    * the extensions, registered earlier, or the caller's own) is never
+    * replaced. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    all.foreach { case (name, _, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    registry.synchronized {
+      all.foreach { case (name, _, builder) =>
+        if (!registry.functionExists(FunctionIdentifier(name)))
+          registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+      }
     }
   }
 }

@@ -53,7 +53,6 @@ object Curation {
     "list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])"
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // persist the (doc_id, sh) projection: the eval-hash side, the
     // corpus-explode side, and the final n_ngrams projection all branch
     // from it, and without reuse the expensive part — regex tokenization
@@ -178,7 +177,6 @@ object Curation {
   private[graft] val kmeansK = 8
 
   def kmeansAssign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.loadBalanced(spark, dir, "embeddings")
       .select("vec_id", "embedding")
     val cents = e.filter(col("vec_id") % kmeansSeedComb === 3)
@@ -617,7 +615,6 @@ object Curation {
   private[graft] val manifestMinTokens = 5
 
   def trainManifest(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // one narrow projection, persisted: keeper grouping, eval hashes,
     // contamination hits, and the final assembly all branch from it
     // (SparkEntry cache convention — entry points clear per query)

@@ -62,7 +62,6 @@ object Dedup {
     * `size(sh) > 0` below the projection — see the Shingles3 kernel
     * scaladoc for the full autopsy. */
   private[graft] def docShingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadBalanced(spark, dir, "documents")
       .withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
       .select("doc_id", "sh")
@@ -314,7 +313,6 @@ object Dedup {
     * doc id, so nothing about the shape is quadratic in corpus
     * size. */
   private def pairIntersections(docSh: DataFrame, maxDf: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docSh.sparkSession)
     // persisted: feeds the DF stats, the pair self-join (via the
     // exploded index), and both verification joins; without it the
     // tokenize+shingle scan of every document runs four times
@@ -552,7 +550,6 @@ object Dedup {
   }
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // doc_id, sh (hashed shingles), n — shared by candidate generation
     // AND verification; the signature is deliberately NOT on this
     // frame so the two verification joins don't recompute 64
@@ -602,7 +599,6 @@ object Dedup {
   private[graft] val batchRes = 7L
 
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     incrementalOver(docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
       .withColumn("n", size(col("sh"))))
   }
@@ -688,7 +684,6 @@ object Dedup {
     * (doc_id, text) frame — the input contract of [[probeIndexed]];
     * also how the index side is prepared. */
   private[graft] def prepSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
       .filter(size(col("sh")) > 0)
       .withColumn("sh", sort_array(col("sh")))
@@ -699,7 +694,6 @@ object Dedup {
   /** Build (or freshness-skip) the two at-rest index tables from
     * `dir`'s non-batch documents. Idempotent per corpus state. */
   private[graft] def ensureIndexed(spark: SparkSession, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val fp = graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/documents.parquet")
     val idxDocs = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
       .filter(!(col("doc_id") % batchStride === batchRes))
@@ -817,7 +811,6 @@ object Dedup {
   private val simhashSql = simhashSqlOver(tokHash60Sql("x"))
 
   private def simhashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(toksSpark))
       .filter(size(col("toks")) > 0)
@@ -904,7 +897,6 @@ object Dedup {
   private[graft] def tokHash60HiSql(v: String): String = hexHashSql(v, 17, 15)
 
   private[graft] def simhashesWide(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // ONE md5 per token: both 15-hex-digit halves come from the same
     // 32-char digest, materialized once — the digest pass dominates
     // this query, and CollapseProject keeps a non-cheap multi-consumer
@@ -1066,7 +1058,6 @@ object Dedup {
   private[graft] def embeddingCosineAllPairs(spark: SparkSession, dir: String,
       threshold: Double, nBlocks: Int = -1, pairMod: Int = 1,
       emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val g = if (nBlocks > 0) nBlocks else defaultPairBlocks(spark)
     // vec_dot/vec_norm are native codegen'd expressions
     // (graft.functions.DotProductFloat) — same ascending-index IEEE
@@ -1352,7 +1343,6 @@ object Dedup {
     * collapsed form completes in minutes with zero candidate blow-up. */
   private[graft] def embeddingLshOver(corpus: DataFrame,
       forceGeometry: Option[(Int, Int)]): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // 1. exact collapse: one shuffle by embedding bytes; persisted —
     // feeds the rep frame, the distinct-count geometry pick, the
     // within-group expansion, and both cross-expansion joins (callers
@@ -1896,7 +1886,6 @@ object Dedup {
   }
 
   def levenshteinPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     levCandidates(
         Tables.loadBalanced(spark, dir, "documents").select("doc_id", "text"))
       .withColumn("lev_dist", expr(s"lev_banded(text_i, text_j, $levMaxDist)"))

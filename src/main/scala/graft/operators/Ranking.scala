@@ -40,7 +40,6 @@ object Ranking {
   /** Core over any (doc_id, text) frame — exposed for the spec's
     * hand-computed fixture. */
   private[graft] def tfidfTopkOver(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // persisted: the tf branch, the df branch, and the N scalar all
     // read it; without reuse the regex tokenization of every document
     // runs three times (SparkEntry cache convention — entry points

@@ -144,7 +144,6 @@ object Similarity {
     * QualityHarness (stride 1 = the full historic query set). */
   private[graft] def cosineTopKOver(corpus: DataFrame, queryStride: Int = 1,
       emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val qMod = queryModFor(queryStride)
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
     val q = e.filter(col("vec_id") % qMod === 0)
@@ -223,7 +222,6 @@ object Similarity {
     * a historic %50 run; spec/QUALITY fixtures keep the bare shape. */
   private[graft] def annLshOver(input: DataFrame,
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(input.sparkSession)
     val e = input.withColumn("norm", expr("vec_norm(embedding)"))
       .withColumn("__planes", org.apache.spark.sql.functions.typedlit(planes))
       .withColumn("bucket", bucketCol)
@@ -371,7 +369,6 @@ object Similarity {
 
   private[graft] def ivfTopKOver(corpus: DataFrame,
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
 
@@ -484,7 +481,6 @@ object Similarity {
   }
 
   private[graft] def pqAssignOver(input: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(input.sparkSession)
     val e = input.select("vec_id", "embedding")
     pqCodes(e, pqCodebook(e))
       .select(col("vec_id"), col("code0"), col("code1"), col("code2"), col("code3"),
@@ -539,7 +535,6 @@ object Similarity {
 
   private[graft] def ivfPqTopKOver(corpus: DataFrame,
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
     val (centroids, lists) = ivfIndex(e)
@@ -708,7 +703,6 @@ object Similarity {
   // ---------------------------------------------------------------------
   private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String,
       indexDir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.loadBalanced(spark, dir, "embeddings")
       .withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
@@ -727,7 +721,6 @@ object Similarity {
   private[graft] def ivfPqServe(spark: SparkSession, dir: String,
       indexDir: String, queryStride: Int = 1,
       emitMod: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     val codebook = spark.read.parquet(s"$indexDir/codebook")
     val postings = spark.read.parquet(s"$indexDir/postings")

@@ -26,7 +26,6 @@ object TextAnalysis {
   // text_token_stats
   // ---------------------------------------------------------------------
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // tok_stats is the one-pass kernel twin of the declarative form
     // (see TextKernels scaladoc for the per-field exactness contract;
     // FunctionsSpec pins the equivalence property-style). It runs at
@@ -147,7 +146,6 @@ object TextAnalysis {
   private val stopArrSql = stopwordsList.map(w => s"'$w'").mkString("[", ", ", "]")
 
   def quality(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // same kernel as tokenStats, with the stopword list pushed into
     // the token scan (n_stop) — one pass instead of a second
     // tokenize + interpreted array_contains filter per row

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** One phase of the CROSS-JVM streaming-resume check (RUNBOOK.md's
   * "persistent catalog" deployment note, previously documented but
   * never exercised): build a SparkSession against a shared
@@ -31,22 +29,15 @@ object ResumeHarness {
 
   def main(args: Array[String]): Unit = {
     val Array(corpusDir, dropDir, ckptDir, warehouse, metastoreDb, phase) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-resume-$phase")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
+    val spark = graft.GraftSession(s"graft-resume-$phase",
+      "spark.sql.warehouse.dir" -> warehouse,
       // embedded Derby, shared BY PATH across the two processes (they
       // run sequentially; Derby's single-boot lock is why they must
       // not overlap — same as any single-metastore deployment without
       // a metastore service)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$metastoreDb;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$metastoreDb;create=true",
+      "spark.sql.catalogImplementation" -> "hive")
 
     val q = DocDedupStream.run(spark, corpusDir, dropDir, sinkName,
       maxFilesPerTrigger = Some(1), checkpointDir = Some(ckptDir))

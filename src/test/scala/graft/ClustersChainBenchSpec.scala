@@ -14,7 +14,6 @@ class ClustersChainBenchSpec extends AnyFunSuite with SparkSuite {
   test("planted chain: lag-1 shingle jaccard verifies, lag-2 does not, zero corpus collision") {
     val out = Files.createTempDirectory("graft_chain_spec").toString
     ClustersChainBench.plantChain(spark, SF, out, len = 6)
-    graft.functions.GraftFunctions.register(spark)
     val sh = spark.read.parquet(s"$out/documents.parquet")
       .withColumn("sh", expr(
         s"shingles3_h64(${graft.operators.Dedup.toksSpark})"))

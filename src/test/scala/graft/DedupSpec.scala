@@ -127,7 +127,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val dup = Seq(
       (100L, s"$boiler the quick brown fox jumps over the lazy dog again and again today"),
       (101L, s"$boiler the quick brown fox jumps over the lazy dog again and again tonight"))
-    graft.functions.GraftFunctions.register(spark)
     val docs = (unrelated ++ dup).toDF("doc_id", "text")
       .withColumn("sh", org.apache.spark.sql.functions.expr(
         s"shingles3_h64(${Dedup.toksSpark})"))
@@ -162,7 +161,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       (i, s"unique lead$i $boiler unique tail${i}a tail${i}b tail${i}c"))
     val short = (100L, boiler)
     val long = (101L, s"$boiler plus a genuinely unique continuation sentence here")
-    graft.functions.GraftFunctions.register(spark)
     val docs = (carriers :+ short :+ long).toDF("doc_id", "text")
       .withColumn("sh", org.apache.spark.sql.functions.expr(
         s"shingles3_h64(${Dedup.toksSpark})"))
@@ -337,7 +335,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     spark.catalog.clearCache()
     // brute-force reference via the same native expressions
-    graft.functions.GraftFunctions.register(spark)
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
     val expected = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine", org.apache.spark.sql.functions.round(
@@ -433,7 +430,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("containment catches a quoted subset that jaccard misses, in one direction only") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val quoted = "the quick brown fox jumps over the lazy dog today"
     val padding = (1 to 40).map(i => s"filler$i").mkString(" ")
     // doc 2 fully contains doc 1's text plus 40 unique tokens; doc 3/4
@@ -494,7 +490,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("incremental dedup pairs batch docs against the index only, never batch-vs-batch") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog again and again at dawn"
     // ids 7 & 17 are batch (%10==7); 3 & 4 are index. 7≈17 (batch-batch
     // near-dup: must NOT pair), 7≈3 (batch-index: must pair), 4 unique.

@@ -7,14 +7,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** Property tests: every native kernel expression must be value-equal
   * to the declarative built-in composition it replaced (that is the
   * whole contract that lets the DuckDB oracles stay unchanged). */
 class FunctionsSpec extends AnyFunSuite with SparkSuite {
-
-  GraftFunctions.register(spark)
 
   /** Deterministic property driver (scalatestplus isn't resolvable
     * offline): N samples of `gen` from fixed seeds. */

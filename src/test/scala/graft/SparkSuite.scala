@@ -2,21 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session across suites (getOrCreate dedupes). Specs
-  * run on sf0.001 for speed — full DuckDB-oracle hash checks run at
-  * sf0.01 via graft.Verify (see tools/verify.sh). */
+/** One shared local session across suites (getOrCreate dedupes), built
+  * by the engine's own factory so specs see the functions and settings
+  * every main sees. Specs run on sf0.001 for speed — full DuckDB-oracle
+  * hash checks run at sf0.01 via graft.Verify (see tools/verify.sh). */
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.sessionLock.synchronized {
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    GraftSession("graft-test",
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
       // plan-string assertions read PushedFilters/ReadSchema; the default
       // 100-char metadata truncation would cut them off mid-list
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .getOrCreate()
+      "spark.sql.maxMetadataStringLength" -> "10000")
   }
 
   val SF: String = "/root/testdata/sf0.001"
