@@ -1,7 +1,77 @@
 package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+
+  /** Task totals of one catalog entry's jobs. */
+  private[graft] final case class TaskTotals(tasks: Long = 0, spillMemBytes: Long = 0,
+      spillDiskBytes: Long = 0, shuffleReadBytes: Long = 0,
+      shuffleWriteBytes: Long = 0, peakTaskMemBytes: Long = 0) {
+    def json: String =
+      s"""{"tasks":$tasks,"spill_mem_bytes":$spillMemBytes,""" +
+        s""""spill_disk_bytes":$spillDiskBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,"peak_task_mem_bytes":$peakTaskMemBytes}"""
+  }
+
+  /** Per-entry task metrics. Every job started inside `attributed(name)`
+    * carries `name` as a local property (Spark hands it on to the
+    * broadcast, subquery and adaptive-stage threads it spawns for that
+    * query), and the listener sums the tasks of that job's stages under
+    * `name`; jobs without the property (warmup, sentinel probes,
+    * concurrent callers) are not counted. Listener events arrive
+    * asynchronously: read [[totals]] after [[finish]], which drains the
+    * bus once with a marker job queued behind every event posted so
+    * far. */
+  private[graft] final class TaskMetricsByQuery(spark: SparkSession) extends SparkListener {
+    private val QueryProp = "graft.bench.query"
+    private val DrainTag = "__graft_bench_drain__"
+    private val stageQuery = mutable.Map.empty[Int, String]
+    private val byQuery = mutable.Map.empty[String, TaskTotals]
+    private val drained = new CountDownLatch(1)
+    spark.sparkContext.addSparkListener(this)
+
+    def attributed[A](name: String)(body: => A): A = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(QueryProp, name)
+      try body finally sc.setLocalProperty(QueryProp, null)
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(QueryProp))).foreach { q =>
+        if (q == DrainTag) drained.countDown()
+        else e.stageIds.foreach(stageQuery(_) = q)
+      }
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (q <- stageQuery.get(e.stageId); m <- Option(e.taskMetrics)) {
+        val t = byQuery.getOrElse(q, TaskTotals())
+        byQuery(q) = TaskTotals(t.tasks + 1,
+          t.spillMemBytes + m.memoryBytesSpilled,
+          t.spillDiskBytes + m.diskBytesSpilled,
+          t.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+          t.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          math.max(t.peakTaskMemBytes, m.peakExecutionMemory))
+      }
+    }
+
+    /** Drain the listener bus and deregister; false if the marker job's
+      * event did not arrive within a minute (totals may then be short). */
+    def finish(): Boolean = {
+      attributed(DrainTag)(spark.sparkContext.parallelize(Seq(0), 1).count(): Unit)
+      val ok = drained.await(60, TimeUnit.SECONDS)
+      spark.sparkContext.removeSparkListener(this)
+      ok
+    }
+
+    def totals: Map[String, TaskTotals] = synchronized(byQuery.toMap)
+  }
 
   /** Fixed trivial probes re-timed at every pass boundary. Their code paths
     * never change round-to-round, so they isolate AMBIENT host load from
@@ -162,6 +232,10 @@ object Bench {
       .withDefaultValue(Vector.empty)
     var probeCount = 0
 
+    // Task metrics (spill, shuffle bytes, peak task memory, task count)
+    // are attributed per query over the FIRST timed pass only.
+    val taskMetrics = new TaskMetricsByQuery(spark)
+
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -188,6 +262,7 @@ object Bench {
     }
 
     def runPass(): Unit = {
+      val first = passTimes.isEmpty
       val startProbe = probeCount - 1 // the probe taken just before this pass
       val times = scala.collection.mutable.Map.empty[String, Double]
       val brackets = scala.collection.mutable.Map.empty[String, (Int, Int)]
@@ -195,7 +270,8 @@ object Bench {
       selected.foreach { case (name, fn) =>
         if (sinceProbe >= ProbeEvery) { probeSentinels(); sinceProbe = 0 }
         val before = probeCount - 1
-        times(name) = timeOne(name, fn)
+        times(name) =
+          if (first) taskMetrics.attributed(name)(timeOne(name, fn)) else timeOne(name, fn)
         // the probe at index `probeCount` is the next one taken —
         // either the next intra-pass probe or this pass's trailing
         // boundary probe below
@@ -421,13 +497,18 @@ object Bench {
         .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val excludedJson = excluded.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val tasksDrained = taskMetrics.finish()
+    val taskTotals = taskMetrics.totals
+    val taskJson = s"""{"pass":0,"drained":$tasksDrained,"queries":""" +
+      selected.keys.map(n => s"\"$n\":" + taskTotals.getOrElse(n, TaskTotals()).json)
+        .mkString("{", ",", "}") + "}"
     val report =
       s"""{"metric":"total","value":${jsonNum(total)},"raw_value":${jsonNum(rawTotal)},""" +
         s""""unit":"sec","sf":"$sfDir","cpus":"$cpus","master":"$master",""" +
         s""""reps":$nReps,"generated_at":"${java.time.Instant.now()}",""" +
         s""""ivfpq_prebuild_s":${jsonNum(ivfpqPrebuildS)},"excluded":$excludedJson,""" +
         s""""noise":$noiseJson,"budget":$budgetBlock,""" +
-        s""""queries":$qs,"per_rep":$perRepJson}"""
+        s""""queries":$qs,"per_rep":$perRepJson,"task_metrics":$taskJson}"""
     try {
       Option(reportPath.getParent).foreach(java.nio.file.Files.createDirectories(_): Unit)
       java.nio.file.Files.write(reportPath,

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Derived benchmark datasets — `BenchData <baseSfDir> <outRoot>`.
-  * Generates two variants of the driver's sf0.1 tables under
-  * `<outRoot>` (conventionally `target/benchdata`, git-ignored):
+  * Generates four variants of the driver's sf0.1 tables under
+  * `<outRoot>` (conventionally `target/benchdata`, git-ignored). Each
+  * is a complete table layout, so `graft.Bench`, `graft.StreamBench`
+  * and the oracle gate run on it like on any sf dir:
   *
   *  - `skew0.1/` — same tables, two planted skews:
   *      * lineitem: ~2% of all rows remapped onto ONE (part, store)
@@ -14,11 +16,20 @@ import org.apache.spark.sql.functions._
   *        Data Transformation.py:50) then fans that cell out to
   *        tens of millions of rows landing in a single shuffle
   *        partition — the classic hot-key join a 100 TB retail fact
-  *        hits on its flagship store. SkewBench measures plain vs
-  *        AQE-skew-split vs SkewJoin.saltedBy on exactly this join.
+  *        hits on its flagship store. SkewJoinSpec pins that
+  *        SkewJoin.saltedBy preserves this join's multiset.
   *      * events: ~20% of rows remapped onto one hot user — the
   *        per-user window/sessionize straggler case.
   *    All other tables are byte-identical copies, serving as controls.
+  *
+  *  - `dedupskew0.1/` — the dedup tier's own skew shapes: one document
+  *    cloned ×[[HotTemplateMult]] (see [[hotTemplate]]) and one vector
+  *    re-emitted ×[[MegaDupMult]] as an exact-duplicate family (see
+  *    [[megaDupVectors]]).
+  *
+  *  - `clusterschain0.1/` — a [[ChainLen]]-document sequential-overlap
+  *    chain added to the documents (see [[withChain]]), the duplicate
+  *    graph min-label propagation cannot close within its round cap.
   *
   *  - `sf1/` — 10× scale-up: every fact AND its dimensions replicated
   *    10 times with a consistent key offset (1e8) per replica, so
@@ -50,6 +61,8 @@ object BenchData {
       !sys.env.contains("SPARK_GRAFT_SF10")
     if (!sys.env.contains("SPARK_GRAFT_SF10_ONLY") && !subquadOnly) {
       writeSkew(spark, baseDir, s"$outRoot/skew0.1")
+      writeDedupSkew(spark, baseDir, s"$outRoot/dedupskew0.1")
+      writeClustersChain(spark, baseDir, s"$outRoot/clusterschain0.1")
       writeSf1(spark, baseDir, s"$outRoot/sf1")
     }
     // sf10 (opt-in, r15 ask #3): ANOTHER 10× on top of sf1 — 100× the
@@ -148,11 +161,114 @@ object BenchData {
       when(pmod(xxhash64(col("event_id")), lit(5)) === 0, lit(42L))
         .otherwise(col("user_id")))
 
+  /** Copy every table of `base` not named in `planted` into `out`,
+    * completing a planted tier's table layout. */
+  private def copyOthers(spark: SparkSession, base: String, out: String,
+      planted: Set[String]): Unit =
+    for (t <- Tables.names if !planted(t)) write(load(spark, base, t), out, t, 2)
+
   private def writeSkew(spark: SparkSession, base: String, out: String): Unit = {
     write(skewLineitem(load(spark, base, "lineitem")), out, "lineitem", 8)
     write(skewEvents(load(spark, base, "events")), out, "events", 4)
-    for (t <- Tables.names if t != "lineitem" && t != "events")
-      write(load(spark, base, t), out, t, 2)
+    copyOthers(spark, base, out, Set("lineitem", "events"))
+  }
+
+  /** Clone multiplicity of the dedupskew tier's hot template. */
+  private[graft] val HotTemplateMult = 512
+
+  /** Copies in the dedupskew tier's exact-duplicate vector family. */
+  private[graft] val MegaDupMult = 10000
+
+  /** The HOT TEMPLATE: one document cloned `mult` times (the sf1
+    * tier's clone mechanism at high multiplicity instead of 10×), the
+    * boilerplate storm a web crawl produces when a site template or
+    * licence page repeats across hosts. Every shingle of the template
+    * then has document frequency ≈ `mult`, which is exactly the case
+    * the shingle-DF cap (Dedup.defaultMaxShingleDf = 64) exists for,
+    * and which the uniform oracle corpora never trigger. The template
+    * is the min doc_id among docs with >= 12 tokens; clone N gets id
+    * 9.0e8 + N and text `<template> repN`. */
+  private[graft] def hotTemplate(docs: DataFrame, mult: Int): DataFrame = {
+    val template = docs
+      .filter(size(split(col("text"), "\\s+")) >= 12)
+      .orderBy("doc_id").limit(1)
+    // fail loudly rather than measure the base corpus under a
+    // "multiplicity=N" label: an empty plant would make the
+    // bounded-under-skew claim vacuous
+    require(template.count() == 1,
+      "no document has >= 12 tokens; cannot plant a hot template")
+    val clones = template
+      .withColumn("__rep", explode(expr(s"sequence(1, $mult)")))
+      .withColumn("doc_id", lit(900000000L) + col("__rep"))
+      .withColumn("text", concat(col("text"), lit(" rep"), col("__rep")))
+      .withColumn("n_chars", length(col("text")))
+      .drop("__rep")
+    docs.unionByName(clones)
+  }
+
+  /** One EXACT-duplicate mega family: the min-vec_id vector re-emitted
+    * `mult` times under fresh ODD ids (odd ⇒ never ≡ 0 mod
+    * lshPlantStride, so the lshCorpus near-dup plant leaves the family
+    * alone and its output stays exactly C(mult+1, 2) within-pairs
+    * plus the base corpus's rows). The exact-duplicate collapse
+    * (Dedup.embeddingLshOver) bands one rep for the whole family, so
+    * the measured term is the within-group pair expansion. */
+  private[graft] def megaDupVectors(emb: DataFrame, mult: Int): DataFrame = {
+    val template = emb.orderBy("vec_id").limit(1)
+    require(template.count() == 1, "no embeddings to plant a duplicate family from")
+    val clones = template
+      .withColumn("__rep", explode(expr(s"sequence(1, $mult)")))
+      .withColumn("vec_id", lit(800000000L) + col("__rep") * 2 + 1)
+      .drop("__rep")
+    emb.unionByName(clones)
+  }
+
+  private[graft] def writeDedupSkew(spark: SparkSession, base: String, out: String): Unit = {
+    write(hotTemplate(load(spark, base, "documents"), HotTemplateMult), out, "documents", 8)
+    write(megaDupVectors(load(spark, base, "embeddings"), MegaDupMult), out, "embeddings", 8)
+    copyOthers(spark, base, out, Set("documents", "embeddings"))
+  }
+
+  /** Documents in the clusterschain tier's chain. */
+  private[graft] val ChainLen = 64
+
+  /** Chain doc ids live far above both the corpus ids and the hot
+    * template's 9.0e8 clone range. */
+  private[graft] val chainBaseId = 910000000L
+
+  /** The documents plus a `len`-doc CHAIN of sequential-overlap clones,
+    * where doc i and doc i+1 are near-dups but doc i and doc i+2 are
+    * not. Each chain doc is a fresh-token sliding window — W=38 unique
+    * tokens stepping by 3, so consecutive docs share 33 of 39 distinct
+    * 3-gram shingles (jaccard 33/39 ≈ 0.846 ≥ the 0.8 verify
+    * threshold) while lag-2 docs share 30 of 42 (0.714 < 0.8). The
+    * duplicate graph is then a pure path, ids ascending along it, so
+    * the component minimum sits at one END: min-label needs len−1
+    * rounds, exits its cap unconverged, and
+    * [[graft.operators.Dedup.componentLabelsDiag]] takes the
+    * large-star/small-star fallback. Tokens are globally unique to
+    * the chain (`chaintok<i>`), so the chain shares no shingle with
+    * the corpus — the planted component is exactly the path. */
+  private[graft] def withChain(spark: SparkSession, docs: DataFrame,
+      len: Int): DataFrame = {
+    require(len >= 2, s"chain length $len cannot form a path")
+    val W = 38 // tokens per doc
+    val S = 3  // token step between consecutive docs
+    val chain = spark.range(len.toLong)
+      .select(
+        (lit(chainBaseId) + col("id")).as("doc_id"),
+        // doc i = tokens [i*S, i*S + W)
+        expr(s"array_join(transform(sequence(id * $S, id * $S + ${W - 1}), " +
+          "t -> concat('chaintok', t)), ' ')").as("text"))
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("chainbench"))
+      .withColumn("n_chars", length(col("text")))
+    docs.select("doc_id", "text", "lang", "source", "n_chars").unionByName(chain)
+  }
+
+  private[graft] def writeClustersChain(spark: SparkSession, base: String, out: String): Unit = {
+    write(withChain(spark, load(spark, base, "documents"), ChainLen), out, "documents", 8)
+    copyOthers(spark, base, out, Set("documents"))
   }
 
   /** Replicate with `rep * keyOff` added to every column in `keys`. */

@@ -22,9 +22,13 @@ import graft.streaming.{EventsStream, SessionStream}
   * the stream-stream interval join, stream-static broadcast
   * enrichment, `flatMapGroupsWithState` sessionization, and the
   * at-rest-index dedup probe. Every op streams a time-split copy
-  * with `maxFilesPerTrigger=1` (the StreamSkewBench idiom) so each
-  * artifact row carries a real multi-batch state-rows trajectory,
-  * not a single-batch point.
+  * with `maxFilesPerTrigger=1` so each artifact row carries a real
+  * multi-batch state-rows trajectory, not a single-batch point. Run
+  * on BenchData's `skew0.1` tier with
+  * `SPARK_GRAFT_STREAM_OPS=sessionize,tumbling_agg`, it measures a
+  * hot user in stateful streaming: sessionization groups by user,
+  * so the hot user's fold runs serially inside one task, while the
+  * time-keyed tumbling agg is the control.
   *
   * Stdout contract matches graft.Bench: a compact summary line is
   * printed FIRST and again LAST (tail-anchored captures see the final
@@ -76,8 +80,7 @@ object StreamBench {
     * events table — `<out>/events.parquet/pNN.parquet` — so the
     * returned dir streams through EVERY events consumer: pass `<out>`
     * to the EventsStream ops (their layout probe sees the directory)
-    * and `<out>/events.parquet` to SessionStream.run. Shared with
-    * StreamSkewBench. */
+    * and `<out>/events.parquet` to SessionStream.run. */
   def timeSplit(spark: SparkSession, dir: String, k: Int): String = {
     val ev = Tables.loadEvents(spark, dir)
     val mm = ev.agg(min("sec"), max("sec")).head()

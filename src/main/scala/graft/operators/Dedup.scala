@@ -532,9 +532,8 @@ object Dedup {
       .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
 
   /** Band-collision candidate pairs over a hashed-shingle frame —
-    * factored out of [[minhashLsh]] so the dedup skew bench
-    * (graft.DedupSkewBench) can count the candidate stage in
-    * isolation. Banding has no DF cap: a genuine M-clone group yields
+    * factored out of [[minhashLsh]] so the candidate stage can be
+    * counted in isolation. Banding has no DF cap: a genuine M-clone group yields
     * all C(M,2) of its pairs as candidates, which is OUTPUT-optimal —
     * those pairs ARE the answer set — and each costs one merge-count
     * to verify. */
@@ -1430,7 +1429,8 @@ object Dedup {
     // doubles, same round-6 result (≈ 1.0; the >= 0.9 filter is kept
     // for shape-faithfulness, it can never fire here).
     //
-    // r22 (the r21-verdict mega-dup ask, measured in DedupSkewBench):
+    // r22 (the r21-verdict mega-dup ask, measured on BenchData's
+    // dedupskew0.1 tier):
     // the first cut generated each group's C(M,2) pairs IN-ROW —
     // collect_list per rep, then explode(flatten(transform(...))) —
     // which materializes the ENTIRE pair array of a group in one
@@ -1557,9 +1557,8 @@ object Dedup {
     * the fallback on the 40-node chain the plain loop cannot close. */
   /** Diagnostics from one [[componentLabels]] run: rounds the
     * min-label loop spent, whether it converged, and (when it did
-    * not) the star alternation's rounds — what ClustersChainBench
-    * records so the fallback path is a measured artifact, not only a
-    * 40-node spec fixture. */
+    * not) the star alternation's rounds; DedupSpec pins them on the
+    * 40-node chain fixture. */
   private[graft] final case class ComponentDiag(
       propagateRounds: Int, propagateConverged: Boolean, starRounds: Int)
 
@@ -1607,8 +1606,8 @@ object Dedup {
     * cap before the fallback: the falling changed-label count is
     * linearly projected at each convergence check, and two
     * consecutive projections past the cap exit unconverged early
-    * (~8 rounds on a pure path vs 32 — measured in
-    * ClustersChainBench's artifact). */
+    * (~8 rounds on a pure path vs 32 — measured on BenchData's
+    * 64-doc clusterschain0.1 tier, bench_reports/clusters_chain_r16.json). */
   private[graft] def propagateLabels(spark: SparkSession, docs: DataFrame,
       pairs: DataFrame): (DataFrame, Int, Boolean) = {
     val und = pairs.union(

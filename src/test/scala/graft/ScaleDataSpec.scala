@@ -1,10 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sf10 replica-scramble invariants (BenchData.writeScaled with
-  * scramble = true). The whole point of the scramble is the GROUP-SIZE
+/** BenchData's planted tiers and the sf10 replica-scramble invariants.
+  *
+  * The planted dedupskew and clusterschain tiers are measured by plain
+  * Bench runs, so their planting algebra is pinned here at spec speed:
+  * a drifted plant would otherwise only show as a changed wall time.
+  *
+  * The scramble (BenchData.writeScaled with scramble = true): The whole point of the scramble is the GROUP-SIZE
   * contract: an sf1 near-dup clone family must stay a family within
   * each sf10 replica, while the replicas of one doc must NOT be
   * near-dups of each other under ANY of the engine's similarity bases
@@ -14,6 +21,79 @@ import org.scalatest.funsuite.AnyFunSuite
   * group size to ~100 — these tests pin the properties that prevented
   * failure mode from coming back. */
 class ScaleDataSpec extends AnyFunSuite with SparkSuite {
+
+  private lazy val chainDir = {
+    val out = Files.createTempDirectory("graft_chain_tier").toString
+    BenchData.writeClustersChain(spark, SF, out)
+    out
+  }
+
+  private lazy val dedupSkewDir = {
+    val out = Files.createTempDirectory("graft_dedupskew_tier").toString
+    BenchData.writeDedupSkew(spark, SF, out)
+    out
+  }
+
+  test("planted chain: lag-1 shingle jaccard verifies, lag-2 does not, zero corpus collision") {
+    val sh = spark.read.parquet(s"$chainDir/documents.parquet")
+      .withColumn("sh", expr(
+        s"shingles3_h64(${graft.operators.Dedup.toksSpark})"))
+      .select(col("doc_id"), col("sh"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val base = BenchData.chainBaseId
+    val last = BenchData.ChainLen - 1L
+    def jac(a: Long, b: Long): Double = {
+      val (x, y) = (sh(base + a), sh(base + b))
+      x.intersect(y).size.toDouble / x.union(y).size
+    }
+    // the W=38/S=3 sliding window: 33/39 ≈ 0.846 at lag 1 (>= the 0.8
+    // verify threshold), 30/42 ≈ 0.714 at lag 2 (< threshold) — the
+    // duplicate graph must be exactly a path
+    (0L until last).foreach { i =>
+      assert(jac(i, i + 1) >= 0.8 && jac(i, i + 1) < 0.9,
+        s"lag-1 jaccard off at $i: ${jac(i, i + 1)}")
+    }
+    (0L until last - 1).foreach { i =>
+      assert(jac(i, i + 2) < 0.8, s"lag-2 must not verify at $i: ${jac(i, i + 2)}")
+    }
+    // fresh-token isolation: no chain shingle may appear in any base doc
+    val chainShingles = (0L to last).flatMap(i => sh(base + i)).toSet
+    val collisions = sh.collect {
+      case (id, s) if id < base => s.intersect(chainShingles).size
+    }.sum
+    assert(collisions === 0, "chain tokens must not collide with the corpus")
+  }
+
+  test("dedupskew tier: hot template x512, odd-id mega family x1e4, complete layouts") {
+    val docs = Tables.load(spark, SF, "documents")
+    val template = docs.filter(size(split(col("text"), "\\s+")) >= 12)
+      .orderBy("doc_id").limit(1).select("text").head().getString(0)
+    val planted = spark.read.parquet(s"$dedupSkewDir/documents.parquet")
+    assert(planted.count() === docs.count() + BenchData.HotTemplateMult)
+    // the template exactly ×512, plus the original
+    val copies = planted
+      .filter(col("text") === template || col("text").startsWith(s"$template rep"))
+      .select("text").collect().map(_.getString(0))
+    assert(copies.count(_ == template) === 1)
+    assert(copies.filter(_ != template).toSet ===
+      (1 to BenchData.HotTemplateMult).map(i => s"$template rep$i").toSet)
+    assert(copies.length === 1 + BenchData.HotTemplateMult)
+
+    // the mega family: exactly ×10⁴ added rows, all odd ids, all the
+    // min-vec_id vector
+    val emb = Tables.load(spark, SF, "embeddings")
+    val family = spark.read.parquet(s"$dedupSkewDir/embeddings.parquet")
+      .join(emb.select("vec_id"), Seq("vec_id"), "left_anti")
+    assert(family.count() === BenchData.MegaDupMult)
+    assert(family.select("vec_id").distinct().count() === BenchData.MegaDupMult)
+    assert(family.filter(col("vec_id") % 2 =!= 1).count() === 0)
+    val vector = emb.orderBy("vec_id").limit(1).select("embedding").head().getSeq[Float](0)
+    assert(family.select("embedding").distinct().collect()
+      .map(_.getSeq[Float](0)).toSeq === Seq(vector))
+
+    for (dir <- Seq(dedupSkewDir, chainDir); t <- Tables.names)
+      assert(Files.isDirectory(Paths.get(s"$dir/$t.parquet")), s"$dir lacks $t")
+  }
 
   private val baseText =
     "batch part spark line column order small sort column sort fast " +

@@ -29,7 +29,7 @@ class SkewJoinSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("salting the faithful fanout join preserves the multiset (hot cell)") {
-    // the SkewBench shape in miniature: row-level sales against a
+    // the skew0.1 tier's hot fanout cell in miniature: row-level sales against a
     // per-(key, date) inventory, one hot (PROD_KEY, STORE_KEY) cell
     // carrying most rows. The date-less join fans the hot cell out
     // quadratically; salting must spread it WITHOUT changing a single

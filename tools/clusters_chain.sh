@@ -1,36 +1,30 @@
 #!/bin/bash
 # Chain-graph clusters benchmark + oracle, one command:
-#   tools/clusters_chain.sh [baseSfDir] [artifactOut]
+#   tools/clusters_chain.sh [artifactOut]
 #
-# 1. graft.ClustersChainBench plants a sequential-overlap clone chain
-#    on the base corpus and measures componentLabels end-to-end
-#    through the unconverged-cap -> large-star/small-star path;
-# 2. the planted dir gets the base dir's other tables symlinked in and
-#    runs through the NORMAL oracle gate
-#    (SPARK_GRAFT_VERIFY_QUERIES=dedup_clusters tools/verify.sh), so
-#    the fallback's labels are adjudicated by the exact recursive-CTE
-#    DuckDB oracle, not self-checked;
-# 3. the bench line and the oracle verdict merge into one artifact.
+# Runs on BenchData's clusterschain0.1 tier (the sf0.1 documents plus a
+# 64-doc sequential-overlap chain that min-label propagation cannot
+# close within its round cap):
+# 1. tools/bench.sh times dedup_clusters on it (noop sink, min over
+#    interleaved passes, per-query task metrics);
+# 2. the same dir runs through the NORMAL oracle gate
+#    (SPARK_GRAFT_VERIFY_QUERIES=dedup_clusters tools/verify.sh), so the
+#    large-star/small-star fallback's labels are adjudicated by the
+#    exact recursive-CTE DuckDB oracle, not self-checked;
+# 3. the bench report and the oracle verdict merge into one artifact.
 set -e
-BASE=${1:-/root/testdata/sf0.1}
-OUT=${2:-bench_reports/clusters_chain.json}
-CHAIN_DIR=${SPARK_GRAFT_CHAIN_DIR:-target/benchdata/clusterschain0.1}
-export SPARK_GRAFT_CHAIN_DIR="$CHAIN_DIR"
+OUT=${1:-bench_reports/clusters_chain.json}
+CHAIN_DIR=target/benchdata/clusterschain0.1
 cd /root/repo
+[ -d "$CHAIN_DIR/documents.parquet" ] || {
+  echo "[clusters-chain] no $CHAIN_DIR — run BenchData first:" >&2
+  echo "  tools/verify.sh /root/testdata/sf0.1 target/benchdata graft.BenchData" >&2
+  exit 1
+}
 
-BENCH_LINE=$(tools/verify.sh "$BASE" /tmp/chain_bench_ignored graft.ClustersChainBench \
-  | grep '^{"metric":"clusters_chain"' | tail -1)
-[ -n "$BENCH_LINE" ] || { echo "bench emitted no artifact line" >&2; exit 1; }
-
-# complete the planted dir's table layout for the oracle harness.
-# ln -sfn, unconditionally: [ -e ] is false for a DANGLING symlink (a
-# deleted/moved BASE would make plain ln fail under set -e), and a
-# stale-but-resolving link from a previous run with a different BASE
-# would silently pair the planted documents with another corpus's
-# tables for the oracle run.
-for t in region nation customer supplier part orders lineitem events embeddings; do
-  ln -sfn "$(readlink -f "$BASE")/$t.parquet" "$CHAIN_DIR/$t.parquet"
-done
+REPORT=/tmp/chain_bench_report.json
+rm -f "$REPORT"
+tools/bench.sh "$CHAIN_DIR" "$REPORT" dedup_clusters
 
 VERIFY_OUT=/tmp/chain_verify_out
 ORACLE_LOG=/tmp/chain_oracle.log
@@ -39,13 +33,13 @@ SPARK_GRAFT_VERIFY_QUERIES=dedup_clusters tools/verify.sh "$CHAIN_DIR" "$VERIFY_
 grep -E "^OK   dedup_clusters|^FAIL dedup_clusters|^ERR" "$ORACLE_LOG" || true
 if grep -q "^OK   dedup_clusters" "$ORACLE_LOG"; then ORACLE=true; else ORACLE=false; fi
 
-python3 - "$BENCH_LINE" "$ORACLE" "$OUT" <<'EOF'
+python3 - "$REPORT" "$ORACLE" "$OUT" <<'PY'
 import json, sys
-art = json.loads(sys.argv[1])
+art = json.load(open(sys.argv[1]))
 art["oracle_labels_match"] = sys.argv[2] == "true"
 art["oracle"] = "DuckDB recursive-CTE transitive closure (clustersSql) on the planted dir, full rows+schema+hash gate"
 with open(sys.argv[3], "w") as f:
     json.dump(art, f, indent=1)
     f.write("\n")
 print(f"[clusters-chain] artifact written to {sys.argv[3]}: oracle_labels_match={art['oracle_labels_match']}")
-EOF
+PY

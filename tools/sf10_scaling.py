@@ -32,11 +32,15 @@ per-query ratio deltas plus a `regressions` list of queries whose
 ratio worsened by more than REG_DELTA_X relatively AND REG_DELTA_ABS
 absolutely (both, so sub-second jitter on tiny ratios doesn't flag).
 
-spill_audit.json: per-query graft.SpillAudit measurements + inline
-notes for the sub-flag superlinear band (ratios between ~5x and the
-10x flag, where the adjudications.json path is rejected as stale).
-Embedded verbatim as `spill_audit`, with every audited name checked
-against the artifact's query set.
+spill_audit.json: a graft.Bench report (tools/bench.sh) over the sf10
+dir. Its per-query task block `task_metrics` (spill, shuffle bytes,
+peak task memory and task count from each query's first timed pass)
+is the evidence for the sub-flag superlinear band (ratios between ~5x
+and the 10x flag, where the adjudications.json path is rejected as
+stale). Embedded verbatim as `spill_audit`, with every audited name
+checked against the artifact's query set. A file that already is such
+a block (`{"queries": {...}}`, optionally with inline notes) is
+embedded as is.
 
 regression_verdicts.json: {"query_name": "verdict", ...} — the
 adjudication channel for the ratio_delta_vs_prev block (r18 verdict
@@ -205,6 +209,7 @@ def main() -> None:
                   f"{sorted(regressions)} (verdicts recorded)")
     if audit_path:
         audit = json.load(open(audit_path))
+        audit = audit.get("task_metrics", audit)
         unknown = sorted(set(audit.get("queries", {})) - set(rows))
         if unknown:
             sys.exit(f"spill_audit names not in the artifact: {unknown}")
