@@ -1,9 +1,11 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -13,10 +15,12 @@ object Bench {
   private[graft] final case class TaskTotals(tasks: Long = 0, spillMemBytes: Long = 0,
       spillDiskBytes: Long = 0, shuffleReadBytes: Long = 0,
       shuffleWriteBytes: Long = 0, peakTaskMemBytes: Long = 0) {
-    def json: String =
+    /** With the entry's Janino compiles on the first and last timed pass. */
+    def json(compilesFirst: Long, compilesLast: Long): String =
       s"""{"tasks":$tasks,"spill_mem_bytes":$spillMemBytes,""" +
         s""""spill_disk_bytes":$spillDiskBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
-        s""""shuffle_write_bytes":$shuffleWriteBytes,"peak_task_mem_bytes":$peakTaskMemBytes}"""
+        s""""shuffle_write_bytes":$shuffleWriteBytes,"peak_task_mem_bytes":$peakTaskMemBytes,""" +
+        s""""codegen_compiles":{"first":$compilesFirst,"last":$compilesLast}}"""
   }
 
   /** Per-entry task metrics. Every job started inside `attributed(name)`
@@ -235,6 +239,14 @@ object Bench {
     // Task metrics (spill, shuffle bytes, peak task memory, task count)
     // are attributed per query over the FIRST timed pass only.
     val taskMetrics = new TaskMetricsByQuery(spark)
+    // Janino compiles per query and pass (CodegenMetrics counts every
+    // compile in this JVM; queries run one at a time, so a delta around
+    // one query is that query's), and HotSpot JIT ms per pass. Executor
+    // JVMs of a local-cluster master compile out of this count.
+    val passCompiles = mutable.ArrayBuffer.empty[Map[String, Long]]
+    val passJitMs = mutable.ArrayBuffer.empty[Long]
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def jitMs(): Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
 
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -266,20 +278,26 @@ object Bench {
       val startProbe = probeCount - 1 // the probe taken just before this pass
       val times = scala.collection.mutable.Map.empty[String, Double]
       val brackets = scala.collection.mutable.Map.empty[String, (Int, Int)]
+      val compiled = mutable.Map.empty[String, Long]
+      val jit0 = jitMs()
       var sinceProbe = 0
       selected.foreach { case (name, fn) =>
         if (sinceProbe >= ProbeEvery) { probeSentinels(); sinceProbe = 0 }
         val before = probeCount - 1
+        val c0 = compiles()
         times(name) =
           if (first) taskMetrics.attributed(name)(timeOne(name, fn)) else timeOne(name, fn)
+        compiled(name) = compiles() - c0
         // the probe at index `probeCount` is the next one taken —
         // either the next intra-pass probe or this pass's trailing
         // boundary probe below
         brackets(name) = (before, probeCount)
         sinceProbe += 1
       }
+      passJitMs += jitMs() - jit0
       probeSentinels() // trailing boundary probe
       passTimes += times.toMap
+      passCompiles += compiled.toMap
       queryBrackets += brackets.toMap
       passProbeRanges += ((startProbe, probeCount - 1))
     }
@@ -499,9 +517,10 @@ object Bench {
     val excludedJson = excluded.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val tasksDrained = taskMetrics.finish()
     val taskTotals = taskMetrics.totals
-    val taskJson = s"""{"pass":0,"drained":$tasksDrained,"queries":""" +
-      selected.keys.map(n => s"\"$n\":" + taskTotals.getOrElse(n, TaskTotals()).json)
-        .mkString("{", ",", "}") + "}"
+    val taskJson = s"""{"pass":0,"last_pass":${passTimes.size - 1},"drained":$tasksDrained,""" +
+      s""""jit_ms":{"first":${passJitMs.head},"last":${passJitMs.last}},"queries":""" +
+      selected.keys.map(n => s"\"$n\":" + taskTotals.getOrElse(n, TaskTotals())
+        .json(passCompiles.head(n), passCompiles.last(n))).mkString("{", ",", "}") + "}"
     val report =
       s"""{"metric":"total","value":${jsonNum(total)},"raw_value":${jsonNum(rawTotal)},""" +
         s""""unit":"sec","sf":"$sfDir","cpus":"$cpus","master":"$master",""" +

@@ -8,14 +8,16 @@ import graft.functions.GraftFunctions
 /** The one way every graft `main` (and the test suites) builds its
   * SparkSession, so session settings cannot drift between tools.
   *
-  * Always: UTC session time zone; after `getOrCreate()` the native
-  * functions are registered (idempotently) and the log level is WARN.
+  * Always: UTC session time zone, the [[CodegenDefaults]] for every key
+  * the caller's conf does not already carry, and after `getOrCreate()`
+  * [[prepare]] (native functions, idempotently) and log level WARN.
   *
   * When spark-submit supplied the master (`spark.master` is already in
-  * the `SparkConf`, e.g. the Airflow DAG's `RetailEtlApp` run), nothing
-  * else is added: the cluster's own settings win. Otherwise the master
-  * is `SPARK_GRAFT_MASTER`, falling back to `local[`[[cpus]]`]`, with
-  * shuffle partitions = [[cpus]] and the UI off.
+  * the `SparkConf`, e.g. the Airflow DAG's `RetailEtlApp` run), only
+  * those two absent-only codegen defaults are added: the cluster's own
+  * settings win. Otherwise the master is `SPARK_GRAFT_MASTER`, falling
+  * back to `local[`[[cpus]]`]`, with shuffle partitions = [[cpus]] and
+  * the UI off.
   *
   * A `local-cluster[n,cores,memMB]` master spawns real executor JVMs
   * (Spark's own multi-JVM test mode) — the only local way to push a
@@ -44,11 +46,41 @@ object GraftSession {
       "sun.security.action", "sun.util.calendar")
       .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
 
+  /** Codegen settings a warm catalog needs, applied only where the
+    * session's conf lacks the key (a caller's `--conf`/`-D` wins).
+    *  - `spark.sql.codegen.cache.maxEntries`: Spark's default cache of
+    *    100 generated classes is smaller than one catalog pass, so every
+    *    warm pass recompiled (and re-JITted) most of its code. Static:
+    *    it sizes the JVM-wide cache at the first code generation, so it
+    *    must be in place before the JVM's first query.
+    *  - `spark.sql.codegen.useIdInClassName`: whole-stage codegen ids
+    *    can change order between runs of the same query, and with the
+    *    id in the class name the source text, the cache key, changes
+    *    too.
+    */
+  val CodegenDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Readies any session for the catalog: sets each [[CodegenDefaults]]
+    * key the session's conf does not contain, then registers the native
+    * functions. Idempotent; runs in [[apply]] and at the
+    * [[SparkEntry.queries]] boundary. */
+  def prepare(spark: SparkSession): Unit = {
+    // the session's SQLConf, not `spark.conf`: the static cache size
+    // must reach a plain session whose JVM has not generated code yet
+    val conf = spark.sessionState.conf
+    CodegenDefaults.foreach { case (k, v) => if (!conf.contains(k)) conf.setConfString(k, v) }
+    GraftFunctions.register(spark)
+  }
+
   def apply(app: String, extraConf: (String, String)*): SparkSession = {
+    val submitted = new SparkConf()
     val b = SparkSession.builder()
       .appName(app)
       .config("spark.sql.session.timeZone", "UTC")
-    if (!new SparkConf().contains("spark.master")) {
+    CodegenDefaults.foreach { case (k, v) => if (!submitted.contains(k)) b.config(k, v) }
+    if (!submitted.contains("spark.master")) {
       val m = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
       b.master(m)
         .config("spark.sql.shuffle.partitions", cpus)
@@ -62,7 +94,7 @@ object GraftSession {
     }
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
-    GraftFunctions.register(spark)
+    prepare(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

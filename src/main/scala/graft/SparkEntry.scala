@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.functions.GraftFunctions
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -23,13 +22,16 @@ import graft.operators._
   * caller (notebook, long-lived service) must do the same — a query
   * cannot unpersist its own result before the caller materializes it.
   *
-  * Function convention: every `queries` entry first ensures the graft
-  * native functions on the session it is handed
-  * ([[graft.functions.GraftFunctions.register]], which never replaces
-  * an existing name), so an external driver's plain session resolves
-  * every entry. Operator methods called directly, not through this
-  * map, need a session from [[GraftSession]] or one started with
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Function convention: every `queries` entry first readies the
+  * session it is handed with [[GraftSession.prepare]]: the graft native
+  * functions (never replacing an existing name) and the two codegen
+  * defaults of [[GraftSession.CodegenDefaults]] (never replacing a key
+  * the session already sets), so an external driver's plain session
+  * resolves every entry and a warm pass reuses its generated classes.
+  * Operator methods called directly, not through this map, need a
+  * session from [[GraftSession]], or one started with
+  * `spark.sql.extensions=graft.functions.GraftExtensions` plus the two
+  * codegen `--conf`s.
   */
 object SparkEntry {
 
@@ -45,7 +47,7 @@ object SparkEntry {
       Curation.queries ++ Ranking.queries ++ Layout.queries)
       .map { case (name, fn) =>
         name -> { (spark: SparkSession, dir: String) =>
-          GraftFunctions.register(spark)
+          GraftSession.prepare(spark)
           fn(spark, dir)
         }
       }

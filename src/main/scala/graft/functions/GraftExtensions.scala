@@ -15,7 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * available in every session's SQL and `expr()` without per-session
   * registration. The in-process path is [[graft.GraftSession]], which
   * calls [[GraftFunctions.register]]; operators register nothing
-  * themselves.
+  * themselves. The extensions add functions only: a session built this
+  * way should also get the two codegen confs of
+  * [[graft.GraftSession.CodegenDefaults]] as `--conf`s.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

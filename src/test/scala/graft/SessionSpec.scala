@@ -65,5 +65,8 @@ class SessionSpec extends AnyFunSuite with SparkSuite {
       Seq("src/main/scala/graft/GraftSession.scala"))
     // split so a grep for register calls does not count this scan
     assert(citing("src/main/scala/graft/operators", "GraftFunctions" + ".register") === Nil)
+    // the codegen defaults are set in one place, keyed by name
+    Seq("spark.sql.codegen.cache.maxEntries", "spark.sql.codegen.useIdInClassName")
+      .foreach(k => assert(citing("src/main", k) === Seq("src/main/scala/graft/GraftSession.scala")))
   }
 }
