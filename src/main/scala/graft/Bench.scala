@@ -6,28 +6,33 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
 
-  /** Task totals of one catalog entry's jobs. */
+  /** Work totals of one catalog entry's jobs: job, stage and task
+    * counts plus the tasks' spill, shuffle and memory metrics. A stage
+    * is a shuffle stage when it wrote shuffle records. */
   private[graft] final case class TaskTotals(tasks: Long = 0, spillMemBytes: Long = 0,
       spillDiskBytes: Long = 0, shuffleReadBytes: Long = 0,
-      shuffleWriteBytes: Long = 0, peakTaskMemBytes: Long = 0) {
+      shuffleWriteBytes: Long = 0, peakTaskMemBytes: Long = 0,
+      jobs: Long = 0, stages: Long = 0, shuffleStages: Long = 0) {
     /** With the entry's Janino compiles on the first and last timed pass. */
     def json(compilesFirst: Long, compilesLast: Long): String =
-      s"""{"tasks":$tasks,"spill_mem_bytes":$spillMemBytes,""" +
+      s"""{"jobs":$jobs,"stages":$stages,"shuffle_stages":$shuffleStages,""" +
+        s""""tasks":$tasks,"spill_mem_bytes":$spillMemBytes,""" +
         s""""spill_disk_bytes":$spillDiskBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""shuffle_write_bytes":$shuffleWriteBytes,"peak_task_mem_bytes":$peakTaskMemBytes,""" +
         s""""codegen_compiles":{"first":$compilesFirst,"last":$compilesLast}}"""
   }
 
-  /** Per-entry task metrics. Every job started inside `attributed(name)`
+  /** Per-entry work counters. Every job started inside `attributed(name)`
     * carries `name` as a local property (Spark hands it on to the
     * broadcast, subquery and adaptive-stage threads it spawns for that
-    * query), and the listener sums the tasks of that job's stages under
-    * `name`; jobs without the property (warmup, sentinel probes,
+    * query), and the listener counts that job, its completed stages and
+    * their tasks under `name`; jobs without the property (warmup,
     * concurrent callers) are not counted. Listener events arrive
     * asynchronously: read [[totals]] after [[finish]], which drains the
     * bus once with a marker job queued behind every event posted so
@@ -46,22 +51,35 @@ object Bench {
       try body finally sc.setLocalProperty(QueryProp, null)
     }
 
+    private def add(q: String)(f: TaskTotals => TaskTotals): Unit =
+      byQuery(q) = f(byQuery.getOrElse(q, TaskTotals()))
+
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       Option(e.properties).flatMap(p => Option(p.getProperty(QueryProp))).foreach { q =>
         if (q == DrainTag) drained.countDown()
-        else e.stageIds.foreach(stageQuery(_) = q)
+        else {
+          e.stageIds.foreach(stageQuery(_) = q)
+          add(q)(t => t.copy(jobs = t.jobs + 1))
+        }
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageQuery.get(e.stageInfo.stageId).foreach { q =>
+        val shuffle = e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0
+        add(q)(t => t.copy(stages = t.stages + 1,
+          shuffleStages = t.shuffleStages + (if (shuffle) 1 else 0)))
       }
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      for (q <- stageQuery.get(e.stageId); m <- Option(e.taskMetrics)) {
-        val t = byQuery.getOrElse(q, TaskTotals())
-        byQuery(q) = TaskTotals(t.tasks + 1,
-          t.spillMemBytes + m.memoryBytesSpilled,
-          t.spillDiskBytes + m.diskBytesSpilled,
-          t.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
-          t.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
-          math.max(t.peakTaskMemBytes, m.peakExecutionMemory))
+      for (q <- stageQuery.get(e.stageId); m <- Option(e.taskMetrics)) add(q) { t =>
+        t.copy(tasks = t.tasks + 1,
+          spillMemBytes = t.spillMemBytes + m.memoryBytesSpilled,
+          spillDiskBytes = t.spillDiskBytes + m.diskBytesSpilled,
+          shuffleReadBytes = t.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = t.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          peakTaskMemBytes = math.max(t.peakTaskMemBytes, m.peakExecutionMemory))
       }
     }
 
@@ -77,43 +95,6 @@ object Bench {
     def totals: Map[String, TaskTotals] = synchronized(byQuery.toMap)
   }
 
-  /** Fixed trivial probes re-timed at every pass boundary. Their code paths
-    * never change round-to-round, so they isolate AMBIENT host load from
-    * code regressions two ways:
-    *   - intra-run spread (max/min across this run's samples) flags a
-    *     contention BURST during the run;
-    *   - cross-round comparison of their absolute times (this artifact vs
-    *     the previous round's) flags a uniformly loaded host, which spread
-    *     alone cannot see.
-    * Seven of the first ten driver benches carried unexplained uniform
-    * inflation on untouched queries that cost a judge cycle each to
-    * adjudicate; the sentinels make the bench self-labeling, and the
-    * quiet-pass retry below makes it self-HEALING: a burst now costs at
-    * most `MaxExtraPasses` extra passes instead of a round's datapoint. */
-  private val SentinelNames = Seq("dedup_exact", "mm_binary_meta")
-
-  /** Spread above this on a sentinel marks the run contended. Sentinels are
-    * sub-second scans, so steady-state jitter (GC phase, page cache) stays
-    * well inside 40%; a burst that inflates real queries shows up far above
-    * it. */
-  private val BurstSpreadPct = 40.0
-
-  /** Hard backstop on self-heal passes (env-overridable). Since
-    * schema 3 the BINDING self-heal limit is the wall-clock cap
-    * (default: the initial passes' own elapsed, so healing can at
-    * most ~double a run); this count only guards against a
-    * pathologically fast catalog cycling dozens of passes inside that
-    * window. */
-  private val MaxExtraPasses = 12
-
-  /** Intra-pass sentinel cadence: a probe pair runs every this many
-    * catalog queries, so every query's timing is bracketed by probes
-    * a bounded distance away — the quiet_subset salvage (per-query
-    * minima over calm-bracketed samples) rests on this. ~6 interior
-    * probe points on the full catalog; the sentinels are sub-second,
-    * so the overhead is a few seconds per ~100 s pass. */
-  private val ProbeEvery = 16
-
   /** The one catalog entry excluded from the TIMED surface by default:
     * the exact all-pairs verification tool is Θ(answer-set) by design
     * (~40 s / 15% of the sf1 catalog) and its deterministic pair-stratum
@@ -124,7 +105,7 @@ object Bench {
     * is logged in the artifact, and SPARK_GRAFT_BENCH_EXACT_PAIRS=1
     * restores the unbounded entry. Exclusion only applies when the
     * sampled twin is actually in the catalog. */
-  private val UnboundedPairTool = "dedup_embedding_cosine"
+  private[graft] val UnboundedPairTool = "dedup_embedding_cosine"
   private val SampledPairTwin = "dedup_embedding_cosine_sampled"
 
   private def jsonNum(v: Double): String =
@@ -135,16 +116,10 @@ object Bench {
     val spark = GraftSession("graft-bench")
     val cpus = GraftSession.cpus
     // timings under a non-local[cpus] master (local-cluster = multi-JVM
-    // executors) are NOT comparable to local[N] epochs. The cpus pin
-    // alone cannot catch this (a local-cluster run can carry the same
-    // cpus string as the epoch), so the budget gate below refuses
-    // non-local[cpus] masters explicitly and the artifact records the
+    // executors) are not comparable to local[N] runs, and the cpus
+    // string alone cannot tell them apart: the artifact records the
     // master for downstream comparability checks.
     val master = spark.sparkContext.master
-    // Warmup at the smallest SF: JIT-compiles every query's code path
-    // (parquet reader, codegen, interpreted-expression fallbacks) so the
-    // timed loop measures steady-state throughput instead of charging
-    // all JVM warmup to whichever query happens to run first.
     // Optional comma-separated subset for local iteration on specific
     // queries; the driver's full run leaves this unset.
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
@@ -165,12 +140,12 @@ object Bench {
       s"[bench] $n excluded from the timed surface (sampled twin " +
         s"$SampledPairTwin measures the same path; SPARK_GRAFT_BENCH_EXACT_PAIRS=1 restores it)"))
     val selected = subset.filter { case (n, _) => !excluded(n) }
-    // Sentinels run regardless of any subset filter (they are the run's
-    // noise floor, not part of the measured surface), but only if present
-    // in the catalog at all.
-    val sentinels = SentinelNames.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
+    // Warmup at the smallest SF: JIT-compiles every query's code path
+    // (parquet reader, codegen, interpreted-expression fallbacks) so the
+    // timed loop measures steady-state throughput instead of charging
+    // all JVM warmup to whichever query happens to run first.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    (selected ++ sentinels).foreach { case (_, fn) =>
+    selected.foreach { case (_, fn) =>
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
       spark.catalog.clearCache()
@@ -183,14 +158,12 @@ object Bench {
     // PRIOR run left in /tmp: incomparable across rounds and hosts.
     // Building (or refreshing) the index here, OUTSIDE the timed
     // window, makes every timed rep of both ivfpq entries measure the
-    // serving path — the 100 TB-relevant steady state; the
-    // train-per-call cost is recorded separately in BASELINE.md's
-    // build/serve split.
+    // serving path; the train-per-call cost is recorded separately in
+    // BASELINE.md's build/serve split.
     // Prebuild elapsed goes into the report: when no fresh index was at
-    // rest this is the full train+build cost at this SF (the other half
-    // of the build/serve split BASELINE.md tracks); when one was fresh
-    // it is just the marker check (~ms), so the number also records
-    // WHICH case this run hit.
+    // rest this is the full train+build cost at this SF; when one was
+    // fresh it is just the marker check (~ms), so the number also
+    // records WHICH case this run hit.
     var ivfpqPrebuildS = -1.0
     if (selected.contains("sim_ann_ivfpq") || selected.contains("sim_ann_ivfpq_served")) {
       try {
@@ -204,40 +177,23 @@ object Bench {
       spark.catalog.clearCache()
     }
     // Timed reps, keep the min: single-shot numbers swing several
-    // seconds with GC/JIT phase noise even after warmup, and the round-1
-    // driver bench recorded a 97 s outlier on a query that runs in 3 s
-    // here. Reps are INTERLEAVED as full catalog passes (pass 1 runs
-    // every query once, then pass 2, ...) rather than back-to-back per
-    // query: back-to-back reps all land inside the same host-contention
-    // window, which is exactly how six of the first eight round benches
-    // picked up unexplained multi-x spikes on untouched queries —
-    // separating a query's reps by a whole catalog pass (minutes) makes
-    // the min robust to any contention burst shorter than a pass.
+    // seconds with GC/JIT phase noise even after warmup. Reps are
+    // INTERLEAVED as full catalog passes (pass 1 runs every query once,
+    // then pass 2, ...) rather than back-to-back per query, so a
+    // query's reps sit a whole catalog pass apart and the min is robust
+    // to any contention burst shorter than a pass.
     // A failed rep must NOT contribute its time-to-failure — a broken
     // query would otherwise read as a performance win — so failures
     // record -1. malformed/zero values must not crash the bench or make
-    // every query read as the -1 failure sentinel
+    // every query read as the -1 failure value
     val nReps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
-    val maxExtra = sys.env.get("SPARK_GRAFT_BENCH_MAX_EXTRA")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(MaxExtraPasses)
 
-    // Per-PASS bookkeeping (not flat per-query lists): pass p's map
-    // holds every selected query's seconds with failures as -1.
-    // Sentinel samples are GLOBAL (schema 3): probes run at pass
-    // boundaries AND every ProbeEvery queries inside a pass, so each
-    // query records its own (before, after) bracketing probe indices
-    // and each pass records its probe-index range.
-    val passTimes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    val queryBrackets =
-      scala.collection.mutable.ArrayBuffer.empty[Map[String, (Int, Int)]]
-    val passProbeRanges = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    val sentinelTimes = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
-    var probeCount = 0
-
-    // Task metrics (spill, shuffle bytes, peak task memory, task count)
-    // are attributed per query over the FIRST timed pass only.
+    // Pass p's map holds every selected query's seconds, failures as -1.
+    val passTimes = mutable.ArrayBuffer.empty[Map[String, Double]]
+    // Work counters and task metrics (jobs, stages, spill, shuffle
+    // bytes, peak task memory, task count) are attributed per query over
+    // the FIRST timed pass only.
     val taskMetrics = new TaskMetricsByQuery(spark)
     // Janino compiles per query and pass (CodegenMetrics counts every
     // compile in this JVM; queries run one at a time, so a delta around
@@ -263,243 +219,30 @@ object Bench {
       if (ok) elapsed else -1.0
     }
 
-    // A failed sentinel probe records -1 (treated as noisy by
-    // BenchNoise) rather than silently shortening the sample vector —
-    // index alignment across sentinels is what the bracketing rests on.
-    def probeSentinels(): Unit = {
-      sentinels.foreach { case (n, f) =>
-        sentinelTimes(n) = sentinelTimes(n) :+ timeOne(n, f)
-      }
-      probeCount += 1
-    }
-
-    def runPass(): Unit = {
+    (1 to nReps).foreach { _ =>
       val first = passTimes.isEmpty
-      val startProbe = probeCount - 1 // the probe taken just before this pass
-      val times = scala.collection.mutable.Map.empty[String, Double]
-      val brackets = scala.collection.mutable.Map.empty[String, (Int, Int)]
       val compiled = mutable.Map.empty[String, Long]
       val jit0 = jitMs()
-      var sinceProbe = 0
-      selected.foreach { case (name, fn) =>
-        if (sinceProbe >= ProbeEvery) { probeSentinels(); sinceProbe = 0 }
-        val before = probeCount - 1
+      passTimes += selected.map { case (name, fn) =>
         val c0 = compiles()
-        times(name) =
+        val sec =
           if (first) taskMetrics.attributed(name)(timeOne(name, fn)) else timeOne(name, fn)
         compiled(name) = compiles() - c0
-        // the probe at index `probeCount` is the next one taken —
-        // either the next intra-pass probe or this pass's trailing
-        // boundary probe below
-        brackets(name) = (before, probeCount)
-        sinceProbe += 1
+        name -> sec
       }
       passJitMs += jitMs() - jit0
-      probeSentinels() // trailing boundary probe
-      passTimes += times.toMap
       passCompiles += compiled.toMap
-      queryBrackets += brackets.toMap
-      passProbeRanges += ((startProbe, probeCount - 1))
     }
 
-    // Untimed sentinel warmup AT THE TARGET SF: the generic warmup above
-    // ran at warmDir, so the first probe would otherwise charge the target
-    // SF's cold page cache to the noise floor and false-flag a burst.
-    sentinels.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-    }
-    // One sentinel probe before the first pass and one after every pass:
-    // nReps passes -> nReps+1 samples per sentinel, bracketing the whole
-    // timed window. A burst spanning any probe lands on a sample; one
-    // confined strictly inside a single pass can escape both probes
-    // (see BenchNoise scaladoc) — the interleaved min covers that case.
-    probeSentinels()
-    val initialStart = System.nanoTime()
-    (1 to nReps).foreach(_ => runPass())
-    val initialElapsedS = (System.nanoTime() - initialStart) / 1e9
-
-    // Self-heal: while fewer than TWO passes are sentinel-quiet, keep
-    // adding passes up to a WALL-CLOCK cap (r15 ask #2a: a fixed
-    // 2-extra-pass budget exhausted itself against the r15 driver
-    // burst with nothing to show). Default cap = the initial passes'
-    // own elapsed (healing at most ~doubles the run; floor 120 s so
-    // tiny subset runs still get a real retry window); the pass-count
-    // backstop only guards against a pathologically fast catalog.
-    // One quiet pass is still thin evidence — the r14 driver artifact
-    // shipped on a single quiet pass at 63% spread and cost a judge
-    // cycle; two quiet passes make the min a corroborated reading.
-    val healCapS = sys.env.get("SPARK_GRAFT_BENCH_HEAL_CAP_S")
-      .flatMap(_.toDoubleOption).filter(_ >= 0)
-      .getOrElse(math.max(120.0, initialElapsedS))
-    var extraPasses = 0
-    // Probe samples come from two distinct micro-environments —
-    // pass-boundary probes vs intra-pass probes interleaved with heavy
-    // catalog queries (~50% systematically apart at sf1 on a flat
-    // host) — so calmness is judged per class (BenchNoise
-    // .noisyIdxClassed), or a quiet host could never gate an sf1 run.
-    def probeClasses(): Seq[Set[Int]] = {
-      val boundary = passProbeRanges.flatMap { case (s, e) => Seq(s, e) }.toSet
-      Seq(boundary, (0 until probeCount).toSet -- boundary)
-    }
-    def quietNow(): Set[Int] = BenchNoise.quietPassesRange(
-      BenchNoise.calmSamplesClassed(sentinelTimes.toMap, probeClasses(),
-        BurstSpreadPct),
-      passProbeRanges.toIndexedSeq)
-    val healStart = System.nanoTime()
-    def healElapsedS(): Double = (System.nanoTime() - healStart) / 1e9
-    while (BenchNoise.needsExtraPass(quietNow(), extraPasses, maxExtra)
-        && healElapsedS() < healCapS) {
-      System.err.println(
-        s"[bench] only ${quietNow().size} sentinel-quiet pass(es) after " +
-          s"${passTimes.size} passes " +
-          s"(spread ${jsonNum(BenchNoise.spreadPct(sentinelTimes.toMap))}%) — " +
-          s"self-heal pass ${extraPasses + 1} " +
-          f"(${healElapsedS()}%.0f/${healCapS}%.0f s of heal budget)")
-      runPass()
-      extraPasses += 1
-    }
-
-    val calm = BenchNoise.calmSamplesClassed(sentinelTimes.toMap,
-      probeClasses(), BurstSpreadPct)
-    val quiet = quietNow()
-    // The salvage tier (r15 ask #2b): per-query minima over samples
-    // bracketed by calm probes — non-empty exactly when SOME timings
-    // sat in quiet intervals even though no whole pass was quiet.
-    // Computed always, EMITTED/GATED only when quiet passes are absent
-    // (with quiet passes the headline supersedes it).
-    val quietSubset =
-      if (quiet.nonEmpty) Map.empty[String, (Double, Int)]
-      else BenchNoise.quietSubsetMins(
-        passTimes.toIndexedSeq, queryBrackets.toIndexedSeq, calm)
-    // only corroborated (≥ 2 quiet-bracketed samples) values GATE —
-    // headline mode demands two whole quiet passes, and a subset value
-    // from one sample must not carry the same weight; singletons fall
-    // through to the gate's `uncovered` list, visible not silent
-    val quietGateable = quietSubset.collect {
-      case (q, (sec, n)) if n >= 2 => q -> sec
-    }
-    val allPasses = passTimes.indices.toSet
-    val names = selected.keys
-    val rawTimes = BenchNoise.minTimes(passTimes.toIndexedSeq, names, allPasses)
-    // Headline: min over QUIET passes when any exist (trustworthy even
-    // on a bursty run), else the raw min (and burst=true labels it).
-    val headlineTimes =
-      if (quiet.nonEmpty) BenchNoise.minTimes(passTimes.toIndexedSeq, names, quiet)
-      else rawTimes
-    def totalOf(ts: Map[String, Double]): Double = ts.values.filter(_ >= 0).sum
-    // totals cover successful queries only; failures are visible as -1
-    // per-query entries rather than shrinking the total
-    val total = totalOf(headlineTimes)
-    val rawTotal = totalOf(rawTimes)
-    val qs = selected.keys.map(k => s"\"$k\":${jsonNum(headlineTimes(k))}")
+    // Headline: each query's min over the passes it succeeded in, -1 if
+    // it never did. Totals cover successful queries only; failures are
+    // visible as -1 per-query entries rather than shrinking the total.
+    val minTimes = selected.keys.map { n =>
+      n -> passTimes.flatMap(_.get(n)).filter(_ >= 0).minOption.getOrElse(-1.0)
+    }.toMap
+    val total = minTimes.values.filter(_ >= 0).sum
+    val qs = selected.keys.map(k => s"\"$k\":${jsonNum(minTimes(k))}")
       .mkString("{", ",", "}")
-
-    // Noise summary from the sentinel samples: worst per-sentinel spread
-    // (max/min - 1) across the run, the burst verdict, and the
-    // quiet-pass/self-heal bookkeeping.
-    val sentinelJson = sentinels.map { case (n, _) =>
-      s"\"$n\":" + sentinelTimes(n).map(jsonNum).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val spreadPct = BenchNoise.spreadPct(sentinelTimes.toMap)
-    // burst labels the HEADLINE, not the raw run: the headline is the
-    // min over sentinel-quiet passes, so it is contaminated exactly
-    // when NO quiet pass exists. A high spread with quiet passes
-    // present (a burst the self-heal dodged, or warmup residue on the
-    // first probe) leaves the headline trustworthy — spread_pct stays
-    // in the artifact as the raw observable for cross-round reading.
-    val burst = quiet.isEmpty
-    val quietJson = quiet.toSeq.sorted.mkString("[", ",", "]")
-    // `headline_contaminated` is the authoritative verdict (no quiet
-    // pass exists => the headline min saw the burst). `burst` is kept
-    // as its alias for older tooling. Schema 3 (r16): sentinel samples
-    // are GLOBAL vectors (pass boundaries + intra-pass probes every
-    // ProbeEvery queries, so samples-per-pass varies); `pass_probes`
-    // records each pass's [start, end] probe-index range; pass-quiet
-    // is STRICT (every probe in the range calm, not just endpoints);
-    // and a zero-quiet-pass run carries a `quiet_subset` block — the
-    // per-query minima over calm-bracketed samples that the budget
-    // gate checks when the headline itself is contaminated.
-    val passProbesJson = passProbeRanges
-      .map { case (s, e) => s"[$s,$e]" }.mkString("[", ",", "]")
-    val quietSubsetJson =
-      if (quiet.nonEmpty) ""
-      else {
-        val entries = quietSubset.toSeq.sortBy(_._1)
-          .map { case (q, (s, _)) => s"\"$q\":${jsonNum(s)}" }
-          .mkString("{", ",", "}")
-        // per-query quiet sample counts: a value from 1 sample is
-        // visible (and ungated) rather than indistinguishable from a
-        // corroborated one
-        val samples = quietSubset.toSeq.sortBy(_._1)
-          .map { case (q, (_, n)) => s"\"$q\":$n" }.mkString("{", ",", "}")
-        s""","quiet_subset":{"queries":$entries,"samples":$samples,""" +
-          s""""gateable":${quietGateable.size},""" +
-          s""""covered":${quietSubset.size},"of":${selected.size}}"""
-      }
-    val noiseJson =
-      s"""{"schema":3,"floor":"median","sentinels":$sentinelJson,""" +
-        s""""spread_pct":${jsonNum(spreadPct)},""" +
-        s""""burst_threshold_pct":$BurstSpreadPct,"burst":$burst,""" +
-        s""""headline_contaminated":$burst,""" +
-        s""""quiet_passes":$quietJson,"n_passes":${passTimes.size},""" +
-        s""""pass_probes":$passProbesJson,"probe_every":$ProbeEvery,""" +
-        s""""extra_passes":$extraPasses,""" +
-        s""""heal_cap_s":${jsonNum(healCapS)}$quietSubsetJson}"""
-
-    // Per-query regression gate: evaluate the headline against the
-    // committed quiet-epoch ceilings (bench_budgets.json), sentinel-
-    // normalized so a uniformly loaded host raises ceilings by the
-    // measured ambient factor instead of flagging the whole catalog.
-    // An absent file or an SF tier with no pinned epoch (skew corpora,
-    // ad-hoc dirs) renders {"checked": false} — visible skip, not
-    // silence. Evaluated on the HEADLINE (quiet-pass mins): the raw
-    // mins can carry burst contamination the budgets don't model.
-    val sentinelMins = sentinelTimes.toMap.flatMap { case (n, samples) =>
-      val pos = samples.filter(_ > 0)
-      if (pos.isEmpty) None else Some(n -> pos.min)
-    }
-    // any failure here (malformed committed file, IO, an invalid
-    // SPARK_GRAFT_BUDGETS_PATH, a code-source the default-path walk
-    // can't resolve) must not sink the run: the timing work is already
-    // done, and a lost 15-minute artifact is a worse outcome than a
-    // loudly-skipped gate — the reason field carries the error for the
-    // round record. Path resolution sits INSIDE the try for that
-    // reason.
-    val budgetBlock = try {
-      val budgetsPath = sys.env.get("SPARK_GRAFT_BUDGETS_PATH")
-        .map(java.nio.file.Paths.get(_).toAbsolutePath)
-        .getOrElse(BenchBudgets.defaultBudgetsPath())
-      if (master != s"local[$cpus]")
-        BenchBudgets.blockJson(None, Some(s"master '$master' is not " +
-          s"local[$cpus] — multi-JVM timings are not comparable to " +
-          "pinned local epochs"))
-      else if (!java.nio.file.Files.exists(budgetsPath))
-        BenchBudgets.blockJson(None, Some("no bench_budgets.json at " + budgetsPath))
-      else {
-        val budgets = BenchBudgets.parse(new String(
-          java.nio.file.Files.readAllBytes(budgetsPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-        // decision tree is pure and spec-pinned in BenchBudgets.gate:
-        // quiet passes gate the headline; a contaminated run's
-        // quiet_subset gates whatever calm-bracketed evidence exists;
-        // cpus-mismatched or evidence-free runs skip loudly
-        BenchBudgets.gate(budgets, BenchBudgets.sfKey(sfDir), cpus,
-          headlineTimes, quiet.nonEmpty, quietGateable, sentinelMins) match {
-          case Left(reason) => BenchBudgets.blockJson(None, Some(reason))
-          case Right(result) =>
-            result.violations.foreach(v => System.err.println(
-              s"[bench] BUDGET VIOLATION (${result.mode}): ${v.query} " +
-                s"${v.sec}s > ceiling ${v.budgetS}s " +
-                s"(ambient factor ${result.factor})"))
-            BenchBudgets.blockJson(Some(result))
-        }
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] budget gate failed, skipping: $e")
-      BenchBudgets.blockJson(None, Some("budget gate error: " + e.toString.take(160)))
-    }
 
     // Complete artifact on disk. The driver's stdout capture keeps only the
     // tail of the (long) JSON line, which truncated rounds 1-10 to a
@@ -522,11 +265,10 @@ object Bench {
       selected.keys.map(n => s"\"$n\":" + taskTotals.getOrElse(n, TaskTotals())
         .json(passCompiles.head(n), passCompiles.last(n))).mkString("{", ",", "}") + "}"
     val report =
-      s"""{"metric":"total","value":${jsonNum(total)},"raw_value":${jsonNum(rawTotal)},""" +
+      s"""{"metric":"total","value":${jsonNum(total)},""" +
         s""""unit":"sec","sf":"$sfDir","cpus":"$cpus","master":"$master",""" +
         s""""reps":$nReps,"generated_at":"${java.time.Instant.now()}",""" +
         s""""ivfpq_prebuild_s":${jsonNum(ivfpqPrebuildS)},"excluded":$excludedJson,""" +
-        s""""noise":$noiseJson,"budget":$budgetBlock,""" +
         s""""queries":$qs,"per_rep":$perRepJson,"task_metrics":$taskJson}"""
     try {
       Option(reportPath.getParent).foreach(java.nio.file.Files.createDirectories(_): Unit)
@@ -539,27 +281,20 @@ object Bench {
     //  1. a COMPACT summary line first — short enough that a head-anchored
     //    parser always gets a complete object with the headline number;
     //  2. the full line with the big queries map, key order putting the
-    //    total + report pointer + noise verdict LAST so a partial read of
-    //    the line still shows the numbers that matter to a human;
+    //    total + report pointer LAST so a partial read of the line still
+    //    shows the numbers that matter to a human;
     //  3. the SAME compact line again as the very last stdout line — the
     //    driver's capture is TAIL-anchored, so the final complete line is
     //    the one its parser sees; the big queries-map line in the middle
     //    can never push the summary out of the tail window this way.
     // JSON key order is semantically irrelevant, so a full capture parses
     // any of the three identically.
-    val compactNoise =
-      s"""{"schema":3,"spread_pct":${jsonNum(spreadPct)},"burst":$burst,""" +
-        s""""headline_contaminated":$burst,""" +
-        s""""quiet_passes":$quietJson,"extra_passes":$extraPasses,""" +
-        s""""quiet_subset_covered":${quietSubset.size}}"""
     val compactLine =
       s"""{"metric":"total","value":${jsonNum(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""raw_value":${jsonNum(rawTotal)},"report":"$reportPath",""" +
-        s""""budget":$budgetBlock,"noise":$compactNoise}"""
+        s""""report":"$reportPath"}"""
     println(compactLine)
     println(
-      s"""{"queries":$qs,"sf":"$sfDir","reps":$nReps,"noise":$noiseJson,""" +
-        s""""budget":$budgetBlock,""" +
+      s"""{"queries":$qs,"sf":"$sfDir","reps":$nReps,""" +
         s""""report":"$reportPath","metric":"total","value":${jsonNum(total)},"unit":"sec"}""")
     println(compactLine)
     spark.stop()

@@ -4,8 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Bookkeeping for the per-round streaming artifact (`StreamBench` →
   * `bench_reports/stream_r{N}.json`): the JSON assembly is pure, so
-  * its shape is pinned here without a streaming run — the same
-  * BenchNoiseSpec idiom that guards graft.Bench's artifact. */
+  * its shape is pinned here without a streaming run. */
 class StreamBenchSpec extends AnyFunSuite {
 
   test("recordJson carries per-batch arrays and scalars verbatim, nulling no-metric batches") {

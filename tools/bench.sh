@@ -25,7 +25,7 @@ export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
 [ -n "$QUERIES" ] && export SPARK_GRAFT_BENCH_QUERIES="$QUERIES"
 # pipefail + grep scoped so a crashed Bench JVM (OOM, classpath error)
 # fails the script, while a grep that filters every line does not
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_BENCH_REPS=$REPS \
+SPARK_GRAFT_BENCH_REPS=$REPS \
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_REPORT_PATH="$REPORT" \
 java $OPENS -Xmx12g -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=32 \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \

@@ -20,8 +20,7 @@ Two scans:
    `OPTIMIZATION_r<N>.md`, `bench_reports/<name>.json`, or
    `plans/r<N>/<name>` token in `src/**/*.scala` and `OPTIMIZATION_*.md`
    must resolve. Tokens containing `example` are illustrative
-   placeholders (BenchBudgets' format doc) and are skipped, as are
-   transient `target/` paths.
+   placeholders and are skipped, as are transient `target/` paths.
 
 Exit 1 with the missing list otherwise.
 

@@ -95,7 +95,6 @@ def main() -> None:
         "median_factor": factors[len(factors) // 2],
         "flagged_over_2x": flagged,
         "queries": rows,
-        "cluster_noise": cl.get("noise"),
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)

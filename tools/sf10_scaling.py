@@ -27,7 +27,7 @@ evidence for the same tier live in one file. Any failing row aborts.
 prev_round_out.json: the PRIOR round's output of this tool (e.g.
 bench_reports/sf10_r17.json). When given, a ratio_delta_vs_prev block
 is embedded so a round-over-round scaling REGRESSION (a ratio that got
-worse, not just an absolute budget breach) is machine-readable:
+worse, not just a slow absolute time) is machine-readable:
 per-query ratio deltas plus a `regressions` list of queries whose
 ratio worsened by more than REG_DELTA_X relatively AND REG_DELTA_ABS
 absolutely (both, so sub-second jitter on tiny ratios doesn't flag).
@@ -49,9 +49,7 @@ informational). Every name in the CURRENT round's `regressions` list
 AND every name in the PREVIOUS artifact's `regressions` list (the
 carried-over drift that this round must resolve) requires a verdict;
 a missing one aborts the build, a verdict for a name in neither list
-is rejected as stale. Current regressions are additionally surfaced
-as `regression_warnings` inside the embedded budget block, so the
-budget gate's one-stop record carries them at warning level.
+is rejected as stale. Current regressions are printed.
 """
 import json
 import sys
@@ -148,8 +146,6 @@ def main() -> None:
         "flagged_over_10x": flagged,
         "sf10_only_queries": only10,
         "queries": rows,
-        "sf10_noise": sf10.get("noise"),
-        "sf10_budget": sf10.get("budget"),
     }
     if oracle is not None:
         out["oracle_subset"] = oracle
@@ -196,14 +192,6 @@ def main() -> None:
             } for n in need},
             "deltas": deltas,
         }
-        # feed the budget gate at warning level: the embedded budget
-        # block is the one-stop regression record consumers read, so
-        # current-round ratio regressions ride along as warnings there
-        # (the hard stop above is the missing-verdict case, not the
-        # regression itself)
-        if out.get("sf10_budget"):
-            out["sf10_budget"] = dict(out["sf10_budget"])
-            out["sf10_budget"]["regression_warnings"] = sorted(regressions)
         if regressions:
             print(f"[scaling] RATIO REGRESSIONS vs {prev_path}: "
                   f"{sorted(regressions)} (verdicts recorded)")

@@ -83,7 +83,6 @@ def main() -> None:
         "median_decade2_ratio": ratios[len(ratios) // 2],
         "flagged_growth": flagged,
         "queries": rows,
-        "sf100_noise": sf100.get("noise"),
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
