@@ -102,8 +102,8 @@ object Bench {
     * blocked-join code path at a corpus-size-aware ~25M-pair budget
     * (m = 8 at sf1, 800 at sf10 — Dedup.pairSampleModFor).
     * The oracle/Verify surface is unaffected — this is bench-only, it
-    * is logged in the artifact, and SPARK_GRAFT_BENCH_EXACT_PAIRS=1
-    * restores the unbounded entry. Exclusion only applies when the
+    * is logged in the artifact, and a SPARK_GRAFT_BENCH_QUERIES subset
+    * that names the entry times it. Exclusion only applies when the
     * sampled twin is actually in the catalog. */
   private[graft] val UnboundedPairTool = "dedup_embedding_cosine"
   private val SampledPairTwin = "dedup_embedding_cosine_sampled"
@@ -113,6 +113,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional comma-separated subset for local iteration on specific
+    // queries; the driver's full run leaves this unset.
+    val only = SparkEntry.subset("SPARK_GRAFT_BENCH_QUERIES",
+      SparkEntry.queries.keySet)
     val spark = GraftSession("graft-bench")
     val cpus = GraftSession.cpus
     // timings under a non-local[cpus] master (local-cluster = multi-JVM
@@ -120,25 +124,15 @@ object Bench {
     // string alone cannot tell them apart: the artifact records the
     // master for downstream comparability checks.
     val master = spark.sparkContext.master
-    // Optional comma-separated subset for local iteration on specific
-    // queries; the driver's full run leaves this unset.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must not silently shrink the run to nothing
-    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
-      System.err.println(s"[bench] ignoring unknown query name: $n")))
-    val subset = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    val includeExactPairs = sys.env.get("SPARK_GRAFT_BENCH_EXACT_PAIRS").contains("1")
+    val subset = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
     val excluded =
-      if (only.isEmpty && !includeExactPairs && subset.contains(SampledPairTwin))
+      if (only.isEmpty && subset.contains(SampledPairTwin))
         subset.keySet.intersect(Set(UnboundedPairTool))
       else Set.empty[String]
     excluded.foreach(n => System.err.println(
       s"[bench] $n excluded from the timed surface (sampled twin " +
-        s"$SampledPairTwin measures the same path; SPARK_GRAFT_BENCH_EXACT_PAIRS=1 restores it)"))
+        s"$SampledPairTwin measures the same path; name it in " +
+        "SPARK_GRAFT_BENCH_QUERIES to time it)"))
     val selected = subset.filter { case (n, _) => !excluded(n) }
     // Warmup at the smallest SF: JIT-compiles every query's code path
     // (parquet reader, codegen, interpreted-expression fallbacks) so the

@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *    [[megaDupVectors]]).
   *
   *  - `clusterschain0.1/` — a [[ChainLen]]-document sequential-overlap
-  *    chain added to the documents (see [[withChain]]), the duplicate
-  *    graph min-label propagation cannot close within its round cap.
+  *    chain added to the documents (see [[withChain]]): a duplicate
+  *    graph whose diameter is the chain length, the worst shape for
+  *    connected components by label propagation.
   *
   *  - `sf1/` — 10× scale-up: every fact AND its dimensions replicated
   *    10 times with a consistent key offset (1e8) per replica, so
@@ -243,10 +244,9 @@ object BenchData {
     * 3-gram shingles (jaccard 33/39 ≈ 0.846 ≥ the 0.8 verify
     * threshold) while lag-2 docs share 30 of 42 (0.714 < 0.8). The
     * duplicate graph is then a pure path, ids ascending along it, so
-    * the component minimum sits at one END: min-label needs len−1
-    * rounds, exits its cap unconverged, and
-    * [[graft.operators.Dedup.componentLabelsDiag]] takes the
-    * large-star/small-star fallback. Tokens are globally unique to
+    * the component minimum sits at one END, len−1 hops from the far
+    * end; [[graft.operators.Dedup.componentLabels]] must still close
+    * it in O(log² len) rounds. Tokens are globally unique to
     * the chain (`chaintok<i>`), so the chain shares no shingle with
     * the corpus — the planted component is exactly the path. */
   private[graft] def withChain(spark: SparkSession, docs: DataFrame,

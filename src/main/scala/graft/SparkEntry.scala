@@ -52,6 +52,23 @@ object SparkEntry {
         }
       }
 
+  /** The names a comma-separated subset variable selects (Bench's
+    * `SPARK_GRAFT_BENCH_QUERIES`, Verify's `SPARK_GRAFT_VERIFY_QUERIES`,
+    * StreamBench's `SPARK_GRAFT_STREAM_OPS`); None when `envVar` is
+    * unset. A value that selects nothing or names anything outside
+    * `known` fails with the offending names: a typo must not become a
+    * success-shaped run that skipped the entry. */
+  def subset(envVar: String, known: Set[String],
+      env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(envVar).map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"$envVar is set but selects nothing")
+      val unknown = names.diff(known)
+      require(unknown.isEmpty,
+        s"unknown $envVar names: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
   def oracleSql: Map[String, String] =
     Relational.oracles ++ RetailPipeline.oracles ++ Dedup.oracles ++
       TextAnalysis.oracles ++ Similarity.oracles ++ Events.oracles ++

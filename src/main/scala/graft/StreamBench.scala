@@ -150,7 +150,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val splits = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLITS", "8").toInt
+    val splits = 8
     val cpus = GraftSession.cpus
     // one micro-batch per split file: keep every progress entry
     val spark = GraftSession("graft-streambench",
@@ -159,25 +159,10 @@ object StreamBench {
 
     // optional comma-separated op subset (e.g. the sf1 latency probe
     // runs only sessionize + doc_dedup_probe against the big corpus).
-    // Unknown names fail fast: a typo must not commit an empty artifact
-    // wearing a success-shaped summary line as round evidence.
     val knownOps = Set("tumbling_agg", "tumbling_agg_append", "sliding_agg",
       "dedup_counts", "clickview_join", "enriched_agg", "sessionize",
       "doc_dedup_probe")
-    val only = sys.env.get("SPARK_GRAFT_STREAM_OPS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      // an empty/whitespace value would pass the unknown-name check
-      // vacuously, deselect every op, and commit an empty ops:{}
-      // artifact wearing a success-shaped summary line
-      require(names.nonEmpty,
-        "SPARK_GRAFT_STREAM_OPS is set but selects no ops " +
-          s"(known: ${knownOps.toSeq.sorted.mkString(", ")})")
-      val unknown = names.diff(knownOps)
-      require(unknown.isEmpty,
-        s"unknown SPARK_GRAFT_STREAM_OPS: ${unknown.mkString(", ")} " +
-          s"(known: ${knownOps.toSeq.sorted.mkString(", ")})")
-    }
+    val only = SparkEntry.subset("SPARK_GRAFT_STREAM_OPS", knownOps)
     def selected(name: String): Boolean = only.forall(_.contains(name))
 
     def run(name: String, start: String => StreamingQuery): Option[String] =

@@ -218,18 +218,4 @@ object Tables {
 
   def loadEvents(spark: SparkSession, sfDir: String): DataFrame =
     balance(spark, eventsRaw(spark, sfDir), s"$sfDir/events.parquet#nanos")
-
-  /** Register every table as a temp view so the ad-hoc `spark.sql`
-    * surface (reference's Glue/Athena step, README.md:64-78) works
-    * in-engine. `events` must go through [[loadEvents]]: a plain read
-    * of its nanosecond timestamps throws in Spark 4, and the event
-    * queries expect the derived `sec` column. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      // events needs the explicit nanos-as-long schema + sec column,
-      // but NOT loadBalanced: a generic SQL view shouldn't pay a
-      // repartition shuffle on every ad-hoc query
-      val df = if (n == "events") eventsRaw(spark, sfDir) else load(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

@@ -5,18 +5,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional comma-separated subset for local iteration; the driver
+    // leaves it unset
+    val only = SparkEntry.subset("SPARK_GRAFT_VERIFY_QUERIES",
+      SparkEntry.queries.keySet)
     // SPARK_GRAFT_MASTER=local-cluster[<workers>,<cores>,<memMB>] runs
     // executors as SEPARATE JVMs (see GraftSession)
     val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for local iteration (same contract
-    // as Bench's SPARK_GRAFT_BENCH_QUERIES); the driver leaves it unset
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
     selected.foreach { case (name, fn) =>
       val dest = new java.io.File(s"$outDir/$name")
       // pre-delete so a failed query can never be scored against a

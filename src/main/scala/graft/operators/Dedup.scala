@@ -892,7 +892,6 @@ object Dedup {
   // sum ([[simhashPairs]] scaladoc); widening the signature is the
   // move that relaxes both at once.
   // ---------------------------------------------------------------------
-  private[graft] def tokHash60HiSpark(v: String): String = hexHashSpark(v, 17, 15)
   private[graft] def tokHash60HiSql(v: String): String = hexHashSql(v, 17, 15)
 
   private[graft] def simhashesWide(spark: SparkSession, dir: String): DataFrame = {
@@ -1495,14 +1494,12 @@ object Dedup {
   // ---------------------------------------------------------------------
   // dedup_clusters — the operator dedup actually ends with: group the
   // near-dup PAIRS into connected components and keep one doc per
-  // component. Distributed min-label propagation (labels converge to
-  // the component's minimum doc_id in O(diameter) rounds; lineage is
-  // truncated per round — see [[Truncator]] — so plans don't grow).
-  // Near-dup clusters are tiny in practice, so few rounds suffice —
-  // the round cap is a safety net, and the exact recursive-CTE
+  // component (the minimum doc_id). Computed by the large-star/
+  // small-star alternation below; lineage is truncated per round — see
+  // [[Truncator]] — so plans don't grow. The exact recursive-CTE
   // oracle would flag any non-convergence as a mismatch.
   // ---------------------------------------------------------------------
-  /** Lineage truncation for the propagation loop.
+  /** Lineage truncation for the star rounds.
     *
     * With a checkpoint dir configured (a real cluster), each round is
     * written to one of two alternating parquet slots under it and read
@@ -1510,7 +1507,7 @@ object Dedup {
     * read-back lineage is a plain scan), exactly ONE computation of
     * the round (unlike `Dataset.checkpoint`, which recomputes the
     * unpersisted plan a second time to write its files), and bounded
-    * on-disk footprint (two label-table copies, overwritten in place,
+    * on-disk footprint (two edge-table copies, overwritten in place,
     * vs `checkpoint`'s one abandoned copy per round — Spark only
     * cleans those with reference-tracking enabled). The slot pair
     * lives for the session since the returned frame scans the final
@@ -1526,16 +1523,14 @@ object Dedup {
     private var slot = 0
 
     /** Materializes `df` (one action) and returns a lineage-free
-      * equivalent. `eager=false` defers the localCheckpoint action to
-      * the caller's next job on the local path; the reliable path is
-      * inherently eager (the write IS the action). */
-    def truncate(df: DataFrame, eager: Boolean): DataFrame = reliableBase match {
+      * equivalent. */
+    def truncate(df: DataFrame): DataFrame = reliableBase match {
       case Some(base) =>
         val path = s"$base/slot$slot"
         slot = (slot + 1) % 2
         df.write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
-      case None => df.localCheckpoint(eager)
+      case None => df.localCheckpoint()
     }
   }
 
@@ -1547,183 +1542,26 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Component labels with the diameter fallback WIRED IN: min-label
-    * propagation first (one shuffle per round, converges in ~2 rounds
-    * on the star-shaped graphs real near-dup corpora produce); if it
-    * exits its round cap unconverged — a component with diameter
-    * beyond the cap, i.e. a chain-shaped duplicate graph — the
-    * large-star/small-star alternation recomputes the labels
-    * diameter-proof instead of shipping wrong ones. DedupSpec pins
-    * the fallback on the 40-node chain the plain loop cannot close. */
-  /** Diagnostics from one [[componentLabels]] run: rounds the
-    * min-label loop spent, whether it converged, and (when it did
-    * not) the star alternation's rounds; DedupSpec pins them on the
-    * 40-node chain fixture. */
-  private[graft] final case class ComponentDiag(
-      propagateRounds: Int, propagateConverged: Boolean, starRounds: Int)
-
+  /** (doc_id, cluster_id) labels: every doc of `docs` labelled with the
+    * minimum doc_id of its connected component in the `pairs`
+    * (doc_i, doc_j) graph; a doc without edges labels itself. */
   private[graft] def componentLabels(spark: SparkSession, docs: DataFrame,
       pairs: DataFrame): DataFrame =
-    componentLabelsDiag(spark, docs, pairs)._1
-
-  private[graft] def componentLabelsDiag(spark: SparkSession, docs: DataFrame,
-      pairs: DataFrame): (DataFrame, ComponentDiag) = {
-    // persisted across the two attempts: the fallback must pay only
-    // the star rounds, not a second full evaluation of the pair
-    // pipeline (for clusters that is the whole minhash candidate +
-    // verification plan). A caller that already persisted the frame
-    // keeps ownership of its cache — persisting again would register
-    // a second entry and the finally-unpersist would evict the
-    // caller's copy out from under it (Spark caching isn't
-    // ref-counted).
-    val alreadyCached =
-      pairs.storageLevel.useMemory || pairs.storageLevel.useDisk
-    val p = if (alreadyCached) pairs else pairs.persist()
-    try {
-      val (labels, rounds, converged) = propagateLabels(spark, docs, p)
-      if (converged) (labels, ComponentDiag(rounds, converged, 0))
-      else {
-        System.err.println(
-          "[graft] clusters: falling back to large-star/small-star for " +
-            "the over-diameter component graph")
-        val (starLabels, starRounds) = propagateLabelsStar(spark, docs, p)
-        (starLabels, ComponentDiag(rounds, converged, starRounds))
-      }
-    } finally if (!alreadyCached) p.unpersist(blocking = false): Unit
-  }
-
-  /** Min-label propagation over the near-dup pair graph; returns the
-    * (doc_id, cluster_id) labels, the number of rounds run, and
-    * whether the loop CONVERGED (labels are wrong for any component
-    * whose diameter exceeds the round cap — [[componentLabels]] falls
-    * back to the star alternation on that signal). Factored out of
-    * [[clusters]] so the diameter guard can be spec-asserted on a
-    * planted long-chain fixture (DedupSpec) — rounds grow LINEARLY
-    * with component diameter, which is fine for near-dup clusters
-    * (diameter ≤ 2–3 in practice; the sf1 clone groups are stars
-    * around the base doc) but the wrong algorithm for a corpus whose
-    * duplicate graph forms long chains. A chain doesn't pay the full
-    * cap before the fallback: the falling changed-label count is
-    * linearly projected at each convergence check, and two
-    * consecutive projections past the cap exit unconverged early
-    * (~8 rounds on a pure path vs 32 — measured on BenchData's
-    * 64-doc clusterschain0.1 tier, bench_reports/clusters_chain_r16.json). */
-  private[graft] def propagateLabels(spark: SparkSession, docs: DataFrame,
-      pairs: DataFrame): (DataFrame, Int, Boolean) = {
-    val und = pairs.union(
-        pairs.select(col("doc_j").as("doc_i"), col("doc_i").as("doc_j")))
-      .persist()
-    val trunc = new Truncator(spark)
-    var labels = trunc.truncate(docs.select(col("doc_id"))
-      .withColumn("cluster_id", col("doc_id")), eager = true)
-    // Convergence is only CHECKED every checkEvery rounds, and on check
-    // rounds the count() doubles as the action that materializes the
-    // (lazy) local checkpoint — so every round runs exactly one
-    // materializing action (plus a cheap count-scan of the written
-    // slot on reliable-path check rounds), vs two full computations
-    // (eager checkpoint + count) when checking each round. Worst case
-    // wastes checkEvery−1 no-op rounds after convergence; near-dup
-    // clusters converge in a handful of rounds, so that beats 2× the
-    // actions on every productive round.
-    val checkEvery = 4
-    val maxRounds = 32
-    var converged = false
-    var hopeless = false
-    var round = 0
-    // early chain tell: the changed-label count at consecutive check
-    // rounds projects the rounds left (min-label moves the frontier
-    // O(1) nodes per round on a chain, so `changed` falls LINEARLY —
-    // slope ~1/round on a pure path). When the linear projection lands
-    // past the cap, paying the remaining rounds is waste: exit
-    // unconverged NOW and let componentLabels take the star fallback.
-    // A wrong projection is a cost choice, never a correctness one —
-    // the fallback recomputes labels from the pairs. On star-shaped
-    // real corpora `changed` collapses to 0 by the first checks and
-    // the projection never fires. Two CONSECUTIVE misses are required
-    // before exiting: a single slope<=0 observation between the
-    // round-2 and round-4 checks can be a transient plateau (a tie in
-    // changed counts, or the "broom" shape — one moving hub dragging
-    // many leaves' labels each round) that min-label would still
-    // converge under the cap; demanding a second miss at the next
-    // cadence check costs a chain ~4 extra rounds (exit ~8 vs ~4,
-    // still far under the 32-round cap) and spares a convergeable
-    // graph the costlier star diversion on one data point.
-    var prevChanged = -1L
-    var prevCheckRound = 0
-    var projMisses = 0
-    while (!converged && !hopeless && round < maxRounds) {
-      round += 1
-      val nbrMin = labels.join(und, labels("doc_id") === und("doc_i"))
-        .groupBy(col("doc_j").as("nbr_doc"))
-        .agg(min(col("cluster_id")).as("nbr_min"))
-      // near-dup components are usually pairs/triples (diameter ≤ 2),
-      // so probe once early at round 2, then settle into the cadence
-      val isCheck = round == 2 || round % checkEvery == 0 || round == maxRounds
-      val updated = trunc.truncate(labels
-        .join(nbrMin, labels("doc_id") === nbrMin("nbr_doc"), "left")
-        .select(col("doc_id"), col("cluster_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("new_label")), eager = !isCheck)
-      if (isCheck) {
-        val changed = updated.filter(col("new_label") =!= col("cluster_id")).count()
-        converged = changed == 0
-        if (!converged && prevChanged >= 0) {
-          val slope = (prevChanged - changed).toDouble / (round - prevCheckRound)
-          val miss = slope <= 0 || round + changed / slope > maxRounds
-          projMisses = if (miss) projMisses + 1 else 0
-          hopeless = projMisses >= 2
-          if (hopeless) System.err.println(
-            s"[graft] clusters: label propagation projects past the " +
-              s"$maxRounds-round cap at round $round ($changed labels still " +
-              s"moving, slope ${slope}/round) — exiting early for the " +
-              "star fallback")
-        }
-        prevChanged = changed
-        prevCheckRound = round
-      }
-      labels = updated.select(col("doc_id"), col("new_label").as("cluster_id"))
-    }
-    // DIAMETER GUARD: min-label propagation is O(diameter) rounds, so
-    // a component whose diameter exceeds maxRounds exits this loop
-    // UNCONVERGED — labels would be wrong (the exact DuckDB oracle
-    // would flag it, but a production run has no oracle). Warn loudly
-    // and name the remedy: the large-star/small-star alternation
-    // (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    // SoCC'14) converges in O(log² n) rounds regardless of diameter
-    // and is the drop-in replacement for this loop if a real corpus
-    // ever produces chain-shaped duplicate graphs.
-    if (!converged)
-      System.err.println(
-        s"[graft] clusters: label propagation NOT converged after " +
-          s"$round rounds (cap $maxRounds" +
-          (if (hopeless) ", exited early on the chain projection" else "") +
-          ") — a duplicate component's diameter exceeds what min-label " +
-          "propagation can close here; labels are incorrect for it. " +
-          "[[componentLabels]] falls back to propagateLabelsStar " +
-          "(large-star/small-star, diameter-proof) on this signal.")
-    und.unpersist(blocking = false)
-    (labels, round, converged)
-  }
+    propagateLabelsStar(spark, docs, pairs)._1
 
   /** Connected components via the LARGE-STAR/SMALL-STAR alternation
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the diameter-proof twin of [[propagateLabels]]:
-    * converges in O(log² n) rounds on ANY graph shape, where min-label
-    * propagation needs O(diameter) rounds (a 40-node chain exceeds its
-    * 32-round cap; this one closes it in a handful — both
-    * spec-pinned, same labels). Per round: large-star hangs every
-    * larger neighbor of a node onto the node's minimum neighbor;
-    * small-star re-hangs the smaller neighbors. The fixpoint is a
-    * star forest — every node holds one edge to its component's
-    * minimum id — detected by an order-insensitive edge-set checksum
-    * (count + hash sum; a collision could only end a round EARLY, and
-    * only if two different edge multisets collide on both).
-    *
-    * Kept alongside (not replacing) the min-label loop: near-dup
-    * graphs in practice are stars around a base doc (diameter ≤ 2),
-    * where min-label converges in ~2 rounds of ONE shuffle each vs
-    * two shuffles per star round. This is the shipped remedy the
-    * guard warning names, for corpora whose duplicate graphs chain. */
+    * SoCC'14): converges in O(log² n) rounds on ANY graph shape (a
+    * 40-node chain closes in a handful — spec-pinned). Per round:
+    * large-star hangs every larger neighbor of a node onto the node's
+    * minimum neighbor; small-star re-hangs the smaller neighbors. The
+    * fixpoint is a star forest — every node holds one edge to its
+    * component's minimum id — detected by an order-insensitive
+    * edge-set checksum (count + hash sum; a collision could only end a
+    * round EARLY, and only if two different edge multisets collide on
+    * both). The first truncation materializes the edge set once, so
+    * the caller's pair pipeline is evaluated exactly once. Returns the
+    * labels and the rounds run. */
   private[graft] def propagateLabelsStar(spark: SparkSession, docs: DataFrame,
       pairs: DataFrame): (DataFrame, Int) = {
     val trunc = new Truncator(spark)
@@ -1731,7 +1569,7 @@ object Dedup {
       pairs.select(
           greatest(col("doc_i"), col("doc_j")).as("u"),
           least(col("doc_i"), col("doc_j")).as("v"))
-        .filter(col("u") =!= col("v")).distinct(), eager = true)
+        .filter(col("u") =!= col("v")).distinct())
 
     def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
       // decimal sum: full-range long hashes overflow a LONG sum (ANSI)
@@ -1767,12 +1605,12 @@ object Dedup {
     }
 
     var sig = checksum(edges)
-    var converged = edges.isEmpty
+    var converged = sig._1 == 0L
     var round = 0
     val maxRounds = 64 // log^2 bound: astronomically above any real corpus
     while (!converged && round < maxRounds) {
       round += 1
-      edges = trunc.truncate(smallStar(largeStar(edges)), eager = true)
+      edges = trunc.truncate(smallStar(largeStar(edges)))
       val next = checksum(edges)
       converged = next == sig
       sig = next

@@ -344,6 +344,20 @@ object Similarity {
       queryStride = annQueryStrideFor(n), emitMod = true)
   }
 
+  /** Numbers a handful of seed rows by `vec_id` rank, starting at
+    * `first`: (idCol INT, embCol). One global sort of the collected
+    * rows — the [[assign]] idiom — instead of a partition-free window,
+    * which logs Spark's "No Partition Defined for Window operation"
+    * warning on every call. */
+  private def numberSeeds(seeds: DataFrame, first: Int, idCol: String,
+      embCol: String): DataFrame =
+    seeds.groupBy()
+      .agg(array_sort(collect_list(struct(col("vec_id"), col("embedding"))))
+        .as("seeds"))
+      .select(posexplode(col("seeds")).as(Seq("pos", "seed")))
+      .select((col("pos") + first).cast("int").as(idCol),
+        col("seed.embedding").as(embCol))
+
   /** Train the coarse quantizer and build the inverted file:
     * (centroids — persisted, K rows; lists — one row per corpus vector
     * with its cluster id, embedding and norm). Shared by the plain IVF
@@ -351,11 +365,10 @@ object Similarity {
   private def ivfIndex(e: DataFrame): (DataFrame, DataFrame) = {
     // Deterministic pseudo-random seeds at any corpus size (hash-order
     // TakeOrdered — no count(), no collect), then 2 Lloyd iterations.
-    var centroids = e
+    val seeds = e
       .orderBy(pmod(xxhash64(col("vec_id")), lit(1000003)), col("vec_id"))
       .limit(K)
-      .select(row_number().over(Window.orderBy(col("vec_id"))).as("cluster"),
-        col("embedding").as("centroid"))
+    var centroids = numberSeeds(seeds, 1, "cluster", "centroid")
     for (_ <- 1 to 2)
       centroids = recenter(assign(e, centroids)
         .select(col("cluster"), col("embedding")))
@@ -434,10 +447,8 @@ object Similarity {
     * Broadcast-sized; trained once and reused across the fleet in a
     * real deployment. */
   private def pqCodebook(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") % pqSeedComb === pqSeedRes)
-      .orderBy("vec_id").limit(pqK)
-      .select((row_number().over(Window.orderBy("vec_id")) - 1)
-        .cast("int").as("code"), col("embedding").as("c_emb"))
+    numberSeeds(e.filter(col("vec_id") % pqSeedComb === pqSeedRes)
+      .orderBy("vec_id").limit(pqK), 0, "code", "c_emb")
 
   /** Per-vector block codes + per-block squared distances:
     * (vec_id, code0..B-1, d0..B-1), unordered. Shared by the encoding
@@ -584,10 +595,8 @@ object Similarity {
     * so a codebook entry is not systematically a centroid. */
   private val ivfPqK = 64
   private def ivfPqCodebook(e: DataFrame): DataFrame =
-    e.orderBy(pmod(xxhash64(col("vec_id") + 77), lit(1000003)), col("vec_id"))
-      .limit(ivfPqK)
-      .select((row_number().over(Window.orderBy("vec_id")) - 1)
-        .cast("int").as("code"), col("embedding").as("c_emb"))
+    numberSeeds(e.orderBy(pmod(xxhash64(col("vec_id") + 77), lit(1000003)),
+      col("vec_id")).limit(ivfPqK), 0, "code", "c_emb")
 
   /** ADC shortlist size per query: the refine stage re-ranks this many
     * candidates exactly (FAISS refine k_factor = RefineC/k = 20 —

@@ -37,4 +37,16 @@ class CatalogSpec extends AnyFunSuite {
     assert(phantomGates.isEmpty,
       s"quality-gated names with no catalog query: $phantomGates")
   }
+
+  test("a subset variable selects known names and fails on a typo or an empty value") {
+    val known = SparkEntry.queries.keySet
+    def pick(v: String) = SparkEntry.subset("SUBSET", known, Map("SUBSET" -> v))
+    assert(SparkEntry.subset("SUBSET", known, Map.empty) === None)
+    assert(pick(" dedup_clusters,vec_pq_assign ,") ===
+      Some(Set("dedup_clusters", "vec_pq_assign")))
+    val typo = intercept[IllegalArgumentException](pick("dedup_clusters,dedup_clustres"))
+    assert(typo.getMessage.contains("dedup_clustres"), typo.getMessage)
+    assert(!typo.getMessage.contains("dedup_clusters"), typo.getMessage)
+    intercept[IllegalArgumentException](pick(" , "))
+  }
 }

@@ -28,50 +28,10 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       s"simhash found $found of ${jacPairs.size} very-near dups at hamming<=3")
   }
 
-  test("clusters diameter guard: planted 12-node chain converges, rounds linear in diameter") {
-    import spark.implicits._
-    val docs = (1L to 12L).toDF("doc_id")
-    val pairs = (1L to 11L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
-    val (labels, rounds, converged) = Dedup.propagateLabels(spark, docs, pairs)
-    assert(converged, "diameter-11 chain is inside the cap")
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 12L).forall(got(_) == 1L), s"chain must collapse to min label, got $got")
-    // min-label moves one hop per round: diameter 11 ⇒ 11 productive
-    // rounds, and the check cadence (round 2, then every 4) detects
-    // convergence by round 12 — pinning the linear-in-diameter cost
-    // the in-code guard documents (large-star/small-star is the
-    // fallback if a real corpus produces chain-shaped dup graphs)
-    assert(rounds >= 11 && rounds <= 16, s"rounds=$rounds")
-  }
-
-  test("clusters diameter guard: a chain past the round cap exits unconverged (warning path)") {
-    import spark.implicits._
-    // diameter 39 > maxRounds 32: the loop must exit visibly
-    // unconverged — and EARLY: the changed-label count falls linearly
-    // on a chain (slope ~1/round), so the projection lands past the
-    // cap at the round-4 AND round-8 checks (two consecutive misses,
-    // the r15 advisory's transient-plateau guard) and the loop stops
-    // at round 8 instead of paying all 32 rounds before the star
-    // fallback (the r14 review's watch item)
-    val docs = (1L to 40L).toDF("doc_id")
-    val pairs = (1L to 39L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
-    val (labels, rounds, converged) = Dedup.propagateLabels(spark, docs, pairs)
-    assert(rounds <= 8, s"chain projection must exit early, ran $rounds rounds")
-    assert(!converged, "the early exit must be SIGNALLED, not silent")
-    val lbls = labels.collect().map(_.getLong(1))
-    assert(lbls.exists(_ != 1L), "past-cap chain must remain unconverged at the far end")
-    // ...and the operator-facing entry point repairs exactly this case
-    // by falling back to the star alternation
-    val fixed = Dedup.componentLabels(spark, docs, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 40L).forall(fixed(_) == 1L),
-      "componentLabels must fall back to star and return correct labels")
-  }
-
   test("large-star/small-star closes the past-cap chain min-label cannot, in O(log^2) rounds") {
     import spark.implicits._
-    // the same 40-node chain the plain loop exits UNCONVERGED on at
-    // its 32-round cap: the star alternation must close it fast
+    // a 40-node path: label propagation one hop per round would need
+    // 39 rounds; the star alternation must close it in a handful
     val docs = (1L to 40L).toDF("doc_id")
     val pairs = (1L to 39L).map(i => (i, i + 1)).toDF("doc_i", "doc_j")
     val (labels, rounds) = Dedup.propagateLabelsStar(spark, docs, pairs)
@@ -80,24 +40,38 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(rounds <= 12, s"star alternation must be diameter-proof, ran $rounds rounds")
   }
 
-  test("star and min-label propagation agree on a deterministic random graph + singletons") {
+  test("componentLabels matches a union-find on random, path and star graphs") {
     import spark.implicits._
-    // 120 nodes, ~90 hash-derived edges (plus guaranteed singletons):
-    // small-diameter shape where BOTH algorithms converge — labels
-    // must be identical node-for-node
-    val docs = (1L to 120L).toDF("doc_id")
-    val pairs = (1 to 90).map { i =>
+    // reference labels: union-find, each root the minimum of its set
+    def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map((1L to n).map(i => i -> i): _*)
+      def find(x: Long): Long =
+        if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      (1L to n).map(i => i -> find(i)).toMap
+    }
+    // 120 nodes, ~90 hash-derived edges among the first 100, so docs
+    // 101..120 have no edge and must label themselves
+    val random = (1 to 90).map { i =>
       val a = 1L + math.floorMod(i * 7919L, 100L)
       val b = 1L + math.floorMod(i * 104729L + 13L, 100L)
       (a, b)
-    }.filter { case (a, b) => a != b }.toDF("doc_i", "doc_j")
-    val (plain, _, _) = Dedup.propagateLabels(spark, docs, pairs)
-    val (star, _) = Dedup.propagateLabelsStar(spark, docs, pairs)
-    val p = plain.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val s = star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(p === s, "the two component algorithms must produce identical labels")
-    assert((101L to 120L).forall(k => s(k) == k) && s(120L) === 120L,
-      "edge-free docs must self-label in both")
+    }.filter { case (a, b) => a != b }
+    val graphs = Seq(
+      ("random", 120L, random),
+      ("12-node path", 12L, (1L to 11L).map(i => (i, i + 1))),
+      ("40-node path", 40L, (1L to 39L).map(i => (i, i + 1))),
+      // hub 31 above its leaves: every leaf's label must move to 1
+      ("30-leaf star", 31L, (1L to 30L).map(i => (31L, i))))
+    graphs.foreach { case (name, n, edges) =>
+      val got = Dedup.componentLabels(spark, (1L to n).toDF("doc_id"),
+        edges.toDF("doc_i", "doc_j"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === unionFind(n, edges), s"$name: labels differ from union-find")
+    }
   }
 
   test("clusters: pair endpoints co-clustered, keeper is component min") {

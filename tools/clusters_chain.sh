@@ -3,13 +3,12 @@
 #   tools/clusters_chain.sh [artifactOut]
 #
 # Runs on BenchData's clusterschain0.1 tier (the sf0.1 documents plus a
-# 64-doc sequential-overlap chain that min-label propagation cannot
-# close within its round cap):
+# 64-doc sequential-overlap chain, a duplicate graph of diameter 63):
 # 1. tools/bench.sh times dedup_clusters on it (noop sink, min over
 #    interleaved passes, per-query task metrics);
 # 2. the same dir runs through the NORMAL oracle gate
 #    (SPARK_GRAFT_VERIFY_QUERIES=dedup_clusters tools/verify.sh), so the
-#    large-star/small-star fallback's labels are adjudicated by the
+#    large-star/small-star labels are adjudicated by the
 #    exact recursive-CTE DuckDB oracle, not self-checked;
 # 3. the bench report and the oracle verdict merge into one artifact.
 set -e
