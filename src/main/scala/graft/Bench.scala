@@ -144,38 +144,15 @@ object Bench {
       catch { case _: Throwable => () }
       spark.catalog.clearCache()
     }
-    // Pin sim_ann_ivfpq's measured path. The catalog entry serves from
-    // the at-rest index when a fresh one exists and trains per call
-    // otherwise — so without this, rep 1 could train while reps 2+
-    // serve (sim_ann_ivfpq_served writes the marker mid-pass), and the
-    // reported min would depend on pass order and whatever index a
-    // PRIOR run left in /tmp: incomparable across rounds and hosts.
-    // Building (or refreshing) the index here, OUTSIDE the timed
-    // window, makes every timed rep of both ivfpq entries measure the
-    // serving path; the train-per-call cost is recorded separately in
-    // BASELINE.md's build/serve split.
-    // Prebuild elapsed goes into the report: when no fresh index was at
-    // rest this is the full train+build cost at this SF; when one was
-    // fresh it is just the marker check (~ms), so the number also
-    // records WHICH case this run hit.
-    var ivfpqPrebuildS = -1.0
-    if (selected.contains("sim_ann_ivfpq") || selected.contains("sim_ann_ivfpq_served")) {
-      try {
-        val t0 = System.nanoTime()
-        graft.operators.Similarity.ivfPqServed(spark, sfDir): Unit
-        ivfpqPrebuildS = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          s"[bench] ivfpq served index at rest (prebuild ${ivfpqPrebuildS}s): " +
-            "all sim_ann_ivfpq reps measure the serving path")
-      } catch { case e: Throwable => System.err.println(s"[bench] ivfpq prebuild: $e") }
-      spark.catalog.clearCache()
-    }
     // Timed reps, keep the min: single-shot numbers swing several
     // seconds with GC/JIT phase noise even after warmup. Reps are
     // INTERLEAVED as full catalog passes (pass 1 runs every query once,
     // then pass 2, ...) rather than back-to-back per query, so a
     // query's reps sit a whole catalog pass apart and the min is robust
-    // to any contention burst shorter than a pass.
+    // to any contention burst shorter than a pass. Entries that serve
+    // state at rest (q13_bucketed_join, dedup_incremental_bucketed,
+    // sim_ann_ivfpq_served) build it in the first timed pass, so with
+    // reps >= 2 the min reads the serving time.
     // A failed rep must NOT contribute its time-to-failure — a broken
     // query would otherwise read as a performance win — so failures
     // record -1. malformed/zero values must not crash the bench or make
@@ -262,7 +239,7 @@ object Bench {
       s"""{"metric":"total","value":${jsonNum(total)},""" +
         s""""unit":"sec","sf":"$sfDir","cpus":"$cpus","master":"$master",""" +
         s""""reps":$nReps,"generated_at":"${java.time.Instant.now()}",""" +
-        s""""ivfpq_prebuild_s":${jsonNum(ivfpqPrebuildS)},"excluded":$excludedJson,""" +
+        s""""excluded":$excludedJson,""" +
         s""""queries":$qs,"per_rep":$perRepJson,"task_metrics":$taskJson}"""
     try {
       Option(reportPath.getParent).foreach(java.nio.file.Files.createDirectories(_): Unit)

@@ -104,21 +104,10 @@ object QualityHarness {
     // served == inline is an EXACT property (same algebra over at-rest
     // artifacts): gate the row-identity fraction at 1.0, which carries
     // the inline recall floor over to the served path by construction.
-    // The inline side MUST be the corpus-parameterized ivfPqTopKOver
-    // (train-per-call, never consults the served-index marker) — the
-    // catalog entry ivfPqTopK serves from the at-rest index when one
-    // exists, which would turn this gate into served-vs-served: a
-    // tautology that passes straight through a serving-path regression.
-    // The stride (and the emitted query_mod column) must match the
-    // served side BY CONSTRUCTION — ivfPqServed derives its stride from
-    // the corpus size, so a stride-1 inline call would fail the gate at
-    // any gate corpus past ~316k rows for query-set reasons, not a
-    // serving regression. Metadata-only count, same derivation.
-    val gateStride = Similarity.annQueryStrideFor(
-      Tables.load(spark, sfDir, "embeddings").count())
-    val inline = Similarity.ivfPqTopKOver(
-      Tables.loadBalanced(spark, sfDir, "embeddings"),
-      queryStride = gateStride, emitMod = true).collect().toSeq
+    // The catalog entry ivfPqTopK trains per call and derives the same
+    // metadata stride (and query_mod column) as ivfPqServed, so the two
+    // sides compare identical query sets at any corpus size.
+    val inline = Similarity.ivfPqTopK(spark, sfDir).collect().toSeq
     spark.catalog.clearCache()
     val served = Similarity.ivfPqServed(spark, sfDir).collect().toSeq
     spark.catalog.clearCache()
@@ -242,12 +231,10 @@ object QualityHarness {
       g
     }
     // inline ivfpq collected ONCE: feeds its recall row AND the
-    // served-identity row below (same de-tautologized inline side as
-    // the driver-SF gate — train-per-call, never the served marker).
-    // Stride + query_mod column matched to the served side by the same
-    // metadata-derived arithmetic (see the driver-SF gate's note).
-    val inline = Similarity.ivfPqTopKOver(corpus,
-      queryStride = corpusStride, emitMod = true).collect()
+    // served-identity row below (the train-per-call catalog entry, as
+    // in the driver-SF gate; its stride is corpusStride by the same
+    // metadata-derived arithmetic).
+    val inline = Similarity.ivfPqTopK(spark, corpusDir).collect()
     spark.catalog.clearCache()
     val ivfpqGate = Gate(s"sim_ann_ivfpq@$tag", "corpus_recall_vs_exact_at_10",
       // measured 0.95 at sf1 vs plain IVF's 0.97 coarse ceiling;

@@ -54,16 +54,18 @@ object RetailPipeline {
   private val lastMerged =
     new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[DataFrame]]()
 
-  private def persistMerged(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
-    lastMerged.synchronized {
-      val prev = lastMerged.put(spark, new java.lang.ref.WeakReference(persisted))
-      if (prev != null) {
-        val d = prev.get()
-        if (d != null && (d ne persisted)) d.unpersist(blocking = false)
-      }
-    }
+  private def persistMerged(df: DataFrame): DataFrame = lastMerged.synchronized {
+    // The cache matches plans, not frames. So release the previous copy
+    // BEFORE persisting (releasing after would evict a same-plan
+    // rebuild's cache too), and reuse a same-plan copy this map no
+    // longer reaches (its frame was collected, or another session built
+    // it) instead of caching already cached data.
+    Option(lastMerged.get(df.sparkSession)).flatMap(r => Option(r.get()))
+      .foreach(_.unpersist(blocking = false))
+    val persisted =
+      if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+      else df
+    lastMerged.put(df.sparkSession, new java.lang.ref.WeakReference(persisted))
     persisted
   }
 

@@ -64,11 +64,12 @@ object Bucketing {
     if (fs.exists(loc)) fs.delete(loc, true): Unit
   }
 
-  /** Digest of a source table's file listing — qualified root path +
-    * per-file (relative path, size, mtime) — for [[ensureBucketed]]'s
-    * freshness decision. None (missing/unreadable) => caller rebuilds,
-    * the safe direction. Same contract as the served ANN index's
-    * corpus fingerprint. */
+  /** Digest of a source's file listing — qualified root path +
+    * per-file (relative path, size, mtime) — for [[ensureBuilt]]'s
+    * freshness decision. Driver-side metadata only, resolved through
+    * the Hadoop FileSystem API, so every scheme the job can read
+    * fingerprints the same bytes the same way. None (missing,
+    * unreadable or empty) => caller rebuilds, the safe direction. */
   def sourceFingerprint(spark: SparkSession, path: String): Option[String] =
     try {
       val root = new org.apache.hadoop.fs.Path(path)
@@ -96,40 +97,49 @@ object Bucketing {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Stamps of bucket tables this JVM has built: table -> stamp.
+  /** Stamps of the state at rest this JVM has built: key -> stamp.
     * In-JVM only, deliberately: cross-JVM reuse would require
-    * re-registering the bucket spec in a fresh in-memory catalog,
-    * and a rebuild is the safe answer there. */
+    * re-registering the bucket spec in a fresh in-memory catalog, and
+    * a stamp this JVM wrote can never come from an older binary — a
+    * rebuild is the safe answer for anything else. */
   private val builtStamps = scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def resetBuiltStamps(): Unit = builtStamps.clear()
-  /** Observability probe for the spec: rebuilds performed by
-    * [[ensureBucketed]] (same pattern as Tables.listingWalks). */
+  /** Observability probe for the specs: rebuilds performed by
+    * [[ensureBuilt]] (same pattern as Tables.listingWalks). */
   private[graft] val ensureRebuilds = new java.util.concurrent.atomic.AtomicLong
 
-  /** Build `table` from `df` only when this JVM has not already built
-    * it from identical source state — the production bucketing shape:
-    * a fact is bucketed when it is (re)loaded, then joined many times
-    * at rest; paying the bucket shuffle once per join would cancel the
-    * point of bucketing. `fingerprint` (from [[sourceFingerprint]])
-    * keys the decision: None always rebuilds, a changed source
-    * fingerprint (regenerated table, different sfDir in the same JVM)
-    * rebuilds, an unchanged one skips. Serialized in-JVM; concurrent
-    * cross-process builders of the SAME warehouse are out of contract
-    * (as with the served ANN index, production serializes table
-    * maintenance in the scheduler). */
-  def ensureBucketed(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String], fingerprint: Option[String]): Unit = synchronized {
-    val stamp = fingerprint.map(fp =>
-      s"v1#b$buckets#k${keys.mkString(",")}#$fp")
-    val fresh = stamp.exists(s => builtStamps.get(table).contains(s)) &&
-      df.sparkSession.catalog.tableExists(table)
+  /** Run `build` only when this JVM has not already built `key` from
+    * identical source state and the built state is still `present` —
+    * the rule for everything kept at rest (bucketed tables, the served
+    * ANN index): built once, then served many times; paying the build
+    * per call would cancel the point of keeping it. `fingerprint`
+    * (from [[sourceFingerprint]]) keys the decision: None always
+    * rebuilds, a changed source fingerprint (regenerated source,
+    * different sfDir in the same JVM) rebuilds, an unchanged one
+    * skips. Serialized in-JVM; concurrent cross-process builders of the
+    * SAME warehouse are out of contract (production serializes table
+    * and index maintenance in the scheduler). */
+  def ensureBuilt(key: String, fingerprint: Option[String], present: => Boolean)
+      (build: => Unit): Unit = synchronized {
+    val fresh = fingerprint.exists(s => builtStamps.get(key).contains(s)) && present
     if (!fresh) {
       ensureRebuilds.incrementAndGet(): Unit
-      rewriteBucketed(df, table, buckets, keys)
-      stamp match {
-        case Some(s) => builtStamps(table) = s
-        case None    => builtStamps.remove(table): Unit
+      build
+      fingerprint match {
+        case Some(s) => builtStamps(key) = s
+        case None    => builtStamps.remove(key): Unit
       }
     }
   }
+
+  /** Build bucketed `table` from `df` under the [[ensureBuilt]] rule —
+    * the production bucketing shape: a fact is bucketed when it is
+    * (re)loaded, then joined many times at rest. The stamp also
+    * carries the bucket spec, so a different spec rebuilds. */
+  def ensureBucketed(df: DataFrame, table: String, buckets: Int,
+      keys: Seq[String], fingerprint: Option[String]): Unit =
+    ensureBuilt(table, fingerprint.map(fp => s"v1#b$buckets#k${keys.mkString(",")}#$fp"),
+      df.sparkSession.catalog.tableExists(table)) {
+      rewriteBucketed(df, table, buckets, keys)
+    }
 }

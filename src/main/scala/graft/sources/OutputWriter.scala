@@ -161,22 +161,16 @@ object OutputWriter {
       val staged = plan.checkpoint(eager = true)
       writeBack(staged.select(cols.map(col).toIndexedSeq: _*))
     } finally {
+      val ckpt = new org.apache.hadoop.fs.Path(ckptDir.toUri)
+      val fs = ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
       prevCkpt match {
         case Some(dir) =>
           spark.sparkContext.setCheckpointDir(dir)
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(ckptDir.toFile)
+          fs.delete(ckpt, true): Unit
         case None =>
           // keep the dir valid — the context still points at it (see
           // the Scaladoc); only the per-call checkpoint contents go.
-          Option(ckptDir.toFile.listFiles).foreach(_.foreach { f =>
-            def rm(g: java.io.File): Unit = {
-              Option(g.listFiles).foreach(_.foreach(rm)); g.delete(): Unit
-            }
-            rm(f)
-          })
+          fs.listStatus(ckpt).foreach(st => fs.delete(st.getPath, true): Unit)
       }
     }
   }

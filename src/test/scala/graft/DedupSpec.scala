@@ -14,6 +14,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(exact.nonEmpty, "test data must contain planted near-dups")
     assert(lsh === exact,
       s"LSH missed ${exact.diff(lsh)} / fabricated ${lsh.diff(exact)}")
+    spark.catalog.clearCache()
   }
 
   test("near-dup pairs are also close in simhash space") {
@@ -26,6 +27,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     // 2*found avoids Int-division vacuity (size/2 == 0 for one pair)
     assert(jacPairs.isEmpty || (found >= 1 && 2 * found >= jacPairs.size),
       s"simhash found $found of ${jacPairs.size} very-near dups at hamming<=3")
+    spark.catalog.clearCache()
   }
 
   test("large-star/small-star closes the past-cap chain min-label cannot, in O(log^2) rounds") {
@@ -38,6 +40,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 40L).forall(got(_) == 1L), s"chain must collapse to min label, got $got")
     assert(rounds <= 12, s"star alternation must be diameter-proof, ran $rounds rounds")
+    spark.catalog.clearCache()
   }
 
   test("componentLabels matches a union-find on random, path and star graphs") {
@@ -70,6 +73,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       val got = Dedup.componentLabels(spark, (1L to n).toDF("doc_id"),
         edges.toDF("doc_i", "doc_j"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      spark.catalog.clearCache()
       assert(got === unionFind(n, edges), s"$name: labels differ from union-find")
     }
   }
@@ -77,8 +81,10 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
   test("clusters: pair endpoints co-clustered, keeper is component min") {
     val labels = Dedup.clusters(spark, SF).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    spark.catalog.clearCache()
     val pairs = Dedup.minhashLsh(spark, SF).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
+    spark.catalog.clearCache()
     assert(pairs.nonEmpty)
     pairs.foreach { case (i, j) =>
       assert(labels(i) === labels(j), s"pair ($i,$j) split across clusters")
@@ -106,7 +112,9 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
         s"shingles3_h64(${Dedup.toksSpark})"))
       .select("doc_id", "sh")
     val uncapped = Dedup.ngramCandidates(docs, maxDf = Long.MaxValue).count()
+    spark.catalog.clearCache()
     val capped = Dedup.ngramCandidates(docs, maxDf = 8).count()
+    spark.catalog.clearCache()
     // every doc shares the boilerplate shingles -> uncapped candidates
     // are quadratic in the corpus; the cap removes exactly that blowup
     assert(uncapped >= 40L * 39 / 2, s"hot shingle should fan out, got $uncapped")
@@ -115,6 +123,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     // shingles' contribution to the intersection) are identical
     val full = Dedup.ngramJaccardCapped(docs, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    spark.catalog.clearCache()
     val withCap = Dedup.ngramJaccardCapped(docs, 8)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(full.keySet === Set((100L, 101L)) && withCap === full)
@@ -140,8 +149,9 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
         s"shingles3_h64(${Dedup.toksSpark})"))
       .select("doc_id", "sh")
     def pairs(maxDf: Long): Set[(Long, Long)] =
-      Dedup.containmentCapped(docs, maxDf)
+      try Dedup.containmentCapped(docs, maxDf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally spark.catalog.clearCache()
     // uncapped: short ⊂ long -> containment(100 -> 101) = 1.0 reported
     assert(pairs(Long.MaxValue).contains((100L, 101L)),
       "uncapped containment must report the embedded short doc")
@@ -156,6 +166,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
   test("simhash banding: 6x10-bit bands find the same hamming<=3 pairs as 4x15") {
     val p4 = Dedup.simhashPairs(spark, SF)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.catalog.clearCache()
     val p6 = Dedup.simhashPairs(spark, SF, nBands = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // both band counts are exact for hamming <= 3 by pigeonhole, so the
@@ -187,6 +198,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
   test("clusters reliable-checkpoint path matches the local path") {
     val local = Dedup.clusters(spark, SF).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.catalog.clearCache()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
@@ -201,6 +213,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       // Option(null) → None inside setCheckpointDir: genuinely clears
       // the dir so later clusters() calls exercise the local path again
       spark.sparkContext.setCheckpointDir(null)
+      spark.catalog.clearCache()
       assert(spark.sparkContext.getCheckpointDir.isEmpty,
         "checkpoint dir must be cleared for later suites")
     }
@@ -423,6 +436,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(!got.contains((2L, 1L)), "the big doc is NOT contained in the small one")
     assert(got.contains((3L, 4L)) && got.contains((4L, 3L)),
       s"symmetric near-dups must surface in both directions: $got")
+    spark.catalog.clearCache()
     // jaccard at 0.8 misses the subset pair — that's the operator's point
     val jac = Dedup.ngramJaccardCapped(docs, Long.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -612,6 +626,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     // same verified pairs as the plain batch-vs-index probe
     val got = Dedup.incrementalBucketed(spark, SF).collect().toSeq
     val want = Dedup.incrementalDedup(spark, SF).collect().toSeq
+    spark.catalog.clearCache()
     assert(got === want, "bucketed probe must produce identical verified pairs")
 
     // the at-rest index must plan WITHOUT an Exchange above its scan,
@@ -657,6 +672,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     val got = spark.table("graft_docdedup_spec").collect().map(key).toSet
     val want = Dedup.incrementalBucketed(spark, SF).collect().map(key).toSet
+    spark.catalog.clearCache()
     assert(got === want, "stream-accumulated pairs must equal the batch probe")
     assert(want.nonEmpty, "fixture corpus must contain batch-vs-index near-dups")
     // drop the view BEFORE its backing table — a dangling view in the
@@ -694,6 +710,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       "a restart must not reprocess already-committed files (duplicate pairs)")
     val want = Dedup.incrementalBucketed(spark, SF).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    spark.catalog.clearCache()
     assert(rows.toSet === want, "resumed stream must converge to the batch probe")
     assert(rows.size >= afterDay1.toInt,
       "the day-2 run must keep day 1's committed rows")

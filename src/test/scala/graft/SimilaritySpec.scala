@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
+import graft.sources.Bucketing
 
 class SimilaritySpec extends AnyFunSuite with SparkSuite {
 
@@ -97,10 +98,13 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // widened-stride artifact (sf100sub: qmod 4001) must be schema-
     // distinguishable from a historic %50 run. Spec/QUALITY fixtures
     // (the bare *Over forms) keep the 4-column shape.
-    Seq(Similarity.annLsh(spark, SF), Similarity.ivfTopK(spark, SF),
-        Similarity.ivfPqTopK(spark, SF)).foreach { df =>
+    // one entry at a time: each persists its shared sub-frames when
+    // built, and the IVF pair share the same coarse centroids
+    Seq("sim_ann_lsh", "sim_ann_ivf", "sim_ann_ivfpq").map(Similarity.queries).foreach { entry =>
+      val df = entry(spark, SF)
       assert(df.columns.last === "query_mod")
       assert(df.select("query_mod").head().getLong(0) === 50L)
+      spark.catalog.clearCache()
     }
     assert(Similarity.annLshOver(
       graft.Tables.loadBalanced(spark, SF, "embeddings")).columns
@@ -167,6 +171,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // nprobe=4 of K=16 lists ≈ 25% scanned; co-clustered members land
     // in the probed lists, so recall must far exceed that fraction
     assert(recall > 0.9, s"IVF planted recall $recall (random scan ≈ 0.25)")
+    spark.catalog.clearCache()
   }
 
   test("IVF: exact scores, ~nprobe/K of the corpus scanned, beats random") {
@@ -187,6 +192,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // nprobe=4 of K=16 lists ≈ 25% of the corpus; require clearly better
     // than a random 25% scan even on near-uniform synthetic vectors.
     assert(recall > 0.35, s"IVF recall $recall not better than random scan")
+    spark.catalog.clearCache()
   }
 
   test("IVF-PQ recall on planted clusters discriminates from a random scan") {
@@ -198,6 +204,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // only, so planted recall must match plain IVF's floor (measured
     // 1.0 on the fixture).
     assert(recall > 0.9, s"IVF-PQ planted recall $recall (random scan ≈ 0.25)")
+    spark.catalog.clearCache()
   }
 
   test("IVF-PQ refine emits true cosine scores, never quantized ones") {
@@ -246,9 +253,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
       // identical algebra from at-rest artifacts: output must match the
       // inline (train-per-call) query row for row — which also carries
       // the planted-recall guarantee over to the served path unchanged.
-      // ivfPqTopKOver is used deliberately: the catalog's ivfPqTopK
-      // now reuses a fresh index itself, so only the corpus-
-      // parameterized form is guaranteed to train per call here.
       val inline = Similarity
         .ivfPqTopKOver(Tables.loadBalanced(spark, SF, "embeddings"))
         .collect().toSeq
@@ -274,46 +278,41 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   /** Staleness cycle shared between the plain-path and the
-    * `file:`-scheme runs: the freshness layer resolves corpora through
-    * the Hadoop FileSystem API, so any scheme the job can read must
-    * behave identically — build, stamp, invalidate on regeneration,
-    * transparent rebuild. */
+    * `file:`-scheme runs: the build-once rule for state at rest
+    * (Bucketing.ensureBuilt) resolves corpora through the Hadoop
+    * FileSystem API, so any scheme the job can read must behave
+    * identically — a repeat call on unchanged corpus bytes serves
+    * without rebuilding; a corpus regenerated at the same path
+    * re-fingerprints and rebuilds. */
   private def stalenessCycle(scheme: String): Unit = {
-    // the round-9 marker keyed freshness on (dir path, format version)
-    // only — a corpus REGENERATED at the same path (the normal
-    // per-round workflow) would silently serve neighbors from the
-    // stale index. The stamp now carries a content fingerprint (a hash
-    // over per-file name/size/mtime tuples), so regeneration invalidates.
     val corpusDir = java.nio.file.Files
       .createTempDirectory("graft_fp_corpus").toFile
     val dir = scheme + corpusDir.getPath
+    val dst = new java.io.File(corpusDir, "embeddings.parquet")
+    def serve(): Seq[org.apache.spark.sql.Row] =
+      try Similarity.ivfPqServed(spark, dir).collect().toSeq
+      finally spark.catalog.clearCache()
     try {
-      val dst = new java.io.File(corpusDir, "embeddings.parquet")
       java.nio.file.Files.copy(
         new java.io.File(SF, "embeddings.parquet").toPath, dst.toPath): Unit
-      val before = Similarity.ivfPqServed(spark, dir).collect().toSeq
-      spark.catalog.clearCache()
+      val built = Bucketing.ensureRebuilds.get()
+      val before = serve()
       assert(before.nonEmpty)
-      assert(Similarity.servedIndexIfFresh(dir).isDefined,
-        "index must be at rest and fresh right after the build")
+      assert(Bucketing.ensureRebuilds.get() === built + 1, "the first call builds")
+      assert(serve() === before)
+      assert(Bucketing.ensureRebuilds.get() === built + 1,
+        "a repeat call on the same corpus must serve without rebuilding")
       // "regenerate" the corpus: same path, newer mtime — the cheapest
       // observable consequence of any rewrite
       assert(dst.setLastModified(dst.lastModified() + 60000))
-      assert(Similarity.servedIndexIfFresh(dir).isEmpty,
-        "a regenerated corpus must invalidate the at-rest index")
-      // and the serving entry transparently rebuilds: output identical
-      // (the bytes really are the same here), marker fresh again
-      val after = Similarity.ivfPqServed(spark, dir).collect().toSeq
-      spark.catalog.clearCache()
+      val after = serve()
+      assert(Bucketing.ensureRebuilds.get() === built + 2,
+        "a regenerated corpus must rebuild the index")
       assert(after === before, "rebuild from identical bytes must reproduce the output")
-      assert(Similarity.servedIndexIfFresh(dir).isDefined)
     } finally {
       rmTree(corpusDir)
-      // the index built for this throwaway corpus lives under tmpdir,
-      // keyed by the random temp path — remove it too or every run leaks
-      // one graft_ivfpq_index_* directory
-      rmTree(new java.io.File(Similarity.servedIndexPath(dir)._1))
-      spark.catalog.clearCache()
+      val index = new org.apache.hadoop.fs.Path(Similarity.servedIndexDir(spark, dir))
+      index.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(index, true): Unit
     }
   }
 
@@ -326,88 +325,25 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a URI-scheme corpus path fingerprints instead of degrading to never-fresh") {
-    // the round-11 layer walked corpora with java.io.File, which cannot
-    // resolve scheme-qualified paths — ANY "file:/…" (or hdfs://…)
-    // corpus returned stamp None, i.e. rebuild-on-every-call. The
-    // Hadoop FileSystem layer resolves every scheme the job can read,
-    // and the fingerprint (relative paths are stripped against the
-    // qualified root) is identical however the same bytes are addressed.
+    // a java.io.File walk cannot resolve scheme-qualified paths, so a
+    // "file:/…" (or hdfs://…) corpus would fingerprint None, i.e.
+    // rebuild on every call. The Hadoop FileSystem walk resolves every
+    // scheme the job can read, and the fingerprint (relative paths are
+    // stripped against the qualified root) is identical however the
+    // same bytes are addressed.
     val corpusDir = java.nio.file.Files
       .createTempDirectory("graft_uri_corpus").toFile
+    val dst = new java.io.File(corpusDir, "embeddings.parquet")
     try {
       java.nio.file.Files.copy(
-        new java.io.File(SF, "embeddings.parquet").toPath,
-        new java.io.File(corpusDir, "embeddings.parquet").toPath): Unit
-      val plain = Similarity.servedIndexPath(corpusDir.getPath)._3
+        new java.io.File(SF, "embeddings.parquet").toPath, dst.toPath): Unit
+      val plain = Bucketing.sourceFingerprint(spark, dst.getPath)
         .getOrElse(fail("plain local corpus must fingerprint"))
-      val uri = Similarity.servedIndexPath("file:" + corpusDir.getPath)._3
+      val uri = Bucketing.sourceFingerprint(spark, "file:" + dst.getPath)
         .getOrElse(fail("file:-scheme corpus must fingerprint, not degrade"))
-      def fp(stamp: String): String = stamp.substring(stamp.lastIndexOf('#') + 1)
-      assert(fp(plain) === fp(uri),
-        "the content fingerprint must not depend on how the path is spelled")
+      assert(plain === uri,
+        "the fingerprint must not depend on how the path is spelled")
     } finally rmTree(corpusDir)
-  }
-
-  test("a marker from an older index format forces a transparent rebuild") {
-    // the upgrade path a served 100 TB index actually hits: the binary
-    // is upgraded (indexFormatVersion bumped), the at-rest index was
-    // written by the previous version. Simulated by rewriting the
-    // marker's "#v<N>#" to "#v0#" — exactly what a stale marker looks
-    // like to the new binary. Serving must notice, rebuild, and return
-    // identical output (same corpus bytes, same algebra).
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft_ver_corpus").toFile
-    val dir = corpusDir.getPath
-    try {
-      java.nio.file.Files.copy(
-        new java.io.File(SF, "embeddings.parquet").toPath,
-        new java.io.File(corpusDir, "embeddings.parquet").toPath): Unit
-      val before = Similarity.ivfPqServed(spark, dir).collect().toSeq
-      spark.catalog.clearCache()
-      assert(before.nonEmpty)
-      val (_, marker, stampOpt) = Similarity.servedIndexPath(dir)
-      val stamp = stampOpt.getOrElse(fail("local corpus must fingerprint"))
-      assert(stamp.matches(".*#v\\d+#.*"), s"stamp missing version segment: $stamp")
-      java.nio.file.Files.write(java.nio.file.Paths.get(marker.toUri.getPath),
-        stamp.replaceFirst("#v\\d+#", "#v0#")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      assert(Similarity.servedIndexIfFresh(dir).isEmpty,
-        "an old-format marker must read as stale")
-      val after = Similarity.ivfPqServed(spark, dir).collect().toSeq
-      spark.catalog.clearCache()
-      assert(after === before, "format-version rebuild must reproduce the output")
-      assert(Similarity.servedIndexIfFresh(dir).isDefined,
-        "rebuild must re-stamp at the current format version")
-    } finally {
-      rmTree(corpusDir)
-      rmTree(new java.io.File(Similarity.servedIndexPath(dir)._1))
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("an unfingerprintable corpus dir is never fresh, even with a colluding marker") {
-    // an empty or unresolvable corpus listing (no files yet, scheme
-    // with no loadable FileSystem, permission failure) yields stamp
-    // None: no marker content can match, and serving never writes a
-    // marker for such a dir — rebuild-always beats serve-stale.
-    // Simulated with an empty local dir plus a marker hand-written
-    // with the constant stamp a degenerate fingerprint would produce.
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft_nofp_corpus").toFile   // no embeddings.parquet inside
-    val dir = corpusDir.getPath
-    val (indexDir, marker, stampOpt) = Similarity.servedIndexPath(dir)
-    val markerNio = java.nio.file.Paths.get(marker.toUri.getPath)
-    try {
-      assert(stampOpt.isEmpty, "empty listing must not produce a stamp")
-      java.nio.file.Files.createDirectories(markerNio.getParent)
-      java.nio.file.Files.write(markerNio,
-        s"$dir#v4#n0b0m0".getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      assert(Similarity.servedIndexIfFresh(dir).isEmpty,
-        "no marker content may ever read fresh for an unfingerprintable corpus")
-    } finally {
-      rmTree(corpusDir)
-      rmTree(new java.io.File(indexDir))
-    }
   }
 
   test("PQ: codes in range, seeds self-quantize at zero error") {

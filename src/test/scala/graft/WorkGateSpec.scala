@@ -94,7 +94,7 @@ object WorkGateSpec {
 
   /** Entries whose first call builds the state at rest they serve from. */
   val AtRest: Seq[String] = Seq("q13_bucketed_join", "dedup_incremental_bucketed",
-    "sim_ann_ivfpq", "sim_ann_ivfpq_served")
+    "sim_ann_ivfpq_served")
 
   /** Counters that must match exactly. */
   val ExactCounters: Seq[String] = Seq("jobs", "stages", "shuffle_stages", "tasks",
