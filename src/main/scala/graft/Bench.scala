@@ -184,7 +184,7 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // cache teardown of this query's persist()s happens OUTSIDE the
+      // releasing this query's materialized frames happens OUTSIDE the
       // timed window so the next query isn't charged for it
       spark.catalog.clearCache()
       if (ok) elapsed else -1.0

@@ -29,8 +29,8 @@ object Explain {
           failed = true
           println(s"[explain] $name failed: $e")
         }
-        // catalog convention (SparkEntry): queries may persist() shared
-        // sub-frames; every entry point clears the cache between queries
+        // the cache rule (Materialized): the entry point releases the
+        // frames a query shared
         spark.catalog.clearCache()
       }
     }

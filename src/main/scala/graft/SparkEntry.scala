@@ -14,13 +14,16 @@ import graft.operators._
   * entry that ANSI SQL can express; the rest get rows-only checks and
   * ScalaTest specs.
   *
-  * Cache convention: a catalog query may `persist()` a sub-frame that
-  * several of its branches share (Dedup's pair indexes, Curation's
-  * tokenized projections). Ownership of the teardown sits with the
-  * ENTRY POINT, not the query: Verify, Bench, and Explain each call
+  * Cache rule: a sub-frame that several branches of a query share
+  * (Dedup's pair indexes, Curation's tokenized projections) goes
+  * through [[Materialized]], which persists it and fills it before
+  * any consumer runs; nothing else in the engine persists. The ENTRY
+  * POINT releases it, not the query: Verify, Bench and Explain call
   * `spark.catalog.clearCache()` after every query, and any other
   * caller (notebook, long-lived service) must do the same — a query
-  * cannot unpersist its own result before the caller materializes it.
+  * cannot unpersist a frame its result still reads. Note that
+  * building a query's frame already runs the jobs that fill its
+  * shared sub-frames.
   *
   * Function convention: every `queries` entry first readies the
   * session it is handed with [[GraftSession.prepare]]: the graft native

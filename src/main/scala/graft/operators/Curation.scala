@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** Corpus-curation operators — the second tier of a training-data
   * pipeline, after [[Dedup]]/[[TextAnalysis]] have cleaned the corpus:
@@ -53,16 +53,12 @@ object Curation {
     "list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])"
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    // persist the (doc_id, sh) projection: the eval-hash side, the
-    // corpus-explode side, and the final n_ngrams projection all branch
-    // from it, and without reuse the expensive part — regex tokenization
-    // + shingling of every document — executes twice in one query.
-    // Freed by the catalog-wide convention (SparkEntry: every entry
-    // point clears the session cache between queries).
-    val docsSh = Tables.loadBalanced(spark, dir, "documents")
+    // the (doc_id, sh) projection, shared by the eval-hash side, the
+    // corpus-explode side and the final n_ngrams projection: regex
+    // tokenization + shingling of every document runs once
+    val docsSh = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .select(col("doc_id"), expr(s"shingles3(${Dedup.toksSpark})").as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
+      .filter(size(col("sh")) > 0))
     val evalHashes = docsSh.filter(col("doc_id") % evalStride === 0)
       .select(explode(col("sh")).as("s"))
       .select(expr(Dedup.tokHash60Spark("s")).as("h"))
@@ -398,18 +394,14 @@ object Curation {
       .rowsBetween(Window.unboundedPreceding, -1)
     val wBuckets = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, -1)
-    // persist the narrow (doc_id, n_tokens, bucket) projection: both
-    // prefix-sum passes need it, and without reuse the expensive part —
-    // regex tokenization of every document — would run twice (the
-    // two-pass pattern only needs two passes over the SIZES, not the
-    // raw text). Freed by the catalog-wide convention (SparkEntry:
-    // every entry point clears the session cache between queries)
-    val sized = Tables.loadBalanced(spark, dir, "documents")
+    // the narrow (doc_id, n_tokens, bucket) projection, shared by both
+    // prefix-sum passes: the two-pass pattern needs two passes over
+    // the SIZES, not two regex tokenizations of the raw text
+    val sized = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(Dedup.toksSpark))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), size(col("toks")).as("n_tokens"),
-        expr(s"doc_id div $packIdsPerBucket").as("bucket"))
-      .persist()
+        expr(s"doc_id div $packIdsPerBucket").as("bucket")))
     val base = sized.withColumn("local_before",
       coalesce(sum(col("n_tokens")).over(wLocal), lit(0L)))
     val offsets = sized.groupBy("bucket")
@@ -465,13 +457,11 @@ object Curation {
   private[graft] val boilerplateThreshold = 0.5
 
   def boilerplate(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: both aggregates below branch from it (SparkEntry cache
-    // convention — entry points clear the session cache per query)
-    val bi = Tables.loadBalanced(spark, dir, "documents")
+    // shared by both aggregates below
+    val bi = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(Dedup.toksSpark))
       .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(bigramsSpark)).as("ngram"))
-      .persist()
+      .select(col("doc_id"), explode(expr(bigramsSpark)).as("ngram")))
     val top = bi.groupBy("ngram").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("ngram").asc)
       .limit(boilerplateTopK)
@@ -615,16 +605,14 @@ object Curation {
   private[graft] val manifestMinTokens = 5
 
   def trainManifest(spark: SparkSession, dir: String): DataFrame = {
-    // one narrow projection, persisted: keeper grouping, eval hashes,
-    // contamination hits, and the final assembly all branch from it
-    // (SparkEntry cache convention — entry points clear per query)
-    val base = Tables.loadBalanced(spark, dir, "documents")
+    // one narrow projection, shared by keeper grouping, eval hashes,
+    // contamination hits and the final assembly
+    val base = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(Dedup.toksSpark))
       .select(col("doc_id"), col("source"),
         md5(col("text").cast("binary")).as("tmd5"),
         size(col("toks")).as("n_tokens"),
-        expr("shingles3(toks)").as("sh"))
-      .persist()
+        expr("shingles3(toks)").as("sh")))
     val evalHashes = base.filter(col("doc_id") % evalStride === 0)
       .select(explode(col("sh")).as("s"))
       .select(expr(Dedup.tokHash60Spark("s")).as("h"))
@@ -716,19 +704,17 @@ object Curation {
   // sized, deliberately NOT broadcast (prune it with a min-count
   // filter to get the broadcast variant); (3) one per-doc count
   // aggregate. Tokenization runs once: the (doc_id, hash) projection
-  // is persisted across the model and scoring passes (freed by the
-  // catalog-wide session-cache convention).
+  // is shared by the model and scoring passes.
   // ---------------------------------------------------------------------
   private[graft] val lmRareMax = 2L
   private[graft] val lmRareCut = 0.5
 
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Tables.loadBalanced(spark, dir, "documents")
+    val grams = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(Dedup.toksSpark))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(bigramsSpark)).as("g"))
-      .select(col("doc_id"), expr(Dedup.tokHash60Spark("g")).as("h"))
-      .persist()
+      .select(col("doc_id"), expr(Dedup.tokHash60Spark("g")).as("h")))
     val model = grams.groupBy("h").agg(count(lit(1)).as("n_occ"))
     grams.join(model, Seq("h"))
       .groupBy("doc_id")
@@ -765,13 +751,11 @@ object Curation {
   // projection is scanned once.
   // ---------------------------------------------------------------------
   def sourceStats(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: the digest-count groupBy and the rollup join both
-    // consume it (SparkEntry cache convention: callers clearCache)
-    val docs = Tables.loadBalanced(spark, dir, "documents")
+    // shared by the digest-count groupBy and the rollup join
+    val docs = Materialized(Tables.loadBalanced(spark, dir, "documents")
       .select(col("source"), col("lang"),
         md5(col("text").cast("binary")).as("digest"),
-        size(expr(Dedup.toksSpark)).as("nt"))
-      .persist()
+        size(expr(Dedup.toksSpark)).as("nt")))
     val digestCounts = docs.groupBy("digest").agg(count(lit(1)).as("cnt"))
     docs.join(digestCounts, Seq("digest"))
       .groupBy("source")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** Deduplication suite over the `documents` and `embeddings` tables —
   * the operators a large-scale training-data pipeline runs before
@@ -251,7 +251,8 @@ object Dedup {
     * argmin measured in r21. The join form also lets AQE pick
     * broadcast/SMJ per scale. Kept the self-join. */
   private[graft] def ngramCandidates(docSh: DataFrame, maxDf: Long): DataFrame = {
-    val sh = hashedIndex(docSh).persist()
+    // shared by the DF stats and the cold-shingle anti-join
+    val sh = Materialized(hashedIndex(docSh))
     val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
     coldPairs(cold)
   }
@@ -313,15 +314,12 @@ object Dedup {
     * doc id, so nothing about the shape is quadratic in corpus
     * size. */
   private def pairIntersections(docSh: DataFrame, maxDf: Long): DataFrame = {
-    // persisted: feeds the DF stats, the pair self-join (via the
-    // exploded index), and both verification joins; without it the
-    // tokenize+shingle scan of every document runs four times
-    // (callers release via clearCache). sh sorted once per doc so
+    // shared by the DF stats, the pair self-join (via the exploded
+    // index) and both verification joins. sh sorted once per doc so
     // verification is a merge, not a per-pair hash set.
-    val docs = docSh.filter(size(col("sh")) > 0)
+    val docs = Materialized(docSh.filter(size(col("sh")) > 0)
       .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")).cast("long"))
-      .persist()
+      .withColumn("n", size(col("sh")).cast("long")))
     val sh = hashedIndex(docs)
     val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
     val candidates = coldPairs(cold)
@@ -445,12 +443,10 @@ object Dedup {
   /** Corpus-parameterized form over (doc_id, text) — shared by the
     * catalog query and the crafted-segment fixture in DedupSpec. */
   private[graft] def paragraphDedupOver(docs: DataFrame): DataFrame = {
-    // persisted: the distinct-doc count and the re-join both consume
-    // this frame, and their exchanges canonicalize differently ((h,
-    // doc_id) partial-agg vs raw rows on h) so ReuseExchange cannot
-    // fire — without the persist the tokenize+slice+hash scan of every
-    // document runs twice (callers release via clearCache)
-    val segs = docs
+    // shared by the distinct-doc count and the re-join, whose
+    // exchanges canonicalize differently ((h, doc_id) partial-agg vs
+    // raw rows on h), so ReuseExchange cannot share them
+    val segs = Materialized(docs
       .withColumn("toks", expr(toksSpark))
       .withColumn("nt", size(col("toks")))
       .filter(col("nt") > 0)
@@ -469,8 +465,7 @@ object Dedup {
         // corpora rather than a guarantee. Far beyond the old 32-bit
         // crc32 lane either way; an adversarial-input deployment would
         // swap h2 for a structurally different hash (sha2-derived).
-        xxhash64(lit("graft_seg_salt"), col("seg")).as("h2"))
-      .persist()
+        xxhash64(lit("graft_seg_salt"), col("seg")).as("h2")))
     val segDocs = segs.groupBy("h", "h2")
       .agg(countDistinct(col("doc_id")).as("nd"))
     segs.join(segDocs, Seq("h", "h2"))
@@ -552,8 +547,8 @@ object Dedup {
     // doc_id, sh (hashed shingles), n — shared by candidate generation
     // AND verification; the signature is deliberately NOT on this
     // frame so the two verification joins don't recompute 64
-    // permutations per doc. Persisted: three consumers, one
-    // tokenize+shingle-hash scan — and the cache holds 8-byte longs,
+    // permutations per doc. Three consumers, one tokenize+shingle-hash
+    // scan — and the cache holds 8-byte longs,
     // not ~30-byte shingle strings, so verification merge-counts longs
     // (the collision argument is the kernel's scaladoc; the
     // exact-string DuckDB oracle would catch one).
@@ -561,10 +556,9 @@ object Dedup {
     // so bands are unaffected) so verification can merge-count each
     // candidate pair with inter_count_sorted instead of allocating an
     // array_intersect hash set + result array per pair.
-    val docs = docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
+    val docs = Materialized(docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
       .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")))
-      .persist()
+      .withColumn("n", size(col("sh"))))
     val candidates = minhashCandidates(docs)
     // Exact verification: merge-count over the sorted hash arrays
     // (inter_count_sorted — one linear pass per pair, no per-pair
@@ -605,11 +599,10 @@ object Dedup {
   /** Over a HASHED-shingle (doc_id, sh: array<long>, n) frame — shared
     * by the catalog query and the planted-batch fixture in DedupSpec. */
   private[graft] def incrementalOver(docsShN: DataFrame): DataFrame = {
-    // persisted: band generation for both sides + two verification
-    // joins all branch from it (callers release via clearCache).
-    // Sorted once per doc so verification merge-counts (see
-    // minhashLsh).
-    val docs = docsShN.withColumn("sh", sort_array(col("sh"))).persist()
+    // shared by band generation for both sides and the two
+    // verification joins. Sorted once per doc so verification
+    // merge-counts (see minhashLsh).
+    val docs = Materialized(docsShN.withColumn("sh", sort_array(col("sh"))))
     val isBatch = col("doc_id") % batchStride === batchRes
     val newBands = minhashBands(docs.filter(isBatch))
     val idxBands = minhashBands(docs.filter(!isBatch)) // at rest in prod
@@ -696,11 +689,13 @@ object Dedup {
     val fp = graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/documents.parquet")
     val idxDocs = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
       .filter(!(col("doc_id") % batchStride === batchRes))
-      .persist()
-    graft.sources.Bucketing.ensureBucketed(
-      bandKeys(idxDocs), bandIdxTable, idxBuckets, Seq("band_key"), fp)
-    graft.sources.Bucketing.ensureBucketed(
-      idxDocs, idxDocsTable, idxBuckets, Seq("doc_id"), fp)
+    // shared by the two table builds, and filled only when one runs:
+    // ensureBucketed takes its frame by name, and a fresh index is the
+    // serving steady state
+    graft.sources.Bucketing.ensureBucketed(spark,
+      bandKeys(Materialized(idxDocs)), bandIdxTable, idxBuckets, Seq("band_key"), fp)
+    graft.sources.Bucketing.ensureBucketed(spark,
+      Materialized(idxDocs), idxDocsTable, idxBuckets, Seq("doc_id"), fp)
     idxDocs.unpersist(blocking = false): Unit
   }
 
@@ -729,9 +724,9 @@ object Dedup {
 
   def incrementalBucketed(spark: SparkSession, dir: String): DataFrame = {
     ensureIndexed(spark, dir)
-    val batch = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
-      .filter(col("doc_id") % batchStride === batchRes)
-      .persist() // feeds band generation AND the verification join
+    // shared by band generation and the verification join
+    val batch = Materialized(prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
+      .filter(col("doc_id") % batchStride === batchRes))
     probeIndexed(batch).orderBy("doc_new", "doc_idx")
   }
 
@@ -851,9 +846,9 @@ object Dedup {
     require(60 % nBands == 0, s"nBands must divide 60, got $nBands")
     val width = 60 / nBands
     val mask = (1L << width) - 1
-    // persisted: both self-join sides read it; the md5-per-token
-    // simhash pass is the expensive part (callers release via clearCache)
-    val sims = simhashes(spark, dir).persist()
+    // shared by both self-join sides; the md5-per-token simhash pass
+    // is the expensive part
+    val sims = Materialized(simhashes(spark, dir))
     val banded = sims.select(col("doc_id"), col("simhash"),
         explode(expr(
           s"transform(sequence(0, ${nBands - 1}), b -> named_struct('band_idx', b, 'band_val', shiftright(simhash, b * $width) & $mask))"))
@@ -919,9 +914,9 @@ object Dedup {
        |FROM toks_t WHERE len(toks) > 0)""".stripMargin
 
   def simhashWidePairs(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: both self-join sides; two md5-per-token majority
-    // votes are the expensive part (callers release via clearCache)
-    val sims = simhashesWide(spark, dir).persist()
+    // shared by both self-join sides; two md5-per-token majority
+    // votes are the expensive part
+    val sims = Materialized(simhashesWide(spark, dir))
     val banded = sims.select(col("doc_id"), col("sim_lo"), col("sim_hi"),
         explode(expr(
           """transform(sequence(0, 3), b -> named_struct(
@@ -1341,18 +1336,16 @@ object Dedup {
     * collapsed form completes in minutes with zero candidate blow-up. */
   private[graft] def embeddingLshOver(corpus: DataFrame,
       forceGeometry: Option[(Int, Int)]): DataFrame = {
-    // 1. exact collapse: one shuffle by embedding bytes; persisted —
-    // feeds the rep frame, the distinct-count geometry pick, the
-    // within-group expansion, and both cross-expansion joins (callers
-    // release via clearCache)
+    // 1. exact collapse: one shuffle by embedding bytes, shared by the
+    // rep frame, the distinct-count geometry pick, the within-group
+    // expansion, and both cross-expansion joins
     val wRep = Window.partitionBy(col("embedding"))
-    val members = corpus
-      .withColumn("rep_id", min(col("vec_id")).over(wRep))
-      .persist()
+    val members = Materialized(corpus
+      .withColumn("rep_id", min(col("vec_id")).over(wRep)))
     val reps = members.filter(col("vec_id") === col("rep_id"))
       .select(col("rep_id").as("vec_id"), col("embedding"))
     // the geometry is sized by the DISTINCT corpus — the only rows the
-    // banding ever sees; the count also materializes the members cache
+    // banding ever sees
     val nReps = reps.count()
     val (bandBits, nBands) = forceGeometry.getOrElse(lshBandGeometry(nReps))
     // Band packing (r22, the RUNBOOK "LSH band ladder past 8192 bits"
@@ -1376,13 +1369,12 @@ object Dedup {
       else (nBands.toLong * bandBits + 63) / 64
     val sigBits = 64 * sigWords
     val mask = (1L << bandBits) - 1
-    // persisted: feeds band explosion + both verification joins + the
+    // shared by band explosion, both verification joins and the
     // within-group cosine; the sigBits-dot signature pass only runs
     // over the distinct reps
-    val c = reps
+    val c = Materialized(reps
       .withColumn("norm", expr("vec_norm(embedding)"))
-      .withColumn("sig", expr(s"vec_sig(embedding, $sigBits)"))
-      .persist()
+      .withColumn("sig", expr(s"vec_sig(embedding, $sigBits)")))
     // in-word form for cleanly-dividing rungs (bit-identical to every
     // shipped artifact); flat cross-word slice otherwise — two
     // element_ats and a lazily-evaluated IF inside the same transform,
@@ -1514,23 +1506,25 @@ object Dedup {
     * slot; it is removed with the app's checkpoint dir.
     *
     * Without a checkpoint dir (single-JVM dev/test, where executor
-    * loss == JVM loss) localCheckpoint keeps the data in block-store —
-    * no durability requirement to impose on callers. */
+    * loss == JVM loss) a lazy localCheckpoint keeps the data in
+    * block-store — no durability requirement to impose on callers —
+    * and is filled by the first action on the returned frame, so the
+    * caller's next aggregate over it is the round's one pass. */
   private final class Truncator(spark: SparkSession) {
     private val reliableBase: Option[String] =
       spark.sparkContext.getCheckpointDir.map(d =>
         s"$d/graft-clusters-${java.util.UUID.randomUUID()}")
     private var slot = 0
 
-    /** Materializes `df` (one action) and returns a lineage-free
-      * equivalent. */
+    /** A lineage-free equivalent of `df`: written and read back with a
+      * checkpoint dir, else checkpointed by its first action. */
     def truncate(df: DataFrame): DataFrame = reliableBase match {
       case Some(base) =>
         val path = s"$base/slot$slot"
         slot = (slot + 1) % 2
         df.write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
-      case None => df.localCheckpoint()
+      case None => df.localCheckpoint(eager = false)
     }
   }
 
@@ -1559,9 +1553,10 @@ object Dedup {
     * component's minimum id — detected by an order-insensitive
     * edge-set checksum (count + hash sum; a collision could only end a
     * round EARLY, and only if two different edge multisets collide on
-    * both). The first truncation materializes the edge set once, so
-    * the caller's pair pipeline is evaluated exactly once. Returns the
-    * labels and the rounds run. */
+    * both). Each round's checksum is the action that fills its
+    * truncation (see [[Truncator]]); the first one materializes the
+    * edge set once, so the caller's pair pipeline is evaluated exactly
+    * once. Returns the labels and the rounds run. */
   private[graft] def propagateLabelsStar(spark: SparkSession, docs: DataFrame,
       pairs: DataFrame): (DataFrame, Int) = {
     val trunc = new Truncator(spark)
@@ -1706,11 +1701,10 @@ object Dedup {
         concat(lit("P"), expr(s"left(text, $levBlockChars)")).as("k"))
       .union(docs.select(col("doc_id"), col("text"),
         concat(lit("S"), expr(s"right(text, $levBlockChars)")).as("k")))
-    // hot keys are a tiny frame (empty on a non-templated corpus);
-    // persisted so the DF aggregate runs once, not once per join side
-    // (callers release via clearCache, as with the shingle index)
-    val hot = keys.groupBy("k").count().filter(col("count") > maxKeyDf)
-      .select("k").persist()
+    // hot keys are a tiny frame (empty on a non-templated corpus),
+    // shared by both join sides so the DF aggregate runs once
+    val hot = Materialized(keys.groupBy("k").count().filter(col("count") > maxKeyDf)
+      .select("k"))
     val cold = keys.join(hot, Seq("k"), "left_anti")
     val lhs = cold.select(col("k"),
       col("doc_id").as("doc_i"), col("text").as("text_i"))

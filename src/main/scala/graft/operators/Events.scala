@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** Event-stream analytics over the `events` table, batch-first (the
   * reference is a pure daily batch pipeline — SURVEY §2.10); the
@@ -308,14 +308,12 @@ object Events {
   // exchange under AQE).
   // ---------------------------------------------------------------------
   def retention(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: the cohort aggregate and the join probe both read the
-    // distinct (user, week) frame — one distinct shuffle instead of two
-    // (SparkEntry cache convention)
-    val weekly = Tables.loadEvents(spark, dir)
+    // the distinct (user, week) frame, shared by the cohort aggregate
+    // and the join probe: one distinct shuffle instead of two
+    val weekly = Materialized(Tables.loadEvents(spark, dir)
       .select(col("user_id"),
         expr("(sec - pmod(sec, 604800)) div 604800").as("wk"))
-      .distinct()
-      .persist()
+      .distinct())
     val cohorts = weekly.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
     weekly.join(cohorts, Seq("user_id"))
       .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("week_offset"))
@@ -505,12 +503,11 @@ object Events {
     * composition consumes it unordered (its aggregations would destroy
     * order anyway), mirroring the oracle side's order-free gf CTE. */
   private def gapFillCore(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.loadEvents(spark, dir)
+    // shared by the bounds, the type list and the join probe: one
+    // scan of the events table instead of three
+    val daily = Materialized(Tables.loadEvents(spark, dir)
       .groupBy(expr("(sec - pmod(sec, 86400)) div 86400").as("dayno"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      // persisted: bounds, the type list, and the join probe all read
-      // it; recomputing means three scans of the events table
-      .persist()
+      .agg(count(lit(1)).as("n_events")))
     val bounds = daily.agg(min("dayno").as("d0"), max("dayno").as("d1"))
     val calendar = daily.select("event_type").distinct()
       .crossJoin(broadcast(bounds))
@@ -564,9 +561,8 @@ object Events {
   def anomaly(spark: SparkSession, dir: String): DataFrame = {
     // the UNSORTED densified series (gapFill's global sort would be
     // wasted work here — every consumer below aggregates or re-sorts),
-    // persisted because three passes read it (median, deviations,
-    // final join)
-    val gf = gapFillCore(spark, dir).persist()
+    // shared by the median, the deviations and the final join
+    val gf = Materialized(gapFillCore(spark, dir))
     val med = gf.groupBy("event_type")
       .agg(expr("percentile(n_events, 0.5)").as("med"))
     val withMed = gf.join(broadcast(med), Seq("event_type"))

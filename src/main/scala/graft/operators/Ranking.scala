@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** Corpus-statistics ranking — the IR tier of the curation stack: per-
   * document salient-term extraction by TF-IDF. Feeds keyword indexes,
@@ -40,20 +40,17 @@ object Ranking {
   /** Core over any (doc_id, text) frame — exposed for the spec's
     * hand-computed fixture. */
   private[graft] def tfidfTopkOver(docs: DataFrame): DataFrame = {
-    // persisted: the tf branch, the df branch, and the N scalar all
-    // read it; without reuse the regex tokenization of every document
-    // runs three times (SparkEntry cache convention — entry points
-    // clear the session cache per query).
+    // shared by the tf branch, the df branch and the N scalar: the
+    // regex tokenization of every document runs once.
     // Term frequencies are computed IN-ROW (tok_counts): per-doc
     // counts are local to the document, so the old explode + groupBy
     // (doc, term) exchange moved already-final rows (see the TokCounts
     // scaladoc). The same per-doc-distinct rows turn df into a plain
     // count per term — no two-phase countDistinct expansion.
-    val base = docs
+    val base = Materialized(docs
       .withColumn("toks", expr(Dedup.toksSpark))
       .filter(size(col("toks")) > 0)
-      .select("doc_id", "toks")
-      .persist()
+      .select("doc_id", "toks"))
     def tfRows = base
       .select(col("doc_id"), explode(expr("tok_counts(toks)")).as("tc"))
       .select(col("doc_id"), col("tc.term").as("term"),

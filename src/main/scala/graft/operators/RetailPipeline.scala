@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** The reference's entire weekly-metrics pipeline (reference:
   * Data Transformation.py:50-181), re-expressed Spark-first over the
@@ -41,33 +40,6 @@ import graft.Tables
 object RetailPipeline {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
-
-  /** buildFaithful persists its fanned-out join for the plan's three
-    * aggregation paths, but a builder can't know when its caller is
-    * done executing the returned frame — so cap the leak at one cached
-    * copy per session: each build unpersists the previous one. Weak
-    * keys + weak values so a stopped session (and its cached plan)
-    * stays collectable instead of being pinned for the JVM lifetime.
-    * Sequential builds per session assumed (concurrent builds on ONE
-    * session would evict each other's cache — recompute, not wrong
-    * results). */
-  private val lastMerged =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[DataFrame]]()
-
-  private def persistMerged(df: DataFrame): DataFrame = lastMerged.synchronized {
-    // The cache matches plans, not frames. So release the previous copy
-    // BEFORE persisting (releasing after would evict a same-plan
-    // rebuild's cache too), and reuse a same-plan copy this map no
-    // longer reaches (its frame was collected, or another session built
-    // it) instead of caching already cached data.
-    Option(lastMerged.get(df.sparkSession)).flatMap(r => Option(r.get()))
-      .foreach(_.unpersist(blocking = false))
-    val persisted =
-      if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
-      else df
-    lastMerged.put(df.sparkSession, new java.lang.ref.WeakReference(persisted))
-    persisted
-  }
 
   /** The five retail tables of the reference schema
     * (Data Ingestion.sql:20-112), derived from the test star schema. */
@@ -161,8 +133,8 @@ object RetailPipeline {
     val keys = Seq("YR_WK_NUM", "STORE_KEY", "PROD_KEY")
 
     // J1 (date-less, fans out) + J2 (calendar) + J3/J4 (broadcast dims) —
-    // Data Transformation.py:50-54. Persisted: three aggregation paths
-    // read it (the reference recomputes its equivalent per branch —
+    // Data Transformation.py:50-54. Shared by the three aggregation
+    // paths (the reference recomputes its equivalent per branch —
     // SURVEY §4 flags the cache as the single biggest win; measured 2×
     // at sf0.1 even after the branch-merging below).
     // The dim joins affect ROWS only (inner-join filtering) — the
@@ -176,7 +148,7 @@ object RetailPipeline {
     // so the build side grows linearly with data while the partition
     // count stays fixed). Sort-merge spills; a pinned hash build cannot.
     // AQE still downgrades to a hash join when the build side is small.
-    val merged = persistMerged(sales
+    val merged = Materialized(sales
       .join(inventory.withColumnRenamed("CAL_DT", "INVENTORY_CAL_DT"),
         Seq("PROD_KEY", "STORE_KEY"))
       .join(calendar, col("TRANS_DT") === calendar("CAL_DT"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.hadoop.fs.Path
-import graft.Tables
+import graft.{Materialized, Tables}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, dim
   * 64): brute-force cosine top-k as the certified baseline, and a
@@ -372,11 +372,9 @@ object Similarity {
     for (_ <- 1 to 2)
       centroids = recenter(assign(e, centroids)
         .select(col("cluster"), col("embedding")))
-    // The final centroids feed three consumers (inverted lists, probe
-    // scoring, and the joined plan); without a persist each one would
-    // re-execute the whole Lloyd lineage — full-corpus assign windows
-    // included. 16 rows: the cache is free, the recompute is not.
-    centroids = centroids.persist()
+    // shared by the inverted lists, the probe scoring and the joined
+    // plan; each would otherwise re-run the whole Lloyd lineage
+    centroids = Materialized(centroids)
     (centroids, assign(e, centroids))
   }
 
@@ -536,23 +534,15 @@ object Similarity {
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
     val (centroids, lists) = ivfIndex(e)
-    // codebook feeds two broadcast cross-joins (corpus encode, qtab)
-    // and q feeds two consumers (qtab, probes) — each is tiny, but its
-    // LINEAGE is a full-corpus filter/TakeOrdered scan that would
-    // re-execute per consumer without the persist (same rationale as
-    // ivfIndex's centroids; callers release via clearCache). The
-    // codebook is built here, once: left lazy, its two broadcast
-    // consumers race to build the cache, and the call's job count
-    // varies with the race (46-48 jobs at sf0.001).
-    val codebook = ivfPqCodebook(e).persist()
-    codebook.count(): Unit
+    // codebook: shared by the corpus encode and qtab; q: shared by
+    // qtab and the probes
+    val codebook = Materialized(ivfPqCodebook(e))
     val postings = lists.select("vec_id", "cluster", "norm", "embedding")
       .join(pqCodes(e, codebook, ivfPqBlocks)
         .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
-    val q = e.filter(col("vec_id") % queryModFor(queryStride) === 0)
+    val q = Materialized(e.filter(col("vec_id") % queryModFor(queryStride) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-      .persist()
+        col("norm").as("q_norm")))
     withQueryMod(adcTopK(q, codebook, centroids, postings), queryStride, emitMod)
   }
 
@@ -707,7 +697,8 @@ object Similarity {
       .withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
     val (centroids, lists) = ivfIndex(e)
-    val codebook = ivfPqCodebook(e).persist()
+    // shared by its own artifact and the postings' encode
+    val codebook = Materialized(ivfPqCodebook(e))
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
     lists.select("vec_id", "cluster", "norm", "embedding")
@@ -715,6 +706,9 @@ object Similarity {
         .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
       .write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$indexDir/postings")
+    // the three writes are the only readers
+    codebook.unpersist(blocking = false)
+    centroids.unpersist(blocking = false): Unit
   }
 
   /** Serve top-k from a built index: corpus side = artifacts only. */
@@ -724,11 +718,11 @@ object Similarity {
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     val codebook = spark.read.parquet(s"$indexDir/codebook")
     val postings = spark.read.parquet(s"$indexDir/postings")
-    val q = Tables.loadBalanced(spark, dir, "embeddings")
+    // shared by qtab and the probes
+    val q = Materialized(Tables.loadBalanced(spark, dir, "embeddings")
       .filter(col("vec_id") % queryModFor(queryStride) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        expr("vec_norm(embedding)").as("q_norm"))
-      .persist()
+        expr("vec_norm(embedding)").as("q_norm")))
     withQueryMod(adcTopK(q, codebook, centroids, postings), queryStride, emitMod)
   }
 

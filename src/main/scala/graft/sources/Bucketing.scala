@@ -135,11 +135,12 @@ object Bucketing {
   /** Build bucketed `table` from `df` under the [[ensureBuilt]] rule —
     * the production bucketing shape: a fact is bucketed when it is
     * (re)loaded, then joined many times at rest. The stamp also
-    * carries the bucket spec, so a different spec rebuilds. */
-  def ensureBucketed(df: DataFrame, table: String, buckets: Int,
+    * carries the bucket spec, so a different spec rebuilds. `df` is
+    * by name: it is evaluated only when the table is rebuilt. */
+  def ensureBucketed(spark: SparkSession, df: => DataFrame, table: String, buckets: Int,
       keys: Seq[String], fingerprint: Option[String]): Unit =
     ensureBuilt(table, fingerprint.map(fp => s"v1#b$buckets#k${keys.mkString(",")}#$fp"),
-      df.sparkSession.catalog.tableExists(table)) {
+      spark.catalog.tableExists(table)) {
       rewriteBucketed(df, table, buckets, keys)
     }
 }

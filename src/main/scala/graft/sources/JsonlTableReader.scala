@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.Materialized
 
 /** JSON-lines source/sink — the interchange format training-data
   * pipelines actually exchange documents in. Same design rules as the
@@ -43,15 +44,16 @@ object JsonlTableReader {
       .json(path)
 
   /** One-pass split of good rows from quarantined ones. The parse is
-    * cached (Spark cannot query only the corrupt column straight off
-    * raw files); `release()` unpersists it once both sides have been
-    * consumed — the caller owns that lifecycle. */
+    * materialized, shared by both sides (Spark cannot query only the
+    * corrupt column straight off raw files); `release()` unpersists it
+    * once both sides have been consumed — the caller owns that
+    * lifecycle. */
   final case class JsonlSplit(good: DataFrame, quarantined: DataFrame,
       release: () => Unit)
 
   def readSplit(spark: SparkSession, path: String,
       schema: StructType = documentsSchema): JsonlSplit = {
-    val df = read(spark, path, schema).cache()
+    val df = Materialized(read(spark, path, schema))
     JsonlSplit(
       df.filter(df("_corrupt").isNull).drop("_corrupt"),
       df.filter(df("_corrupt").isNotNull).select("_corrupt"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Materialized
 import graft.operators.Dedup
 
 /** Streaming near-dup detection against the AT-REST band index — the
@@ -116,10 +117,10 @@ object DocDedupStream {
     checkpointDir.foreach(d => writer.option("checkpointLocation", d))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persisted: feeds band generation AND the verification join;
+        // shared by band generation and the verification join;
         // released per micro-batch — a continuous stream must not
         // accrete one cache entry per trigger
-        val prepared = Dedup.prepSignatures(batch).persist()
+        val prepared = Materialized(Dedup.prepSignatures(batch))
         // dynamic overwrite of THIS batch's partition only: a replayed
         // batchId (crash after write, before the stream's commit log)
         // rewrites its own partition instead of double-appending. The

@@ -51,20 +51,20 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
     val fp1 = Bucketing.sourceFingerprint(spark, s"$SF/nation.parquet")
     assert(fp1.isDefined, "test table must fingerprint")
     val before = Bucketing.ensureRebuilds.get()
-    Bucketing.ensureBucketed(df, "graft_ensure_spec", 4, Seq("k"), fp1)
+    Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), fp1)
     assert(Bucketing.ensureRebuilds.get() === before + 1, "first build runs")
-    Bucketing.ensureBucketed(df, "graft_ensure_spec", 4, Seq("k"), fp1)
+    Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), fp1)
     assert(Bucketing.ensureRebuilds.get() === before + 1,
       "unchanged fingerprint must not rebuild")
     assert(spark.table("graft_ensure_spec").count() === 2)
     // a changed source fingerprint rebuilds
     val fp2 = Bucketing.sourceFingerprint(spark, s"$SF/region.parquet")
-    Bucketing.ensureBucketed(df, "graft_ensure_spec", 4, Seq("k"), fp2)
+    Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), fp2)
     assert(Bucketing.ensureRebuilds.get() === before + 2,
       "changed fingerprint must rebuild")
     // no fingerprint (unreadable source) always rebuilds — safe direction
-    Bucketing.ensureBucketed(df, "graft_ensure_spec", 4, Seq("k"), None)
-    Bucketing.ensureBucketed(df, "graft_ensure_spec", 4, Seq("k"), None)
+    Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), None)
+    Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), None)
     assert(Bucketing.ensureRebuilds.get() === before + 4)
     spark.sql("DROP TABLE IF EXISTS graft_ensure_spec")
   }
