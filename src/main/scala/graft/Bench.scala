@@ -134,14 +134,16 @@ object Bench {
         s"$SampledPairTwin measures the same path; name it in " +
         "SPARK_GRAFT_BENCH_QUERIES to time it)"))
     val selected = subset.filter { case (n, _) => !excluded(n) }
-    // Warmup at the smallest SF: JIT-compiles every query's code path
-    // (parquet reader, codegen, interpreted-expression fallbacks) so the
-    // timed loop measures steady-state throughput instead of charging
-    // all JVM warmup to whichever query happens to run first.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    selected.foreach { case (_, fn) =>
+    // Warmup pass, by default over the timed tier itself: JIT-compiles
+    // every query's code path (parquet reader, codegen, interpreted-
+    // expression fallbacks) and fills the per-session table metadata, so
+    // the timed loop measures steady state instead of charging all JVM
+    // warmup to whichever query happens to run first.
+    // SPARK_GRAFT_WARM_DIR names a smaller tier to warm on instead.
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
+    selected.foreach { case (name, fn) =>
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $name: $e") }
       spark.catalog.clearCache()
     }
     // Timed reps, keep the min: single-shot numbers swing several
@@ -151,8 +153,9 @@ object Bench {
     // query's reps sit a whole catalog pass apart and the min is robust
     // to any contention burst shorter than a pass. Entries that serve
     // state at rest (q13_bucketed_join, dedup_incremental_bucketed,
-    // sim_ann_ivfpq_served) build it in the first timed pass, so with
-    // reps >= 2 the min reads the serving time.
+    // sim_ann_ivfpq_served) build it in the warm-up pass when that runs
+    // on the timed tier, else in the first timed pass, so with reps >= 2
+    // the min reads the serving time.
     // A failed rep must NOT contribute its time-to-failure — a broken
     // query would otherwise read as a performance win — so failures
     // record -1. malformed/zero values must not crash the bench or make

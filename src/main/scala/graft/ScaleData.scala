@@ -144,7 +144,7 @@ object BenchData {
       val factor = Tables.eventsTsNanosFactor(spark, path)
       spark.read.schema(Tables.eventsSchema).parquet(path)
         .withColumn("ts", expr(s"ts * ${factor}L"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Tables.load(spark, dir, name)
 
   private def write(df: DataFrame, dir: String, name: String, parts: Int): Unit =
     df.repartition(parts).write.mode("overwrite").parquet(s"$dir/$name.parquet")

@@ -1,12 +1,22 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 
 /** Table catalog over the driver-generated parquet test data
-  * (TESTDATA.md). At 100 TB these reads are plain `spark.read.parquet`
-  * over a partitioned lake path — column pruning + predicate pushdown
-  * flow to the scan automatically because every query here is built
+  * (TESTDATA.md). At 100 TB these reads are plain parquet scans over a
+  * partitioned lake path — column pruning + predicate pushdown flow to
+  * the scan automatically because every query here is built
   * declaratively on top of these frames.
   *
   * The reference loads its 5 retail tables as headered CSV with
@@ -14,14 +24,152 @@ import org.apache.spark.sql.types._
   * costs an extra full scan per file; we read parquet (self-describing)
   * and, for the CSV ingestion surface, declare explicit schemas — see
   * [[graft.sources.CsvTableReader]].
+  *
+  * Metadata rule: a table's schema, row count, data-file sizes and
+  * events `ts` unit come from ONE read of its parquet footers on the
+  * driver, cached per (session, path) and keyed by the root's length
+  * and modification time — no Spark job, and a rewrite at the same
+  * path (which replaces the root or adds a direct child, changing its
+  * mtime) misses the cache. Every read passes the cached schema to
+  * `spark.read.schema(...)`: a schema-less `spark.read.parquet` runs a
+  * footer-merge job on every call, and `count()` runs two. Reads of
+  * state at rest go through [[read]]; `TablesSpec` fails on a
+  * schema-less parquet read anywhere else in `src/main`.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One footer read of the parquet table rooted at `path`: its data
+    * files (recursive, name order, `_`/`.`-prefixed names skipped at
+    * every level, as Spark's file index does) with their sizes, and the
+    * first file's footer. The row count and the `ts` unit read the
+    * other footers they need on first use. */
+  private[graft] final class Meta(path: String, val root: FileStatus,
+      val files: Seq[FileStatus], first: ParquetMetadata, conf: Configuration) {
+
+    /** Spark's own inference: the first footer through the session's
+      * converter (mergeSchema off reads one footer too). Converted per
+      * call, so the session's parquet type confs always apply. */
+    def schema(spark: SparkSession): StructType =
+      ParquetFileFormat.readSchemaFromFooter(new Footer(files.head.getPath, first),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+    /** Sum of every row group's record count over all data files. */
+    lazy val rows: Long = (first +: files.tail.map(f => footer(f.getPath, conf)))
+      .map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+    /** See [[eventsTsNanosFactorOpt]]. */
+    lazy val tsNanosFactor: Long = {
+      val head = tsUnit(first)
+      if (files.size > 1) {
+        val last = tsUnit(footer(files.last.getPath, conf))
+        require(head == last,
+          s"mixed ts vintages under $path: ${files.head.getPath} scales x$head " +
+            s"but ${files.last.getPath} scales x$last — a uniform-unit layout is " +
+            "required (re-generate the table in one vintage)")
+      }
+      head
+    }
+  }
+
+  private def footer(file: Path, conf: Configuration): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  private def tsUnit(footer: ParquetMetadata): Long = {
+    val schema = footer.getFileMetaData.getSchema
+    if (!schema.containsField("ts")) 1L
+    else schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+        t.getUnit match {
+          case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
+          case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
+          case _                                     => 1L
+        }
+      case _ => 1L
+    }
+  }
+
+  private val metaCache =
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, Meta]]()
+
+  /** Footer-read counter — spec probe for the one-read-per-path
+    * guarantee (TablesSpec); no production reads. */
+  private[graft] val listingWalks = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The cached metadata of the table at `path`, read again when the
+    * root's length or modification time changed; None when `path` does
+    * not exist or holds no data file. The outer map is WEAK on the
+    * session so stopped test/notebook sessions don't accumulate. */
+  private[graft] def meta(spark: SparkSession, path: String): Option[Meta] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val root = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    val perPath = metaCache.synchronized {
+      metaCache.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[String, Meta]())
+    }
+    root match {
+      case None => perPath.remove(path); None
+      case Some(st) =>
+        Option(perPath.compute(path, (_, old) =>
+          if (old != null && old.root.getLen == st.getLen &&
+            old.root.getModificationTime == st.getModificationTime) old
+          else {
+            listingWalks.incrementAndGet()
+            val files = dataFiles(fs, st)
+            files.headOption.map(f => new Meta(path, st, files, footer(f.getPath, conf), conf))
+              .orNull
+          }))
+    }
+  }
+
+  /** Non-empty data files under `root`, in name order. */
+  private def dataFiles(fs: FileSystem, root: FileStatus): Seq[FileStatus] =
+    if (!root.isDirectory) Seq(root)
+    else {
+      // qualify before stripping: a RELATIVE root would otherwise leave
+      // the absolute listing paths unstripped and the hidden-segment
+      // filter would evaluate cwd ancestor names
+      val rootPath = fs.makeQualified(root.getPath).toUri.getPath
+      val it = fs.listFiles(root.getPath, true)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = fs.makeQualified(f.getPath).toUri.getPath.stripPrefix(rootPath)
+          .split('/').filter(_.nonEmpty)
+        if (f.isFile && f.getLen > 0 &&
+          !rel.exists(seg => seg.startsWith("_") || seg.startsWith(".")))
+          buf += f
+      }
+      buf.sortBy(_.getPath.toString).toSeq
+    }
+
+  private def metaOf(spark: SparkSession, path: String): Meta =
+    meta(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no parquet parts under $path"))
+
+  /** The parquet table at `path` (file or directory; a partitioned
+    * directory still gets its partition columns appended) with its
+    * schema from the cached footer. A missing or empty path gets
+    * Spark's own error. */
+  def read(spark: SparkSession, path: String): DataFrame = meta(spark, path) match {
+    case Some(m) => spark.read.schema(m.schema(spark)).parquet(path)
+    case None    => spark.read.parquet(path)
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** Row count of a catalog table from its footers: no Spark job. */
+  def rows(spark: SparkSession, sfDir: String, name: String): Long =
+    metaOf(spark, s"$sfDir/$name.parquet").rows
 
   /** Like [[load]], but spread across the cluster when the input has
     * fewer splits than cores. Small single-row-group parquet (the test
@@ -29,85 +177,36 @@ object Tables {
     * shuffle would otherwise run on ONE task; a real lake table has
     * plenty of splits and passes through untouched. Use for operators
     * with heavy per-row compute (hashing, sketching, vector math). */
-  /** Scan-split estimate from driver-side file metadata, replicating
+  def loadBalanced(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    balance(spark, path, read(spark, path))
+  }
+
+  private def balance(spark: SparkSession, path: String, df: DataFrame): DataFrame =
+    if (meta(spark, path).exists(needsSpread(spark, _)))
+      df.repartition(spark.sparkContext.defaultParallelism)
+    else df
+
+  /** Scan-split estimate from the cached file sizes, replicating
     * Spark's own FilePartition sizing: maxSplitBytes =
     * min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores)) —
     * the bytesPerCore term matters, because a mid-size file (say 1 GiB
     * at 32 cores) is already split into ~cores partitions by the
-    * native scan and must NOT be force-repartitioned. Metadata-only
-    * (the listing is already cached by the read) — no full RDD
-    * conversion per query build the way df.rdd.getNumPartitions would
-    * force.
-    *
-    * The verdict is CACHED per (session, path): at a 100 TB table with
-    * millions of files, re-walking `inputFiles` + per-file
-    * `getFileStatus` on every query build is pure wasted driver work —
-    * the decision depends only on the listing and session confs, and a
-    * table that grows enough to change it within one session would be
-    * re-read through a fresh session (or an explicit [[load]]) anyway.
-    * The outer map is WEAK on the session so stopped test/notebook
-    * sessions don't accumulate. */
-  private val balanceCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]()
-
-  /** Listing-walk counter — spec probe for the one-walk-per-path
-    * guarantee (TablesSpec); no production reads. */
-  private[graft] val listingWalks = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop cached spread verdicts for `path` (every conf variant) in
-    * `spark`'s cache — call after rewriting a table's files in place
-    * within one long-lived session (notebook compaction flows); a
-    * fresh session never needs it. */
-  def invalidateBalance(spark: SparkSession, path: String): Unit =
-    balanceCache.synchronized {
-      val m = balanceCache.get(spark)
-      if (m != null) { m.keySet.removeIf(_.startsWith(s"$path#")); () }
-    }
-
-  private def balance(spark: SparkSession, df: DataFrame, cacheKey: String): DataFrame = {
-    val perPath = balanceCache.synchronized {
-      var m = balanceCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-        balanceCache.put(spark, m)
-      }
-      m
-    }
-    // the verdict depends on parallelism and the split-sizing confs,
-    // so they are part of the key: changing them mid-session (notebook
-    // tuning) re-evaluates instead of serving a stale verdict. A
-    // rewrite of the files under an unchanged path still needs the
-    // explicit [[invalidateBalance]] hook.
-    val sqlConf = spark.sessionState.conf
-    val confKey = s"$cacheKey#${spark.sparkContext.defaultParallelism}" +
-      s"#${sqlConf.filesMaxPartitionBytes}#${sqlConf.filesOpenCostInBytes}"
-    val spread: Boolean = perPath.computeIfAbsent(confKey, _ => needsSpread(spark, df))
-    if (spread) df.repartition(spark.sparkContext.defaultParallelism) else df
-  }
-
-  private def needsSpread(spark: SparkSession, df: DataFrame): Boolean = {
-    listingWalks.incrementAndGet()
+    * native scan and must NOT be force-repartitioned. Parallelism and
+    * the split confs are read per call, so changing them mid-session
+    * re-evaluates the verdict. */
+  private def needsSpread(spark: SparkSession, m: Meta): Boolean = {
     val target = spark.sparkContext.defaultParallelism
-    val files = df.inputFiles
-    if (files.length >= target) false
+    val sizes = m.files.map(_.getLen)
+    if (sizes.length >= target) false
     else {
-      val hconf = spark.sparkContext.hadoopConfiguration
       val sqlConf = spark.sessionState.conf
       val openCost = sqlConf.filesOpenCostInBytes.max(1L)
-      val sizes = files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(hconf).getFileStatus(p).getLen
-      }
-      val bytesPerCore = (sizes.sum + files.length * openCost) / target.max(1)
+      val bytesPerCore = (sizes.sum + sizes.length * openCost) / target.max(1)
       val maxSplit = sqlConf.filesMaxPartitionBytes.min(openCost.max(bytesPerCore)).max(1L)
-      val splits = sizes.map(len => ((len + maxSplit - 1) / maxSplit).max(1L)).sum
-      splits < target
+      sizes.map(len => ((len + maxSplit - 1) / maxSplit).max(1L)).sum < target
     }
   }
-
-  def loadBalanced(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    balance(spark, load(spark, sfDir, name), s"$sfDir/$name.parquet")
 
   /** `events.ts` arrives as INT64 whose logical unit depends on the
     * generator vintage: TIMESTAMP(NANOS) (which Spark 4 refuses to
@@ -134,81 +233,26 @@ object Tables {
     * holds no data files; streaming sources that may start against an
     * empty dir use [[eventsTsNanosFactorOpt]]. */
   private[graft] def eventsTsNanosFactor(spark: SparkSession, path: String): Long =
-    eventsTsNanosFactorOpt(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no parquet parts under $path"))
+    metaOf(spark, path).tsNanosFactor
 
   /** As [[eventsTsNanosFactor]] but None when `path` holds no data
-    * files yet. Data files are discovered RECURSIVELY (a partitioned
-    * `dt=.../part-*.parquet` layout must probe a leaf file, not a
-    * subdirectory), skipping `_`/`.`-prefixed names at every level
-    * (`_SUCCESS`, `_spark_metadata`, `.crc`). The unit is probed from
-    * the name-order first AND last data files and the two must agree:
-    * a mixed-vintage layout would otherwise silently scale part of
-    * the rows with the wrong factor. Two footers cannot prove all n
-    * files uniform, but they catch the realistic mixed case — a
-    * regenerated table appended beside an old one, which lands the
-    * vintages at the name-order extremes; full uniformity is the
-    * documented contract of the testdata generator (TESTDATA.md). */
+    * files yet. A partitioned `dt=.../part-*.parquet` layout probes leaf
+    * files. The unit is probed from the name-order first AND last data
+    * files and the two must agree: a mixed-vintage layout would
+    * otherwise silently scale part of the rows with the wrong factor.
+    * Two footers cannot prove all n files uniform, but they catch the
+    * realistic mixed case — a regenerated table appended beside an old
+    * one, which lands the vintages at the name-order extremes; full
+    * uniformity is the documented contract of the testdata generator
+    * (TESTDATA.md). */
   private[graft] def eventsTsNanosFactorOpt(
-      spark: SparkSession, path: String): Option[Long] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val dataFiles: Seq[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(p).isDirectory) {
-        // qualify before stripping: a RELATIVE `path` would otherwise
-        // leave the absolute listing paths unstripped and the hidden-
-        // segment filter would evaluate cwd ancestor names (a '.'- or
-        // '_'-prefixed ancestor dir would reject every data file)
-        val rootPath = fs.makeQualified(p).toUri.getPath
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-        while (it.hasNext) {
-          val st = it.next()
-          val rel = fs.makeQualified(st.getPath).toUri.getPath.stripPrefix(rootPath)
-            .split('/').filter(_.nonEmpty)
-          if (st.isFile && st.getLen > 0 &&
-            !rel.exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-            buf += st.getPath
-        }
-        buf.sortBy(_.toString).toSeq
-      } else Seq(p)
-    if (dataFiles.isEmpty) return None
-    def unitOf(file: org.apache.hadoop.fs.Path): Long = {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField("ts")) 1L
-        else schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit match {
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
-              case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
-              case _                                     => 1L
-            }
-          case _ => 1L
-        }
-      } finally reader.close()
-    }
-    val first = unitOf(dataFiles.head)
-    if (dataFiles.size > 1) {
-      val last = unitOf(dataFiles.last)
-      require(first == last,
-        s"mixed ts vintages under $path: ${dataFiles.head} scales x$first " +
-          s"but ${dataFiles.last} scales x$last — a uniform-unit layout is " +
-          "required (re-generate the table in one vintage)")
-    }
-    Some(first)
-  }
+      spark: SparkSession, path: String): Option[Long] =
+    meta(spark, path).map(_.tsNanosFactor)
 
-  private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
+  private def eventsRaw(spark: SparkSession, path: String): DataFrame = {
     // floor division via pmod (Spark's `div` truncates toward zero,
     // which would disagree with the floor-semantics oracles for any
     // pre-1970 timestamp)
-    val path = s"$sfDir/events.parquet"
     val factor = eventsTsNanosFactor(spark, path)
     spark.read.schema(eventsSchema).parquet(path)
       .withColumn("ts", org.apache.spark.sql.functions.expr(s"ts * ${factor}L"))
@@ -216,6 +260,8 @@ object Tables {
         org.apache.spark.sql.functions.expr("(ts - pmod(ts, 1000000000)) div 1000000000"))
   }
 
-  def loadEvents(spark: SparkSession, sfDir: String): DataFrame =
-    balance(spark, eventsRaw(spark, sfDir), s"$sfDir/events.parquet#nanos")
+  def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    val path = s"$sfDir/events.parquet"
+    balance(spark, path, eventsRaw(spark, path))
+  }
 }

@@ -1031,9 +1031,9 @@ object Dedup {
     * at sf10 (200k) it is m = 800 — constant work, not constant mod.
     * The oracle computes the identical m from its own COUNT(*), so the
     * comparison stays exact at every scale, and the n it derives from
-    * is a metadata-only parquet count (no data scan). */
+    * is the footers' row count (Tables.rows: no Spark job). */
   def embeddingCosineSampled(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.load(spark, dir, "embeddings").count()
+    val n = Tables.rows(spark, dir, "embeddings")
     embeddingCosineAllPairs(spark, dir, threshold = 0.45,
       pairMod = pairSampleModFor(n), emitMod = true)
   }
@@ -1523,7 +1523,9 @@ object Dedup {
         val path = s"$base/slot$slot"
         slot = (slot + 1) % 2
         df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+        // the slot is rewritten every other round, so the written
+        // schema, not a footer read, describes it
+        spark.read.schema(df.schema).parquet(path)
       case None => df.localCheckpoint(eager = false)
     }
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Data-layout operators — the write-side optimization tier. A 100 TB
@@ -126,8 +127,8 @@ object Layout {
       .drop("__zx", "__zy", "__zval")
   }
 
-  /** File count for a target size from driver-side metadata — the same
-    * listing idiom as Tables.balance (metadata-only, no data read). */
+  /** File count for a target size from driver-side file sizes (no data
+    * read). */
   private[graft] def targetFileCount(spark: SparkSession, df: DataFrame,
       targetBytes: Long): Int = {
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -138,11 +139,14 @@ object Layout {
     math.max(1, math.ceil(total.toDouble / targetBytes.max(1L)).toInt)
   }
 
-  /** Physical compaction: write `df` as `nFiles` Z-clustered files. */
-  private[graft] def compactFiles(df: DataFrame, outPath: String, nFiles: Int): Unit =
-    compactPlan(df, nFiles)
+  /** Physical compaction: write `df` as `nFiles` Z-clustered files;
+    * returns the written schema. */
+  private[graft] def compactFiles(df: DataFrame, outPath: String, nFiles: Int): StructType = {
+    val out = compactPlan(df, nFiles)
       .select("event_id", "ts", "user_id", "event_type", "value", "props", "zval")
-      .write.mode("overwrite").parquet(outPath)
+    out.write.mode("overwrite").parquet(outPath)
+    out.schema
+  }
 
   def compact(spark: SparkSession, dir: String): DataFrame = {
     // per-call scratch: a fixed shared path races concurrent runs on
@@ -153,10 +157,11 @@ object Layout {
     val scratch = java.nio.file.Files
       .createTempDirectory("graft_layout_compact_").toFile
     try {
-      compactFiles(Tables.loadEvents(spark, dir), scratch.getPath, zFileBuckets.toInt)
+      val written = compactFiles(Tables.loadEvents(spark, dir), scratch.getPath,
+        zFileBuckets.toInt)
       // verification frame from the READ-BACK files — sec re-derived the
       // same way loadEvents derives it, zval re-interleaved from scratch
-      val stats = withZval(spark.read.parquet(scratch.getPath)
+      val stats = withZval(spark.read.schema(written).parquet(scratch.getPath)
           .withColumn("sec", expr("(ts - pmod(ts, 1000000000)) div 1000000000"))
           .drop("zval"))
         .withColumn("file_bucket", expr(s"zval div $zBucketWidth"))

@@ -129,9 +129,8 @@ object Similarity {
     budgetStrideFor(n, annQueryBudgetPairs)
 
   def cosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    // metadata-only parquet count (no data scan), as in
-    // Dedup.embeddingCosineSampled
-    val n = Tables.load(spark, dir, "embeddings").count()
+    // footer row count (no Spark job), as in Dedup.embeddingCosineSampled
+    val n = Tables.rows(spark, dir, "embeddings")
     cosineTopKOver(Tables.loadBalanced(spark, dir, "embeddings"),
       queryStride = queryStrideFor(n), emitMod = true)
   }
@@ -211,7 +210,7 @@ object Similarity {
     }.reduce(_ + _)
 
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.load(spark, dir, "embeddings").count()
+    val n = Tables.rows(spark, dir, "embeddings")
     annLshOver(Tables.loadBalanced(spark, dir, "embeddings"),
       queryStride = annQueryStrideFor(n), emitMod = true)
   }
@@ -339,7 +338,7 @@ object Similarity {
   }
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.load(spark, dir, "embeddings").count()
+    val n = Tables.rows(spark, dir, "embeddings")
     ivfTopKOver(Tables.loadBalanced(spark, dir, "embeddings"),
       queryStride = annQueryStrideFor(n), emitMod = true)
   }
@@ -527,7 +526,7 @@ object Similarity {
     * (SimilaritySpec, QualityHarness's served_equals_inline gate). */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
     ivfPqTopKOver(Tables.loadBalanced(spark, dir, "embeddings"),
-      annQueryStrideFor(Tables.load(spark, dir, "embeddings").count()), emitMod = true)
+      annQueryStrideFor(Tables.rows(spark, dir, "embeddings")), emitMod = true)
 
   private[graft] def ivfPqTopKOver(corpus: DataFrame,
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
@@ -715,9 +714,9 @@ object Similarity {
   private[graft] def ivfPqServe(spark: SparkSession, dir: String,
       indexDir: String, queryStride: Int = 1,
       emitMod: Boolean = false): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val postings = spark.read.parquet(s"$indexDir/postings")
+    val centroids = Tables.read(spark, s"$indexDir/centroids")
+    val codebook = Tables.read(spark, s"$indexDir/codebook")
+    val postings = Tables.read(spark, s"$indexDir/postings")
     // shared by qtab and the probes
     val q = Materialized(Tables.loadBalanced(spark, dir, "embeddings")
       .filter(col("vec_id") % queryModFor(queryStride) === 0)
@@ -742,7 +741,7 @@ object Similarity {
   def ivfPqServed(spark: SparkSession, dir: String): DataFrame = {
     // same metadata-derived stride as the inline twin, so QUALITY's
     // served≡inline contrast compares identical query sets
-    val stride = annQueryStrideFor(Tables.load(spark, dir, "embeddings").count())
+    val stride = annQueryStrideFor(Tables.rows(spark, dir, "embeddings"))
     val indexDir = servedIndexDir(spark, dir)
     val indexPath = new Path(indexDir)
     graft.sources.Bucketing.ensureBuilt(indexDir,

@@ -125,7 +125,7 @@ object OutputWriter {
   def compactFactPath(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       nFilesOverride: Option[Int] = None): Unit =
-    zClusterStaged(spark, spark.read.parquet(path), targetBytes, nFilesOverride) {
+    zClusterStaged(spark, graft.Tables.read(spark, path), targetBytes, nFilesOverride) {
       staged =>
         staged.write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")

@@ -1,12 +1,82 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The balance() split-estimate must walk a path's file listing at
-  * most once per session: at a 100 TB table with millions of files the
-  * per-file getFileStatus walk is real driver work, and every catalog
-  * query builds its input frames through loadBalanced. */
+/** A table's metadata (schema, row count, file sizes, events ts unit)
+  * is read from its parquet footers at most once per session and path,
+  * with no Spark job: every catalog query builds its input frames
+  * through these reads, and a schema-less parquet read or a count()
+  * costs one or two jobs per call. */
 class TablesSpec extends AnyFunSuite with SparkSuite {
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
+  }
+
+  test("footer metadata gives the inferred schema and count() of every table") {
+    Tables.names.foreach { n =>
+      val path = s"$SF/$n.parquet"
+      val m = Tables.meta(spark, path).getOrElse(fail(s"$n: no metadata"))
+      val inferred = spark.read.parquet(path)
+      assert(m.schema(spark) === inferred.schema, n)
+      assert(Tables.rows(spark, SF, n) === inferred.count(), n)
+    }
+  }
+
+  test("Tables reads run no Spark job, cold or warm") {
+    // a new session starts with an empty metadata cache, so the first
+    // round is cold and the second warm
+    val s = spark.newSession()
+    val metrics = new Bench.TaskMetricsByQuery(s)
+    try metrics.attributed("reads") {
+      (1 to 2).foreach { _ =>
+        Tables.load(s, SF, "lineitem")
+        Tables.loadBalanced(s, SF, "embeddings")
+        Tables.loadEvents(s, SF)
+        Tables.rows(s, SF, "embeddings")
+      }
+    } finally assert(metrics.finish(), "listener bus did not drain")
+    assert(!metrics.totals.contains("reads"), metrics.totals)
+  }
+
+  test("a table rewritten at the same path is read with its new column, without a hook") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_rewrite").toFile
+    val path = new java.io.File(dir, "t.parquet").getPath
+    try {
+      Seq(1L, 2L).toDF("a").write.parquet(path)
+      assert(Tables.read(spark, path).columns.toSeq === Seq("a"))
+      val walks = Tables.listingWalks.get()
+      Tables.read(spark, path)
+      assert(Tables.listingWalks.get() === walks, "an unchanged path must hit the cache")
+      Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("a", "b")
+        .write.mode("overwrite").parquet(path)
+      val back = Tables.read(spark, path)
+      assert(back.columns.toSeq === Seq("a", "b"))
+      assert(back.orderBy("a").as[(Long, String)].collect().toSeq ===
+        Seq((1L, "x"), (2L, "y"), (3L, "z")))
+      assert(Tables.meta(spark, path).map(_.rows) === Some(3L))
+    } finally rmTree(dir)
+  }
+
+  test("no source file outside Tables.scala reads parquet without a schema") {
+    val root = Paths.get("src/main/scala")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Tables.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".read.parquet(") =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      offenders.mkString("read these through Tables.read:\n  ", "\n  ", ""))
+  }
 
   test("balance() walks the file listing once per (session, path)") {
     val before = Tables.listingWalks.get()
@@ -31,19 +101,6 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     Tables.loadBalanced(spark, SF, "customer")
     val after = Tables.listingWalks.get()
     assert(after - warm <= 1, "only the new path may walk")
-  }
-
-  test("invalidateBalance forces a fresh walk for a rewritten path") {
-    Tables.loadBalanced(spark, SF, "nation")
-    val warm = Tables.listingWalks.get()
-    Tables.loadBalanced(spark, SF, "nation")
-    assert(Tables.listingWalks.get() === warm, "warm path must not re-walk")
-    // a compaction flow that rewrites files under the same path calls
-    // this hook; the next load must re-derive the spread verdict
-    Tables.invalidateBalance(spark, s"$SF/nation.parquet")
-    Tables.loadBalanced(spark, SF, "nation")
-    assert(Tables.listingWalks.get() === warm + 1,
-      "invalidated path must walk exactly once more")
   }
 
   test("cached balance still spreads an unsplittable small input") {
