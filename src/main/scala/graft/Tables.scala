@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -25,16 +27,21 @@ import org.apache.spark.sql.types._
   * and, for the CSV ingestion surface, declare explicit schemas — see
   * [[graft.sources.CsvTableReader]].
   *
-  * Metadata rule: a table's schema, row count, data-file sizes and
-  * events `ts` unit come from ONE read of its parquet footers on the
-  * driver, cached per (session, path) and keyed by the root's length
-  * and modification time — no Spark job, and a rewrite at the same
-  * path (which replaces the root or adds a direct child, changing its
-  * mtime) misses the cache. Every read passes the cached schema to
-  * `spark.read.schema(...)`: a schema-less `spark.read.parquet` runs a
-  * footer-merge job on every call, and `count()` runs two. Reads of
-  * state at rest go through [[read]]; `TablesSpec` fails on a
-  * schema-less parquet read anywhere else in `src/main`.
+  * Metadata rule: every call lists the table's data files (recursive;
+  * one `getFileStatus` for a single-file root) and digests each
+  * file's (relative path, length, mtime) under the qualified root.
+  * That digest is the one freshness key: the schema, row count,
+  * data-file sizes and events `ts` unit come from ONE read of the
+  * parquet footers on the driver, cached per (session, path) and read
+  * again only when the digest changes — no Spark job, and any
+  * rewrite, added part or touched file at any depth misses the cache.
+  * The same digest is the source fingerprint of state kept at rest
+  * ([[fingerprint]], `Bucketing.ensureBuilt`). Every read passes the
+  * cached schema to `spark.read.schema(...)`: a schema-less
+  * `spark.read.parquet` runs a footer-merge job on every call, and
+  * `count()` runs two. Reads of state at rest go through [[read]];
+  * `TablesSpec` fails on a schema-less parquet read, or a Hadoop file
+  * listing, anywhere else in `src/main`.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -43,10 +50,11 @@ object Tables {
 
   /** One footer read of the parquet table rooted at `path`: its data
     * files (recursive, name order, `_`/`.`-prefixed names skipped at
-    * every level, as Spark's file index does) with their sizes, and the
-    * first file's footer. The row count and the `ts` unit read the
-    * other footers they need on first use. */
-  private[graft] final class Meta(path: String, val root: FileStatus,
+    * every level, as Spark's file index does) with their sizes, the
+    * digest of that listing, and the first file's footer. The row
+    * count and the `ts` unit read the other footers they need on first
+    * use. */
+  private[graft] final class Meta(path: String, val fingerprint: String,
       val files: Seq[FileStatus], first: ParquetMetadata, conf: Configuration) {
 
     /** Spark's own inference: the first footer through the session's
@@ -97,59 +105,76 @@ object Tables {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, Meta]]()
 
-  /** Footer-read counter — spec probe for the one-read-per-path
+  /** Footer-read counter — spec probe for the one-read-per-listing
     * guarantee (TablesSpec); no production reads. */
-  private[graft] val listingWalks = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The cached metadata of the table at `path`, read again when the
-    * root's length or modification time changed; None when `path` does
+    * digest of its data-file listing changed; None when `path` does
     * not exist or holds no data file. The outer map is WEAK on the
     * session so stopped test/notebook sessions don't accumulate. */
   private[graft] def meta(spark: SparkSession, path: String): Option[Meta] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val root = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
     val perPath = metaCache.synchronized {
       metaCache.computeIfAbsent(spark,
         _ => new java.util.concurrent.ConcurrentHashMap[String, Meta]())
     }
-    root match {
+    listing(p.getFileSystem(conf), p) match {
       case None => perPath.remove(path); None
-      case Some(st) =>
-        Option(perPath.compute(path, (_, old) =>
-          if (old != null && old.root.getLen == st.getLen &&
-            old.root.getModificationTime == st.getModificationTime) old
+      case Some((fp, files)) =>
+        Some(perPath.compute(path, (_, old) =>
+          if (old != null && old.fingerprint == fp) old
           else {
-            listingWalks.incrementAndGet()
-            val files = dataFiles(fs, st)
-            files.headOption.map(f => new Meta(path, st, files, footer(f.getPath, conf), conf))
-              .orNull
+            footerReads.incrementAndGet()
+            new Meta(path, fp, files, footer(files.head.getPath, conf), conf)
           }))
     }
   }
 
-  /** Non-empty data files under `root`, in name order. */
-  private def dataFiles(fs: FileSystem, root: FileStatus): Seq[FileStatus] =
-    if (!root.isDirectory) Seq(root)
-    else {
+  /** The fingerprint of the table at `path` for state built from it at
+    * rest (`Bucketing.ensureBuilt`): the digest [[meta]] keys on. None
+    * when `path` does not exist or holds no data file, so the caller
+    * rebuilds. */
+  def fingerprint(spark: SparkSession, path: String): Option[String] =
+    meta(spark, path).map(_.fingerprint)
+
+  /** Non-empty data files under `p`, in name order, with the digest of
+    * the qualified root and each file's (relative path, length, mtime);
+    * None when `p` does not exist or holds no data file. The digest is
+    * the same however the root is spelled (`/x` or `file:/x`). */
+  private def listing(fs: FileSystem, p: Path): Option[(String, Seq[FileStatus])] = {
+    val root = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    root.flatMap { st =>
       // qualify before stripping: a RELATIVE root would otherwise leave
       // the absolute listing paths unstripped and the hidden-segment
       // filter would evaluate cwd ancestor names
-      val rootPath = fs.makeQualified(root.getPath).toUri.getPath
-      val it = fs.listFiles(root.getPath, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = fs.makeQualified(f.getPath).toUri.getPath.stripPrefix(rootPath)
-          .split('/').filter(_.nonEmpty)
-        if (f.isFile && f.getLen > 0 &&
-          !rel.exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-          buf += f
+      val qualified = fs.makeQualified(st.getPath)
+      def rel(f: FileStatus): String =
+        fs.makeQualified(f.getPath).toUri.getPath.stripPrefix(qualified.toUri.getPath)
+      val files =
+        if (!st.isDirectory) Seq(st)
+        else {
+          val it = fs.listFiles(st.getPath, true)
+          val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+          while (it.hasNext) {
+            val f = it.next()
+            if (f.isFile && f.getLen > 0 &&
+              !rel(f).split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
+              buf += f
+          }
+          buf.sortBy(_.getPath.toString).toSeq
+        }
+      Option.when(files.nonEmpty) {
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        md.update(qualified.toString.getBytes(UTF_8))
+        files.foreach(f =>
+          md.update(s"\n${rel(f)}#${f.getLen}#${f.getModificationTime}".getBytes(UTF_8)))
+        (java.util.HexFormat.of.formatHex(md.digest), files)
       }
-      buf.sortBy(_.getPath.toString).toSeq
     }
+  }
 
   private def metaOf(spark: SparkSession, path: String): Meta =
     meta(spark, path).getOrElse(

@@ -686,7 +686,7 @@ object Dedup {
   /** Build (or freshness-skip) the two at-rest index tables from
     * `dir`'s non-batch documents. Idempotent per corpus state. */
   private[graft] def ensureIndexed(spark: SparkSession, dir: String): Unit = {
-    val fp = graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
     val idxDocs = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
       .filter(!(col("doc_id") % batchStride === batchRes))
     // shared by the two table builds, and filled only when one runs:

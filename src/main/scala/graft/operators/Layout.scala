@@ -127,15 +127,11 @@ object Layout {
       .drop("__zx", "__zy", "__zval")
   }
 
-  /** File count for a target size from driver-side file sizes (no data
-    * read). */
-  private[graft] def targetFileCount(spark: SparkSession, df: DataFrame,
+  /** File count for a target size from the data-file sizes of the
+    * table at `path` ([[Tables.meta]]'s listing; no data read). */
+  private[graft] def targetFileCount(spark: SparkSession, path: String,
       targetBytes: Long): Int = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val total = df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(hconf).getFileStatus(p).getLen
-    }.sum
+    val total = Tables.meta(spark, path).map(_.files.map(_.getLen).sum).getOrElse(0L)
     math.max(1, math.ceil(total.toDouble / targetBytes.max(1L)).toInt)
   }
 

@@ -495,9 +495,9 @@ object Relational {
     // invocation per (JVM, source state) pays the one-time shuffle;
     // repeats measure the exchange-free join.
     graft.sources.Bucketing.ensureBucketed(spark, li, liBucketTable, 8, Seq("l_orderkey"),
-      graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/lineitem.parquet"))
+      Tables.fingerprint(spark, s"$dir/lineitem.parquet"))
     graft.sources.Bucketing.ensureBucketed(spark, o, ordBucketTable, 8, Seq("l_orderkey"),
-      graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/orders.parquet"))
+      Tables.fingerprint(spark, s"$dir/orders.parquet"))
     graft.sources.Bucketing
       .coLocatedJoin(spark, liBucketTable, ordBucketTable, Seq("l_orderkey"))
       .groupBy(year(col("o_orderdate")).as("o_year"))

@@ -532,17 +532,27 @@ object Similarity {
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
-    val (centroids, lists) = ivfIndex(e)
-    // codebook: shared by the corpus encode and qtab; q: shared by
-    // qtab and the probes
-    val codebook = Materialized(ivfPqCodebook(e))
-    val postings = lists.select("vec_id", "cluster", "norm", "embedding")
-      .join(pqCodes(e, codebook, ivfPqBlocks)
-        .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
+    val (centroids, codebook, postings) = ivfPqIndex(e)
+    // shared by qtab and the probes
     val q = Materialized(e.filter(col("vec_id") % queryModFor(queryStride) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm")))
     withQueryMod(adcTopK(q, codebook, centroids, postings), queryStride, emitMod)
+  }
+
+  /** The IVF-PQ index over `e` (vec_id, embedding, norm): coarse
+    * centroids, the scan codebook, and the postings (vec_id, cluster,
+    * norm, embedding, code0..B-1). The one construction of both paths:
+    * the inline entry queries it, the served build writes it as
+    * artifacts. The codebook is shared by the postings' encode and the
+    * query half. */
+  private def ivfPqIndex(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val (centroids, lists) = ivfIndex(e)
+    val codebook = Materialized(ivfPqCodebook(e))
+    val postings = lists.select("vec_id", "cluster", "norm", "embedding")
+      .join(pqCodes(e, codebook, ivfPqBlocks)
+        .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
+    (centroids, codebook, postings)
   }
 
   /** Append the self-describing `query_mod` column on the catalog
@@ -692,18 +702,13 @@ object Similarity {
   // ---------------------------------------------------------------------
   private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String,
       indexDir: String): Unit = {
-    val e = Tables.loadBalanced(spark, dir, "embeddings")
-      .withColumn("norm", expr("vec_norm(embedding)"))
-      .select("vec_id", "embedding", "norm")
-    val (centroids, lists) = ivfIndex(e)
-    // shared by its own artifact and the postings' encode
-    val codebook = Materialized(ivfPqCodebook(e))
+    val (centroids, codebook, postings) = ivfPqIndex(
+      Tables.loadBalanced(spark, dir, "embeddings")
+        .withColumn("norm", expr("vec_norm(embedding)"))
+        .select("vec_id", "embedding", "norm"))
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    lists.select("vec_id", "cluster", "norm", "embedding")
-      .join(pqCodes(e, codebook, ivfPqBlocks)
-        .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster")
+    postings.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$indexDir/postings")
     // the three writes are the only readers
     codebook.unpersist(blocking = false)
@@ -745,7 +750,7 @@ object Similarity {
     val indexDir = servedIndexDir(spark, dir)
     val indexPath = new Path(indexDir)
     graft.sources.Bucketing.ensureBuilt(indexDir,
-      graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/embeddings.parquet"),
+      Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
       indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(indexPath)) {
       buildIvfPqIndex(spark, dir, indexDir)
     }

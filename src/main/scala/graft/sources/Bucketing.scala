@@ -16,10 +16,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed managed table (sorted within buckets for
-    * sort-merge-ready reads). */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String]): Unit =
+  /** Join two same-bucketed tables on their bucket keys; the physical
+    * plan contains no Exchange for either side. */
+  def coLocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
+      keys: Seq[String]): DataFrame =
+    spark.table(leftTable).join(spark.table(rightTable), keys)
+
+  /** Drop any stale version of `table` — catalog entry AND warehouse
+    * directory (an in-memory catalog forgets its tables across JVMs
+    * but the directories persist, and saveAsTable(Overwrite) refuses a
+    * dir it has no catalog entry for) — then write `df` fresh as a
+    * bucketed managed table, sorted within buckets for sort-merge-ready
+    * reads. The location comes from the catalog's own path resolution
+    * (not warehouse-dir string munging), so non-default databases,
+    * URI-escaped paths, and non-local warehouses all clean correctly. */
+  def rewriteBucketed(df: DataFrame, table: String, buckets: Int,
+      keys: Seq[String]): Unit = {
+    dropManaged(df.sparkSession, table)
     // repartition on the bucket keys first: otherwise every input task
     // opens a writer per bucket (tasks x buckets small files) and
     // multi-file buckets forfeit the sortBy guarantee downstream
@@ -30,24 +43,6 @@ object Bucketing {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two same-bucketed tables on their bucket keys; the physical
-    * plan contains no Exchange for either side. */
-  def coLocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      keys: Seq[String]): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), keys)
-
-  /** Drop any stale version of `table` — catalog entry AND warehouse
-    * directory (an in-memory catalog forgets its tables across JVMs
-    * but the directories persist, and saveAsTable(Overwrite) refuses a
-    * dir it has no catalog entry for) — then write fresh. The location
-    * comes from the catalog's own path resolution (not warehouse-dir
-    * string munging), so non-default databases, URI-escaped paths, and
-    * non-local warehouses all clean correctly. */
-  def rewriteBucketed(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String]): Unit = {
-    dropManaged(df.sparkSession, table)
-    writeBucketed(df, table, buckets, keys)
   }
 
   /** Drop a managed table AND its warehouse directory (an in-memory
@@ -64,39 +59,6 @@ object Bucketing {
     if (fs.exists(loc)) fs.delete(loc, true): Unit
   }
 
-  /** Digest of a source's file listing — qualified root path +
-    * per-file (relative path, size, mtime) — for [[ensureBuilt]]'s
-    * freshness decision. Driver-side metadata only, resolved through
-    * the Hadoop FileSystem API, so every scheme the job can read
-    * fingerprints the same bytes the same way. None (missing,
-    * unreadable or empty) => caller rebuilds, the safe direction. */
-  def sourceFingerprint(spark: SparkSession, path: String): Option[String] =
-    try {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) None
-      else {
-        val rootStr = fs.makeQualified(root).toString
-        val perFile = scala.collection.mutable.ArrayBuffer.empty[String]
-        var n = 0
-        if (fs.getFileStatus(root).isDirectory) {
-          val it = fs.listFiles(root, true)
-          while (it.hasNext) {
-            val st = it.next()
-            n += 1
-            perFile += s"${st.getPath.toString.stripPrefix(rootStr)}#${st.getLen}#${st.getModificationTime}"
-          }
-        } else {
-          val st = fs.getFileStatus(root)
-          n = 1
-          perFile += s"#${st.getLen}#${st.getModificationTime}"
-        }
-        if (n == 0) None
-        else Some(rootStr + "@" + Integer.toHexString(
-          scala.util.hashing.MurmurHash3.orderedHash(perFile.sorted.toSeq)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Stamps of the state at rest this JVM has built: key -> stamp.
     * In-JVM only, deliberately: cross-JVM reuse would require
     * re-registering the bucket spec in a fresh in-memory catalog, and
@@ -105,7 +67,7 @@ object Bucketing {
   private val builtStamps = scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def resetBuiltStamps(): Unit = builtStamps.clear()
   /** Observability probe for the specs: rebuilds performed by
-    * [[ensureBuilt]] (same pattern as Tables.listingWalks). */
+    * [[ensureBuilt]] (same pattern as Tables.footerReads). */
   private[graft] val ensureRebuilds = new java.util.concurrent.atomic.AtomicLong
 
   /** Run `build` only when this JVM has not already built `key` from
@@ -113,7 +75,7 @@ object Bucketing {
     * the rule for everything kept at rest (bucketed tables, the served
     * ANN index): built once, then served many times; paying the build
     * per call would cancel the point of keeping it. `fingerprint`
-    * (from [[sourceFingerprint]]) keys the decision: None always
+    * (from `graft.Tables.fingerprint`) keys the decision: None always
     * rebuilds, a changed source fingerprint (regenerated source,
     * different sfDir in the same JVM) rebuilds, an unchanged one
     * skips. Serialized in-JVM; concurrent cross-process builders of the

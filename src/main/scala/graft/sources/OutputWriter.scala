@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, current_date, lit}
 
@@ -97,11 +98,15 @@ object OutputWriter {
     * rewrite is a maintenance pass — the extra materialization is the
     * cost of an atomic-per-partition in-place rewrite without a second
     * table swap). `nFilesOverride` pins the file count for tests;
-    * production sizes from bytes via [[Layout.targetFileCount]]. */
+    * production sizes it from the bytes at the table's catalog
+    * location via [[Layout.targetFileCount]]. */
   def compactFactTable(spark: SparkSession, table: String,
       targetBytes: Long = 128L << 20,
-      nFilesOverride: Option[Int] = None): Unit =
-    zClusterStaged(spark, spark.table(table), targetBytes, nFilesOverride) {
+      nFilesOverride: Option[Int] = None): Unit = {
+    val location = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).location
+    zClusterStaged(spark, spark.table(table), new Path(location).toString, targetBytes,
+        nFilesOverride) {
       staged =>
         val key = "spark.sql.sources.partitionOverwriteMode"
         val prev = spark.conf.getOption(key)
@@ -112,6 +117,7 @@ object OutputWriter {
           case None    => spark.conf.unset(key)
         }
     }
+  }
 
   /** Path twin of [[compactFactTable]] for [[writeFact]] outputs (a
     * date-partitioned parquet root with no catalog entry) — the shape
@@ -125,7 +131,8 @@ object OutputWriter {
   def compactFactPath(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       nFilesOverride: Option[Int] = None): Unit =
-    zClusterStaged(spark, graft.Tables.read(spark, path), targetBytes, nFilesOverride) {
+    zClusterStaged(spark, graft.Tables.read(spark, path), path, targetBytes,
+        nFilesOverride) {
       staged =>
         staged.write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
@@ -134,7 +141,8 @@ object OutputWriter {
     }
 
   /** The shared half of the two maintenance rewrites: Z-cluster `t`
-    * on (STORE_KEY, PROD_KEY) under its date partitions, checkpoint
+    * (the table stored at `path`, which sizes the file count) on
+    * (STORE_KEY, PROD_KEY) under its date partitions, checkpoint
     * the plan (self-overwrite: Spark refuses a write whose plan reads
     * the target, so the lineage must be severed through a
     * materialization first), and hand the column-aligned result to
@@ -145,12 +153,12 @@ object OutputWriter {
     * path and break a later unrelated `.checkpoint()` in the same
     * session. In that case the (empty-after-use) temp dir is left in
     * place for OS tmp cleanup to reclaim. */
-  private def zClusterStaged(spark: SparkSession, t: DataFrame,
+  private def zClusterStaged(spark: SparkSession, t: DataFrame, path: String,
       targetBytes: Long, nFilesOverride: Option[Int])
       (writeBack: DataFrame => Unit): Unit = {
     val cols = t.columns
     val nFiles = nFilesOverride.getOrElse(
-      Layout.targetFileCount(spark, t, targetBytes))
+      Layout.targetFileCount(spark, path, targetBytes))
     val plan = Layout.zClusterPlan(t, "STORE_KEY", "PROD_KEY", nFiles,
       leadingKeys = Seq("date"))
     val ckptDir = java.nio.file.Files
@@ -161,7 +169,7 @@ object OutputWriter {
       val staged = plan.checkpoint(eager = true)
       writeBack(staged.select(cols.map(col).toIndexedSeq: _*))
     } finally {
-      val ckpt = new org.apache.hadoop.fs.Path(ckptDir.toUri)
+      val ckpt = new Path(ckptDir.toUri)
       val fs = ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
       prevCkpt match {
         case Some(dir) =>

@@ -11,12 +11,13 @@ package graft.streaming
   * process resumed (processed only the new file), appended no
   * duplicates, and converged to the batch probe.
   *
-  * The resume chain under test crosses processes through three
-  * durable pieces: the stream checkpoint (file-source log), the HIVE
+  * The resume chain under test crosses processes through two durable
+  * pieces: the stream checkpoint (file-source log) and the HIVE
   * METASTORE (the managed sink table — under the default in-memory
   * catalog a fresh JVM never sees it and DocDedupStream deliberately
-  * starts fresh), and the at-rest band index (fingerprint-gated, so
-  * JVM 2 must reuse JVM 1's build instead of rebuilding).
+  * starts fresh). The at-rest band index is not one of them: its
+  * build stamp is per JVM (`Bucketing.ensureBuilt`), so JVM 2 rebuilds
+  * it from the unchanged corpus.
   *
   * Usage: `ResumeHarness <corpusDir> <dropDir> <ckptDir>
   * <warehouseDir> <metastoreDbDir> <phase>` — phase is a label for

@@ -60,7 +60,7 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
       assert(frag.inputFiles.length >= 48, "precondition: input is fragmented")
 
       // compact to a byte-derived target — far fewer files
-      val n = Layout.targetFileCount(spark, frag, targetBytes = 256 * 1024)
+      val n = Layout.targetFileCount(spark, fragDir, targetBytes = 256 * 1024)
       assert(n < 48, s"target count $n must shrink the file count")
       val outDir = new java.io.File(work, "compacted").getPath
       Layout.compactFiles(frag, outDir, n)

@@ -279,8 +279,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
 
   /** Staleness cycle shared between the plain-path and the
     * `file:`-scheme runs: the build-once rule for state at rest
-    * (Bucketing.ensureBuilt) resolves corpora through the Hadoop
-    * FileSystem API, so any scheme the job can read must behave
+    * (Bucketing.ensureBuilt, keyed by Tables.fingerprint) resolves
+    * corpora through the Hadoop FileSystem API, so any scheme the job can read must behave
     * identically — a repeat call on unchanged corpus bytes serves
     * without rebuilding; a corpus regenerated at the same path
     * re-fingerprints and rebuilds. */
@@ -327,19 +327,19 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("a URI-scheme corpus path fingerprints instead of degrading to never-fresh") {
     // a java.io.File walk cannot resolve scheme-qualified paths, so a
     // "file:/…" (or hdfs://…) corpus would fingerprint None, i.e.
-    // rebuild on every call. The Hadoop FileSystem walk resolves every
-    // scheme the job can read, and the fingerprint (relative paths are
-    // stripped against the qualified root) is identical however the
-    // same bytes are addressed.
+    // rebuild on every call. Tables' listing goes through the Hadoop
+    // FileSystem API, which resolves every scheme the job can read,
+    // and the digest (relative paths under the qualified root) is
+    // identical however the same bytes are addressed.
     val corpusDir = java.nio.file.Files
       .createTempDirectory("graft_uri_corpus").toFile
     val dst = new java.io.File(corpusDir, "embeddings.parquet")
     try {
       java.nio.file.Files.copy(
         new java.io.File(SF, "embeddings.parquet").toPath, dst.toPath): Unit
-      val plain = Bucketing.sourceFingerprint(spark, dst.getPath)
+      val plain = Tables.fingerprint(spark, dst.getPath)
         .getOrElse(fail("plain local corpus must fingerprint"))
-      val uri = Bucketing.sourceFingerprint(spark, "file:" + dst.getPath)
+      val uri = Tables.fingerprint(spark, "file:" + dst.getPath)
         .getOrElse(fail("file:-scheme corpus must fingerprint, not degrade"))
       assert(plain === uri,
         "the fingerprint must not depend on how the path is spelled")

@@ -7,10 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A table's metadata (schema, row count, file sizes, events ts unit)
-  * is read from its parquet footers at most once per session and path,
-  * with no Spark job: every catalog query builds its input frames
-  * through these reads, and a schema-less parquet read or a count()
-  * costs one or two jobs per call. */
+  * is read from its parquet footers at most once per session, path and
+  * data-file listing, with no Spark job: every catalog query builds its
+  * input frames through these reads, and a schema-less parquet read or
+  * a count() costs one or two jobs per call. */
 class TablesSpec extends AnyFunSuite with SparkSuite {
 
   private def rmTree(f: java.io.File): Unit = {
@@ -51,9 +51,9 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     try {
       Seq(1L, 2L).toDF("a").write.parquet(path)
       assert(Tables.read(spark, path).columns.toSeq === Seq("a"))
-      val walks = Tables.listingWalks.get()
+      val reads = Tables.footerReads.get()
       Tables.read(spark, path)
-      assert(Tables.listingWalks.get() === walks, "an unchanged path must hit the cache")
+      assert(Tables.footerReads.get() === reads, "an unchanged path must hit the cache")
       Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("a", "b")
         .write.mode("overwrite").parquet(path)
       val back = Tables.read(spark, path)
@@ -64,43 +64,59 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     } finally rmTree(dir)
   }
 
-  test("no source file outside Tables.scala reads parquet without a schema") {
+  /** `file:line: text` of every `src/main` line outside Tables.scala
+    * that matches `pattern`. */
+  private def mainOffenders(pattern: scala.util.matching.Regex): List[String] = {
     val root = Paths.get("src/main/scala")
-    val offenders = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Tables.scala")
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(".read.parquet(") =>
+          case (line, i) if pattern.findFirstIn(line).isDefined =>
             s"${root.relativize(p)}:${i + 1}: ${line.trim}"
         }
       }.toList
+  }
+
+  test("no source file outside Tables.scala reads parquet without a schema") {
+    val offenders = mainOffenders("""\.read\.parquet\(""".r)
     assert(offenders.isEmpty,
       offenders.mkString("read these through Tables.read:\n  ", "\n  ", ""))
   }
 
-  test("balance() walks the file listing once per (session, path)") {
-    val before = Tables.listingWalks.get()
+  test("no source file outside Tables.scala lists a table's data files") {
+    // a Hadoop listFiles(path, recursive) or a DataFrame's inputFiles
+    // is a second listing beside Tables.meta's, with its own freshness
+    // rule; java.io.File.listFiles() (no arguments) deletes scratch
+    // directories and is not a table read
+    val offenders = mainOffenders("""listFiles\((?!\))|\.inputFiles\b""".r)
+    assert(offenders.isEmpty,
+      offenders.mkString("take these from Tables.meta:\n  ", "\n  ", ""))
+  }
+
+  test("balance() reads the footers once per (session, path)") {
+    val before = Tables.footerReads.get()
     Tables.loadBalanced(spark, SF, "lineitem")
-    val afterFirst = Tables.listingWalks.get()
+    val afterFirst = Tables.footerReads.get()
     Tables.loadBalanced(spark, SF, "lineitem")
     Tables.loadBalanced(spark, SF, "lineitem")
-    val afterRepeat = Tables.listingWalks.get()
+    val afterRepeat = Tables.footerReads.get()
     // other suites may have warmed this path already in the shared
-    // session — assert the *repeat* calls never re-walk, and the first
-    // call walks at most once
-    assert(afterFirst - before <= 1, "first load must walk at most once")
+    // session — assert the *repeat* calls never re-read, and the first
+    // call reads at most once
+    assert(afterFirst - before <= 1, "first load must read at most once")
     assert(afterRepeat === afterFirst, "repeat loads must hit the cache")
   }
 
   test("balance() caches per path, not globally") {
     Tables.loadBalanced(spark, SF, "customer")
-    val warm = Tables.listingWalks.get()
+    val warm = Tables.footerReads.get()
     Tables.loadBalanced(spark, SF, "orders") // distinct cold path
-    // a distinct path may need its own (single) walk; the customer
+    // a distinct path may need its own (single) read; the customer
     // path stays cached
     Tables.loadBalanced(spark, SF, "customer")
-    val after = Tables.listingWalks.get()
-    assert(after - warm <= 1, "only the new path may walk")
+    val after = Tables.footerReads.get()
+    assert(after - warm <= 1, "only the new path may read")
   }
 
   test("cached balance still spreads an unsplittable small input") {
@@ -218,6 +234,54 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
       java.nio.file.Files.copy(strayPart.toPath, dest.toPath)
       val e = intercept[IllegalArgumentException] {
         Tables.eventsTsNanosFactor(spark, mixed.getPath)
+      }
+      assert(e.getMessage.contains("mixed ts vintages"))
+    } finally rmTree(dir)
+  }
+
+  test("a part added inside an existing partition directory misses the cache") {
+    // the new part changes the partition directory's mtime but not the
+    // root's; only a listing of the data files sees it
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nested").toFile
+    val path = new java.io.File(dir, "events.parquet")
+    val partDir = new java.io.File(path, "dt=2024-01-01")
+    val epochSec = 1704067200L
+    def events(ids: Range) = ids.map(i => (i.toLong, epochSec * 1000000000L, 5L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    // write `df` as one part elsewhere, then copy it into the partition
+    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val stage = new java.io.File(dir, s"stage_$name")
+      df.coalesce(1).write.parquet(stage.getPath)
+      val part = stage.listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, new java.io.File(partDir, name).toPath): Unit
+    }
+    try {
+      events(0 until 100).withColumn("dt", org.apache.spark.sql.functions.lit("2024-01-01"))
+        .coalesce(1).write.partitionBy("dt").parquet(path.getPath)
+      assert(Tables.rows(spark, dir.getPath, "events") === 100L)
+      assert(Tables.eventsTsNanosFactor(spark, path.getPath) === 1L)
+      val rootMtime = path.lastModified()
+      land(events(100 until 150), "part-zzz-added.parquet")
+      assert(path.lastModified() === rootMtime, "precondition: the root is not touched")
+      assert(spark.read.parquet(path.getPath).count() === 150L)
+      assert(Tables.rows(spark, dir.getPath, "events") === 150L,
+        "the added part's rows must be counted")
+      // a MICROS-vintage part landing the same way, named to sort last
+      val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+      try {
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        land(Seq((200L, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(epochSec)),
+          5L, "click", 1.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+          "part-zzzz-micros.parquet")
+      } finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+        case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      }
+      val e = intercept[IllegalArgumentException] {
+        Tables.eventsTsNanosFactor(spark, path.getPath)
       }
       assert(e.getMessage.contains("mixed ts vintages"))
     } finally rmTree(dir)
