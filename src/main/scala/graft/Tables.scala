@@ -109,6 +109,10 @@ object Tables {
     * guarantee (TablesSpec); no production reads. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Listing counter — spec probe for the one-listing-per-load
+    * guarantee (TablesSpec); no production reads. */
+  private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The cached metadata of the table at `path`, read again when the
     * digest of its data-file listing changed; None when `path` does
     * not exist or holds no data file. The outer map is WEAK on the
@@ -144,6 +148,7 @@ object Tables {
     * None when `p` does not exist or holds no data file. The digest is
     * the same however the root is spelled (`/x` or `file:/x`). */
   private def listing(fs: FileSystem, p: Path): Option[(String, Seq[FileStatus])] = {
+    listings.incrementAndGet()
     val root = try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
     root.flatMap { st =>
@@ -184,8 +189,10 @@ object Tables {
     * directory still gets its partition columns appended) with its
     * schema from the cached footer. A missing or empty path gets
     * Spark's own error. */
-  def read(spark: SparkSession, path: String): DataFrame = meta(spark, path) match {
-    case Some(m) => spark.read.schema(m.schema(spark)).parquet(path)
+  def read(spark: SparkSession, path: String): DataFrame = readWith(spark, path, meta(spark, path))
+
+  private def readWith(spark: SparkSession, path: String, m: Option[Meta]): DataFrame = m match {
+    case Some(t) => spark.read.schema(t.schema(spark)).parquet(path)
     case None    => spark.read.parquet(path)
   }
 
@@ -204,11 +211,14 @@ object Tables {
     * with heavy per-row compute (hashing, sketching, vector math). */
   def loadBalanced(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    balance(spark, path, read(spark, path))
+    val m = meta(spark, path)
+    balance(spark, m, readWith(spark, path, m))
   }
 
-  private def balance(spark: SparkSession, path: String, df: DataFrame): DataFrame =
-    if (meta(spark, path).exists(needsSpread(spark, _)))
+  /** The spread verdict takes the load's own [[Meta]], so one load
+    * lists its table once. */
+  private def balance(spark: SparkSession, m: Option[Meta], df: DataFrame): DataFrame =
+    if (m.exists(needsSpread(spark, _)))
       df.repartition(spark.sparkContext.defaultParallelism)
     else df
 
@@ -274,19 +284,15 @@ object Tables {
       spark: SparkSession, path: String): Option[Long] =
     meta(spark, path).map(_.tsNanosFactor)
 
-  private def eventsRaw(spark: SparkSession, path: String): DataFrame = {
+  def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    val path = s"$sfDir/events.parquet"
+    val m = metaOf(spark, path)
     // floor division via pmod (Spark's `div` truncates toward zero,
     // which would disagree with the floor-semantics oracles for any
     // pre-1970 timestamp)
-    val factor = eventsTsNanosFactor(spark, path)
-    spark.read.schema(eventsSchema).parquet(path)
-      .withColumn("ts", org.apache.spark.sql.functions.expr(s"ts * ${factor}L"))
+    balance(spark, Some(m), spark.read.schema(eventsSchema).parquet(path)
+      .withColumn("ts", org.apache.spark.sql.functions.expr(s"ts * ${m.tsNanosFactor}L"))
       .withColumn("sec",
-        org.apache.spark.sql.functions.expr("(ts - pmod(ts, 1000000000)) div 1000000000"))
-  }
-
-  def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/events.parquet"
-    balance(spark, path, eventsRaw(spark, path))
+        org.apache.spark.sql.functions.expr("(ts - pmod(ts, 1000000000)) div 1000000000")))
   }
 }

@@ -51,8 +51,14 @@ object Dedup {
     """list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)),
       |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))""".stripMargin
 
-  /** Hashed-shingle frame (doc_id, sh: array<long>) for every shingle
-    * consumer: shingles3_h64 emits the distinct 3-gram xxhash64 values
+  /** Signature frame (doc_id, sh, n) over any (doc_id, text) frame:
+    * the one shingle prep every shingle-set consumer reads (jaccard,
+    * containment, minhash-LSH, both incremental probes, the at-rest
+    * index and the streaming probe). `sh` holds the doc's distinct
+    * 3-gram hashes, sorted ONCE so verification is a merge, not a
+    * per-pair hash set (minhash is order-invariant, so bands are
+    * unaffected); `n` is their count; shingle-less docs are dropped.
+    * shingles3_h64 emits the distinct 3-gram xxhash64 values
     * directly — the identical hash stream to
     * `transform(shingles3(toks), s -> xxhash64(s))` with zero
     * shingle-string allocation (FunctionsSpec asserts the
@@ -61,11 +67,12 @@ object Dedup {
     * tokenization inlined per element when Catalyst pushes
     * `size(sh) > 0` below the projection — see the Shingles3 kernel
     * scaladoc for the full autopsy. */
-  private[graft] def docShingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    Tables.loadBalanced(spark, dir, "documents")
-      .withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
-      .select("doc_id", "sh")
-  }
+  private[graft] def signatures(docs: DataFrame): DataFrame =
+    docs.withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
+      .filter(size(col("sh")) > 0)
+      .withColumn("sh", sort_array(col("sh")))
+      .withColumn("n", size(col("sh")))
+      .select("doc_id", "sh", "n")
 
   private val docShinglesSqlCte =
     s"""toks_t AS (SELECT doc_id, $toksSql AS toks FROM documents),
@@ -196,31 +203,18 @@ object Dedup {
   private[graft] val defaultMaxShingleDf = 64L
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccard(spark, dir, defaultMaxShingleDf)
-
-  /** Caller-facing cap knob. The recall trade is the caller's to make:
-    * a templated corpus (boilerplate docs differing only in a few
-    * tokens) can hold qualifying pairs whose EVERY shared shingle
-    * exceeds the cap — those pairs are silently dropped. Raise maxDf
-    * (or pass Long.MaxValue to disable) for such corpora; the
-    * per-shingle pair cost is maxDf·(maxDf−1)/2. At the driver's gate
-    * scales the cap provably never fires (max shingle DF at sf0.1 is
-    * ≤ 64, measured); at the 10× clone-rich bench scale it does, and
-    * the capped oracle verifies exactly that semantics. The DF-cap
-    * spec additionally covers the capped path with a planted hot
-    * shingle. */
-  def ngramJaccard(spark: SparkSession, dir: String, maxDf: Long): DataFrame =
-    ngramJaccardCapped(docShingleHashes(spark, dir), maxDf)
+    ngramJaccardCapped(signatures(Tables.loadBalanced(spark, dir, "documents")),
+      defaultMaxShingleDf)
 
   /** Hashed inverted index: one row per (doc, shingle) over a
-    * HASHED-shingle (doc_id, sh: array<long>) frame — the shingle
-    * strings are never materialized at all (shingles3_h64 hashes the
-    * 3-grams in-kernel), and the self-join shuffles 8-byte hashes
-    * instead of ~30-byte strings. (64-bit collisions across distinct
-    * shingles are ~|S|²/2⁶⁵ — immaterial — and the exact-string
-    * DuckDB oracle would catch one.) */
-  private def hashedIndex(docShH: DataFrame): DataFrame =
-    docShH.select(col("doc_id"), explode(col("sh")).as("s"))
+    * signature frame — the shingle strings are never materialized at
+    * all (shingles3_h64 hashes the 3-grams in-kernel), and the
+    * self-join shuffles 8-byte hashes instead of ~30-byte strings.
+    * (64-bit collisions across distinct shingles are ~|S|²/2⁶⁵ —
+    * immaterial — and the exact-string DuckDB oracle would catch
+    * one.) */
+  private def hashedIndex(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), explode(col("sh")).as("s"))
 
   /** Shingles with DF > maxDf — the ubiquitous-boilerplate tail,
     * 8 bytes per entry. Computed with a map-side partial count (tiny
@@ -234,8 +228,8 @@ object Dedup {
     sh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("s")
 
-  /** Candidate pairs sharing ≥1 shingle with DF ≤ maxDf (spec probe —
-    * [[ngramJaccardCapped]] inlines the same shape).
+  /** Candidate pairs (doc_i < doc_j) of a signature frame sharing ≥1
+    * shingle with DF ≤ maxDf, deduplicated.
     *
     * Measured-and-rejected (r22, guide §1/§7 — measure, don't assume):
     * a posting-list form — groupBy(s) collect_list (bounded at maxDf
@@ -250,33 +244,28 @@ object Dedup {
     * interpreted-vs-codegen loss vec_pq_assign's rejected in-row
     * argmin measured in r21. The join form also lets AQE pick
     * broadcast/SMJ per scale. Kept the self-join. */
-  private[graft] def ngramCandidates(docSh: DataFrame, maxDf: Long): DataFrame = {
-    // shared by the DF stats and the cold-shingle anti-join
-    val sh = Materialized(hashedIndex(docSh))
-    val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
-    coldPairs(cold)
+  private[graft] def ngramCandidates(sigs: DataFrame, maxDf: Long): DataFrame = {
+    val sh = hashedIndex(sigs)
+    selfPairs(sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti"), "s")
   }
 
-  /** The DF-capped candidate self-join: pairs sharing ≥1 cold shingle,
-    * deduplicated. (See [[ngramCandidates]] for the measured-and-
-    * rejected posting-list alternative.) */
-  private def coldPairs(cold: DataFrame): DataFrame =
-    cold.as("a")
-      .join(cold.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+  /** Distinct (doc_i, doc_j) pairs, doc_i < doc_j, of a (doc_id, key)
+    * frame whose rows share a `key` value — the candidate self-join of
+    * the inverted index (key = shingle) and of minhash-LSH (key =
+    * band). */
+  private def selfPairs(keyed: DataFrame, key: String): DataFrame =
+    keyed.as("a")
+      .join(keyed.as("b"), col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
       .distinct()
 
-  /** Exact jaccard pairs with the hot-shingle cap. Reported jaccard
-    * values are exact — verification merge-counts each candidate's
-    * FULL sorted hash arrays (hot shingles included), so the cap's
-    * only effect is recall: a pair is missed iff EVERY shingle it
-    * shares is hot. */
-  private[graft] def ngramJaccardCapped(docSh: DataFrame, maxDf: Long): DataFrame =
-    pairIntersections(docSh, maxDf)
-      .filter(jaccardAtLeast08)
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_i", "doc_j", "jaccard")
-      .orderBy("doc_i", "doc_j")
+  /** Exact jaccard pairs with the hot-shingle cap over a signature
+    * frame. Reported jaccard values are exact — verification
+    * merge-counts each candidate's FULL sorted hash arrays (hot
+    * shingles included), so the cap's only effect is recall: a pair
+    * is missed iff EVERY shingle it shares is hot. */
+  private[graft] def ngramJaccardCapped(sigs: DataFrame, maxDf: Long): DataFrame =
+    jaccard(pairIntersections(sigs, maxDf)).orderBy("doc_i", "doc_j")
 
   /** The 0.8-jaccard threshold as exact integer arithmetic over the
     * merge-count column: I/(na+nb−I) ≥ 4/5 ⟺ 9·I ≥ 4·(na+nb) (integers
@@ -295,39 +284,46 @@ object Dedup {
   private[graft] val jaccardAtLeast08: Column =
     lit(9L) * col("n_inter") >= lit(4L) * (col("na") + col("nb"))
 
-  /** Exact shingle-intersection counts per candidate pair (doc_i <
-    * doc_j), with the hot-shingle DF cap: (doc_i, doc_j, n_inter, na,
-    * nb) where na/nb are the docs' distinct-shingle counts. Shared by
-    * jaccard (symmetric similarity) and containment (asymmetric) —
-    * both are pure functions of this frame.
-    *
-    * Two-stage shape (the minhash-LSH verification idiom): the capped
-    * inverted index generates DISTINCT candidate pairs as 16-byte
-    * rows, then each candidate is verified by one linear
-    * `inter_count_sorted` merge over the two docs' sorted hash arrays
-    * — hot shingles included, so reported counts are exact even for
-    * shingles the index dropped. Versus counting shared shingles in
-    * the pair self-join itself, this trades the wide
-    * per-shared-shingle aggregation plus three bookkeeping joins
-    * (per-doc sizes, hot-set re-add) for one array merge per
-    * SURVIVING candidate; the arrays ride two hash joins keyed on
-    * doc id, so nothing about the shape is quadratic in corpus
-    * size. */
-  private def pairIntersections(docSh: DataFrame, maxDf: Long): DataFrame = {
+  /** (l, r, jaccard) of the verified pairs at jaccard ≥ 0.8: the
+    * [[jaccardAtLeast08]] filter runs BEFORE the ratio, so pushdown
+    * inlines one merge per candidate. Shared by every jaccard entry. */
+  private def jaccard(pairs: DataFrame): DataFrame = {
+    val Array(l, r, _*) = pairs.columns
+    pairs.filter(jaccardAtLeast08)
+      .select(col(l), col(r),
+        (col("n_inter") / (col("na") + col("nb") - col("n_inter"))).as("jaccard"))
+  }
+
+  /** Exact verification of a candidate (l, r) pair frame against two
+    * signature frames (l's doc from `left`, r's from `right`):
+    * (l, r, n_inter, na, nb), where na/nb are the docs' distinct-
+    * shingle counts. Each pair's two sorted hash arrays ride two hash
+    * joins keyed on doc id and meet in one linear `inter_count_sorted`
+    * merge — no per-pair allocation, nothing quadratic in corpus size,
+    * and shingles a capped index dropped still count, so n_inter is
+    * exact. Jaccard and containment are pure functions of this frame;
+    * every shingle-set pair consumer verifies here. */
+  private def verified(cands: DataFrame, left: DataFrame, right: DataFrame): DataFrame = {
+    val Array(l, r) = cands.columns
+    cands
+      .join(left.select(col("doc_id").as(l), col("sh").as("sh_a"), col("n").as("na")), l)
+      .join(right.select(col("doc_id").as(r), col("sh").as("sh_b"), col("n").as("nb")), r)
+      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
+      .select(l, r, "n_inter", "na", "nb")
+  }
+
+  /** Verified shingle-intersection counts per capped-index candidate
+    * pair (doc_i < doc_j, n_inter, na, nb) — shared by jaccard
+    * (symmetric) and containment (asymmetric). Versus counting shared
+    * shingles in the pair self-join itself, verifying DISTINCT
+    * 16-byte candidate rows trades the wide per-shared-shingle
+    * aggregation plus three bookkeeping joins (per-doc sizes, hot-set
+    * re-add) for one array merge per candidate. */
+  private def pairIntersections(sigs: DataFrame, maxDf: Long): DataFrame = {
     // shared by the DF stats, the pair self-join (via the exploded
-    // index) and both verification joins. sh sorted once per doc so
-    // verification is a merge, not a per-pair hash set.
-    val docs = Materialized(docSh.filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")).cast("long")))
-    val sh = hashedIndex(docs)
-    val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
-    val candidates = coldPairs(cold)
-    candidates
-      .join(docs.select(col("doc_id").as("doc_i"), col("sh").as("sh_a"), col("n").as("na")), "doc_i")
-      .join(docs.select(col("doc_id").as("doc_j"), col("sh").as("sh_b"), col("n").as("nb")), "doc_j")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)").cast("long"))
-      .select("doc_i", "doc_j", "n_inter", "na", "nb")
+    // index) and both verification joins
+    val docs = Materialized(sigs)
+    verified(ngramCandidates(docs, maxDf), docs, docs)
   }
 
   // ---------------------------------------------------------------------
@@ -345,14 +341,15 @@ object Dedup {
   private[graft] val containmentThreshold = 0.5
 
   def containment(spark: SparkSession, dir: String): DataFrame =
-    containmentCapped(docShingleHashes(spark, dir), defaultMaxShingleDf)
+    containmentCapped(signatures(Tables.loadBalanced(spark, dir, "documents")),
+      defaultMaxShingleDf)
 
-  private[graft] def containmentCapped(docSh: DataFrame, maxDf: Long): DataFrame =
+  private[graft] def containmentCapped(sigs: DataFrame, maxDf: Long): DataFrame =
     // each undirected candidate pair yields its two directions (the
     // containment denominator is the CONTAINED side's shingle count) in
     // ONE explode over the pair frame — a union of two projections
     // would execute the whole inverted-index DAG twice
-    pairIntersections(docSh, maxDf)
+    pairIntersections(sigs, maxDf)
       // pair-level precondition: SOME direction reaches 0.5 iff
       // I/min(na,nb) ≥ 1/2 ⟺ 2·I ≥ min(na,nb) — exact integer
       // arithmetic (0.5 is a power of two, so the per-direction double
@@ -509,70 +506,34 @@ object Dedup {
   // dedup_minhash_lsh — 64 minhash perms, 32 bands × 2 rows, exact
   // verification of band-collision candidates.
   // ---------------------------------------------------------------------
-  /** 32×2 LSH band keys per document over a HASHED-shingle (doc_id,
-    * sh: array<long>) frame: the 64-permutation min-scan runs over the
+  /** (doc_id, band_key) — the 32×2 LSH bands of a signature frame, each
+    * band's identity folded into ONE 64-bit key (xxhash64 of band index
+    * + band hash). The 64-permutation min-scan runs over the
     * precomputed longs in a codegen'd kernel (graft.functions
-    * .MinHashSig64) — no string building anywhere. Shared by
-    * whole-corpus LSH and the incremental new-batch-vs-index
-    * variant. */
-  private def minhashBands(docsSh: DataFrame): DataFrame =
-    docsSh
-      .withColumn("sig", expr("minhash_sig64(sh)"))
-      .select(col("doc_id"),
-        explode(expr(
-          """transform(sequence(0, 31), b -> named_struct(
-            |  'band_idx', b,
-            |  'band_hash', xxhash64(element_at(sig, 2*b+1), element_at(sig, 2*b+2))))"""
-            .stripMargin)).as("band"))
-      .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
-
-  /** Band-collision candidate pairs over a hashed-shingle frame —
-    * factored out of [[minhashLsh]] so the candidate stage can be
-    * counted in isolation. Banding has no DF cap: a genuine M-clone group yields
-    * all C(M,2) of its pairs as candidates, which is OUTPUT-optimal —
-    * those pairs ARE the answer set — and each costs one merge-count
-    * to verify. */
-  private[graft] def minhashCandidates(docsSh: DataFrame): DataFrame = {
-    val bands = minhashBands(docsSh)
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
-      .distinct()
-  }
+    * .MinHashSig64) — no string building anywhere. One key, not two,
+    * so the at-rest index can be bucketed on exactly the probe's join
+    * key (co-partitioning rules never force a re-exchange over a key
+    * subset). A cross-band 64-bit collision can only ADD a candidate,
+    * and candidates are exact-verified — false ones never reach the
+    * output. Shared by whole-corpus LSH, both incremental probes and
+    * the at-rest index build. */
+  private[graft] def bandKeys(sigs: DataFrame): DataFrame =
+    sigs.withColumn("sig", expr("minhash_sig64(sh)"))
+      .select(col("doc_id"), explode(expr(
+        """transform(sequence(0, 31), b ->
+          |  xxhash64(b, xxhash64(element_at(sig, 2*b+1), element_at(sig, 2*b+2))))"""
+          .stripMargin)).as("band_key"))
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    // doc_id, sh (hashed shingles), n — shared by candidate generation
-    // AND verification; the signature is deliberately NOT on this
-    // frame so the two verification joins don't recompute 64
-    // permutations per doc. Three consumers, one tokenize+shingle-hash
-    // scan — and the cache holds 8-byte longs,
-    // not ~30-byte shingle strings, so verification merge-counts longs
-    // (the collision argument is the kernel's scaladoc; the
-    // exact-string DuckDB oracle would catch one).
-    // sh is sorted ONCE per document here (minhash is order-invariant,
-    // so bands are unaffected) so verification can merge-count each
-    // candidate pair with inter_count_sorted instead of allocating an
-    // array_intersect hash set + result array per pair.
-    val docs = Materialized(docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh"))))
-    val candidates = minhashCandidates(docs)
-    // Exact verification: merge-count over the sorted hash arrays
-    // (inter_count_sorted — one linear pass per pair, no per-pair
-    // allocation).
-    candidates
-      .join(docs.select(col("doc_id").as("doc_i"), col("sh").as("sh_a"), col("n").as("na")), "doc_i")
-      .join(docs.select(col("doc_id").as("doc_j"), col("sh").as("sh_b"), col("n").as("nb")), "doc_j")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      // single-reference integer threshold BEFORE the ratio so pushdown
-      // inlines ONE merge-count per candidate, not two (see
-      // [[jaccardAtLeast08]])
-      .filter(jaccardAtLeast08)
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_i", "doc_j", "jaccard")
+    // shared by candidate generation AND verification; the minhash
+    // signature is deliberately NOT on this frame so the two
+    // verification joins don't carry 64 longs per doc. The cache holds
+    // 8-byte hashes, not ~30-byte shingle strings.
+    val docs = Materialized(signatures(Tables.loadBalanced(spark, dir, "documents")))
+    // Banding has no DF cap: a genuine M-clone group yields all C(M,2)
+    // of its pairs as candidates, which is OUTPUT-optimal — those pairs
+    // ARE the answer set — and each costs one merge-count to verify.
+    jaccard(verified(selfPairs(bandKeys(docs), "band_key"), docs, docs))
       .orderBy("doc_i", "doc_j")
   }
 
@@ -585,43 +546,36 @@ object Dedup {
   // batch costs |batch| signature computations plus an equi-join probe
   // into the band index — not an O(corpus²) re-pairing. The batch side
   // is small relative to the index, so AQE broadcasts its bands and
-  // the index never reshuffles; an index bucketed by band_hash at rest
-  // makes the probe exchange-free.
+  // the index never reshuffles; an index bucketed by band_key at rest
+  // makes the probe exchange-free. Whether the index sits in memory
+  // (here) or at rest (dedup_incremental_bucketed, the streaming
+  // probe), the batch goes through the same [[probe]].
   // ---------------------------------------------------------------------
   private[graft] val batchStride = 10L
   private[graft] val batchRes = 7L
+  private[graft] val isBatch: Column = col("doc_id") % batchStride === batchRes
 
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    incrementalOver(docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
-      .withColumn("n", size(col("sh"))))
+    // shared by band generation for both sides and the two
+    // verification joins
+    val sigs = Materialized(signatures(Tables.loadBalanced(spark, dir, "documents")))
+    val idx = sigs.filter(!isBatch)
+    probe(sigs.filter(isBatch), bandKeys(idx), idx).orderBy("doc_new", "doc_idx")
   }
 
-  /** Over a HASHED-shingle (doc_id, sh: array<long>, n) frame — shared
-    * by the catalog query and the planted-batch fixture in DedupSpec. */
-  private[graft] def incrementalOver(docsShN: DataFrame): DataFrame = {
-    // shared by band generation for both sides and the two
-    // verification joins. Sorted once per doc so verification
-    // merge-counts (see minhashLsh).
-    val docs = Materialized(docsShN.withColumn("sh", sort_array(col("sh"))))
-    val isBatch = col("doc_id") % batchStride === batchRes
-    val newBands = minhashBands(docs.filter(isBatch))
-    val idxBands = minhashBands(docs.filter(!isBatch)) // at rest in prod
-    val candidates = newBands.as("a")
-      .join(idxBands.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash"))
+  /** Probe a batch signature frame against an index given as its band
+    * keys (doc_id, band_key) and its signature frame, in memory or at
+    * rest: band-key equi-join for candidates, exact verification.
+    * (doc_new, doc_idx, jaccard), UNSORTED — the catalog queries add
+    * their deterministic orderBy; the streaming probe
+    * (graft.streaming.DocDedupStream) appends each micro-batch's rows
+    * as they verify. */
+  private[graft] def probe(batch: DataFrame, idxBands: DataFrame, idxSigs: DataFrame): DataFrame = {
+    val candidates = bandKeys(batch).as("a")
+      .join(idxBands.as("b"), col("a.band_key") === col("b.band_key"))
       .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_idx"))
       .distinct()
-    // Exact verification, same as whole-corpus minhash: candidates are
-    // few, shingle arrays are small
-    candidates
-      .join(docs.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"), col("n").as("na")), "doc_new")
-      .join(docs.select(col("doc_id").as("doc_idx"), col("sh").as("sh_b"), col("n").as("nb")), "doc_idx")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      .filter(jaccardAtLeast08) // one merge per candidate — see jaccardAtLeast08
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_new", "doc_idx", "jaccard")
-      .orderBy("doc_new", "doc_idx")
+    jaccard(verified(candidates, batch, idxSigs))
   }
 
   /** Same exactness argument as dedup_minhash_lsh (32×2 banding misses
@@ -646,7 +600,7 @@ object Dedup {
   // ---------------------------------------------------------------------
   // dedup_incremental_bucketed — the same batch-vs-index probe with the
   // index BUCKETED AT REST, realizing the "exchange-free probe" claim
-  // above: the band index is a bucketed table on band_hash (so the
+  // above: the band index is a bucketed table on band_key (so the
   // probe join never reshuffles it — either the batch bands broadcast,
   // or the probe side alone exchanges to the index's bucketing) and
   // the doc-signature store is bucketed on doc_id (so verification
@@ -662,72 +616,30 @@ object Dedup {
   private[graft] val idxDocsTable = "graft_dedup_docs_bkt"
   private[graft] val idxBuckets = 16
 
-  /** (doc_id, band_key) — band identity folded into ONE 64-bit key
-    * (xxhash64 of band index + band hash) so the at-rest index can be
-    * bucketed on exactly the probe's single join key (co-partitioning
-    * rules never force a re-exchange over a key subset). A cross-band
-    * 64-bit collision can only ADD a candidate, and candidates are
-    * exact-verified — false ones never reach the output. */
-  private def bandKeys(docsSh: DataFrame): DataFrame =
-    minhashBands(docsSh).select(col("doc_id"),
-      expr("xxhash64(band_idx, band_hash)").as("band_key"))
-
-  /** Prepared signature frame (doc_id, sh sorted, n) over any
-    * (doc_id, text) frame — the input contract of [[probeIndexed]];
-    * also how the index side is prepared. */
-  private[graft] def prepSignatures(docs: DataFrame): DataFrame = {
-    docs.withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")))
-      .select("doc_id", "sh", "n")
-  }
-
-  /** Build (or freshness-skip) the two at-rest index tables from
-    * `dir`'s non-batch documents. Idempotent per corpus state. */
-  private[graft] def ensureIndexed(spark: SparkSession, dir: String): Unit = {
+  /** Build (or freshness-skip) the two at-rest index tables from the
+    * non-batch rows of `dir`'s documents, and return the loaded
+    * documents frame for the caller's batch side. Idempotent per
+    * corpus state. */
+  private[graft] def ensureIndexed(spark: SparkSession, dir: String): DataFrame = {
     val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
-    val idxDocs = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
-      .filter(!(col("doc_id") % batchStride === batchRes))
+    val docs = Tables.loadBalanced(spark, dir, "documents")
+    val idxSigs = signatures(docs).filter(!isBatch)
     // shared by the two table builds, and filled only when one runs:
     // ensureBucketed takes its frame by name, and a fresh index is the
     // serving steady state
     graft.sources.Bucketing.ensureBucketed(spark,
-      bandKeys(Materialized(idxDocs)), bandIdxTable, idxBuckets, Seq("band_key"), fp)
+      bandKeys(Materialized(idxSigs)), bandIdxTable, idxBuckets, Seq("band_key"), fp)
     graft.sources.Bucketing.ensureBucketed(spark,
-      Materialized(idxDocs), idxDocsTable, idxBuckets, Seq("doc_id"), fp)
-    idxDocs.unpersist(blocking = false): Unit
-  }
-
-  /** Probe a prepared batch frame (doc_id, sh sorted, n — see
-    * [[prepSignatures]]) against the at-rest index tables: band-key
-    * equi-join for candidates, merge-count verification. UNSORTED —
-    * the batch catalog query adds its deterministic orderBy; the
-    * streaming probe (graft.streaming.DocDedupStream) appends each
-    * micro-batch's rows as they verify. */
-  private[graft] def probeIndexed(batch: DataFrame): DataFrame = {
-    val spark = batch.sparkSession
-    val candidates = bandKeys(batch).as("a")
-      .join(spark.table(bandIdxTable).as("b"), col("a.band_key") === col("b.band_key"))
-      .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_idx"))
-      .distinct()
-    candidates
-      .join(batch.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_new")
-      .join(spark.table(idxDocsTable).select(col("doc_id").as("doc_idx"),
-        col("sh").as("sh_b"), col("n").as("nb")), "doc_idx")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      .filter(jaccardAtLeast08) // one merge per candidate — see jaccardAtLeast08
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_new", "doc_idx", "jaccard")
+      Materialized(idxSigs), idxDocsTable, idxBuckets, Seq("doc_id"), fp)
+    idxSigs.unpersist(blocking = false): Unit
+    docs
   }
 
   def incrementalBucketed(spark: SparkSession, dir: String): DataFrame = {
-    ensureIndexed(spark, dir)
     // shared by band generation and the verification join
-    val batch = Materialized(prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
-      .filter(col("doc_id") % batchStride === batchRes))
-    probeIndexed(batch).orderBy("doc_new", "doc_idx")
+    val batch = Materialized(signatures(ensureIndexed(spark, dir)).filter(isBatch))
+    probe(batch, spark.table(bandIdxTable), spark.table(idxDocsTable))
+      .orderBy("doc_new", "doc_idx")
   }
 
   // ---------------------------------------------------------------------

@@ -69,8 +69,12 @@ trait Notifier {
 }
 
 /** Shared alert payload: ONE wire format across every transport, so a
-  * consumer can switch transports without re-parsing. */
-private[pipeline] object AlertJson {
+  * consumer can switch transports without re-parsing. `jsonStr` is
+  * also the engine's one JSON string escaper (Verify's oracle dump). */
+private[graft] object AlertJson {
+  /** A JSON string literal: quote, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR left raw makes a strict parser
+    * reject the whole document. */
   def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"'           => "\\\""

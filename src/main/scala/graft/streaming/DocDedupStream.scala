@@ -23,11 +23,11 @@ import graft.operators.Dedup
   * `distinct` without event time would grow unbounded state for a
   * dedup that is structurally per-batch. `foreachBatch` is the
   * correct Spark idiom here: each micro-batch runs the SAME batch
-  * probe plan (`Dedup.probeIndexed` — shared code, so stream and
-  * batch semantics cannot drift) and appends its verified pairs to
-  * the sink table. A doc pair can repeat across micro-batches only if
-  * the same doc_id re-arrives, which the drop-folder contract
-  * excludes (same as the daily-batch contract).
+  * probe plan (`Dedup.probe` over the at-rest tables — shared code,
+  * so stream and batch semantics cannot drift) and appends its
+  * verified pairs to the sink table. A doc pair can repeat across
+  * micro-batches only if the same doc_id re-arrives, which the
+  * drop-folder contract excludes (same as the daily-batch contract).
   */
 object DocDedupStream {
 
@@ -99,9 +99,10 @@ object DocDedupStream {
       // schema-only seed so the view resolves before the first batch;
       // partitioned by batch_id so each micro-batch owns one partition
       // it can idempotently overwrite on replay
-      Dedup.probeIndexed(
-          Dedup.prepSignatures(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), docsSchema)))
+      Dedup.probe(
+          Dedup.signatures(spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](), docsSchema)),
+          spark.table(Dedup.bandIdxTable), spark.table(Dedup.idxDocsTable))
         .limit(0).withColumn("batch_id", lit(-1L))
         .write.partitionBy("batch_id").saveAsTable(tbl)
     }
@@ -120,7 +121,7 @@ object DocDedupStream {
         // shared by band generation and the verification join;
         // released per micro-batch — a continuous stream must not
         // accrete one cache entry per trigger
-        val prepared = Materialized(Dedup.prepSignatures(batch))
+        val prepared = Materialized(Dedup.signatures(batch))
         // dynamic overwrite of THIS batch's partition only: a replayed
         // batchId (crash after write, before the stream's commit log)
         // rewrites its own partition instead of double-appending. The
@@ -133,7 +134,8 @@ object DocDedupStream {
         val pom = "spark.sql.sources.partitionOverwriteMode"
         val prev = bs.conf.get(pom, "static")
         bs.conf.set(pom, "dynamic")
-        try Dedup.probeIndexed(prepared).withColumn("batch_id", lit(batchId))
+        try Dedup.probe(prepared, bs.table(Dedup.bandIdxTable), bs.table(Dedup.idxDocsTable))
+          .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").insertInto(tbl)
         finally {
           bs.conf.set(pom, prev)

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.Dedup
+
 /** One phase of the CROSS-JVM streaming-resume check (RUNBOOK.md's
   * "persistent catalog" deployment note, previously documented but
   * never exercised): build a SparkSession against a shared
@@ -53,11 +55,11 @@ object ResumeHarness {
     val distinct = tbl.distinct().count()
     // convergence oracle: the BATCH probe of everything currently in
     // the drop folder against the same at-rest index (shared plan —
-    // Dedup.probeIndexed — so stream/batch drift is impossible by
+    // Dedup.probe — so stream/batch drift is impossible by
     // construction; what this checks is the exactly-once bookkeeping)
-    val want = graft.operators.Dedup.probeIndexed(
-      graft.operators.Dedup.prepSignatures(
-        spark.read.schema(DocDedupStream.docsSchema).parquet(dropDir)))
+    val want = Dedup.probe(
+      Dedup.signatures(spark.read.schema(DocDedupStream.docsSchema).parquet(dropDir)),
+      spark.table(Dedup.bandIdxTable), spark.table(Dedup.idxDocsTable))
     val missing = want.exceptAll(tbl).count()
     val extra = tbl.exceptAll(want).count()
 

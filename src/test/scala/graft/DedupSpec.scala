@@ -107,10 +107,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val dup = Seq(
       (100L, s"$boiler the quick brown fox jumps over the lazy dog again and again today"),
       (101L, s"$boiler the quick brown fox jumps over the lazy dog again and again tonight"))
-    val docs = (unrelated ++ dup).toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+    val docs = Dedup.signatures((unrelated ++ dup).toDF("doc_id", "text"))
     val uncapped = Dedup.ngramCandidates(docs, maxDf = Long.MaxValue).count()
     spark.catalog.clearCache()
     val capped = Dedup.ngramCandidates(docs, maxDf = 8).count()
@@ -144,10 +141,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       (i, s"unique lead$i $boiler unique tail${i}a tail${i}b tail${i}c"))
     val short = (100L, boiler)
     val long = (101L, s"$boiler plus a genuinely unique continuation sentence here")
-    val docs = (carriers :+ short :+ long).toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+    val docs = Dedup.signatures((carriers :+ short :+ long).toDF("doc_id", "text"))
     def pairs(maxDf: Long): Set[(Long, Long)] =
       try Dedup.containmentCapped(docs, maxDf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -421,15 +415,12 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val padding = (1 to 40).map(i => s"filler$i").mkString(" ")
     // doc 2 fully contains doc 1's text plus 40 unique tokens; doc 3/4
     // are a symmetric near-dup pair that must appear in BOTH directions
-    val docs = Seq(
+    val docs = Dedup.signatures(Seq(
       (1L, quoted),
       (2L, s"$quoted $padding"),
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (4L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"))
-      .toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+      .toDF("doc_id", "text"))
     val got = Dedup.containmentCapped(docs, Long.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got((1L, 2L)) === 1.0, s"doc 1 is fully contained in doc 2: $got")
@@ -487,14 +478,10 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       (3L, s"$base forever"),
       (4L, (1 to 20).map(i => s"unrelated$i").mkString(" ")))
       .toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .filter(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("sh")) > 0)
-      .withColumn("n", org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("sh")))
-      .select("doc_id", "sh", "n")
-    val got = Dedup.incrementalOver(docs).collect()
+    // the in-memory index: the same probe dedup_incremental runs
+    val sigs = Dedup.signatures(docs)
+    val idx = sigs.filter(!Dedup.isBatch)
+    val got = Dedup.probe(sigs.filter(Dedup.isBatch), Dedup.bandKeys(idx), idx).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((7L, 3L), (17L, 3L)),
       s"want batch→index pairs only (no 7↔17 batch-batch pair): $got")

@@ -238,6 +238,14 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
       "the inverted index must build from in-kernel shingle hashes")
     assert(nj.contains("inter_count_sorted"),
       "jaccard verification must merge-count, not pair-aggregate")
+    Seq("incremental" -> operators.Dedup.incrementalDedup(spark, sf),
+        "incremental_bucketed" -> operators.Dedup.incrementalBucketed(spark, sf)).foreach {
+      case (name, df) =>
+        val p = plan(df)
+        assert(p.contains("minhash_sig64") && p.contains("inter_count_sorted"),
+          s"$name must band in-kernel and merge-count its candidates")
+    }
+    spark.catalog.clearCache()
     assert(plan(operators.TextAnalysis.tokenStats(spark, sf)).contains("tok_stats"),
       "token stats must run in the one-pass kernel")
     assert(plan(operators.TextAnalysis.quality(spark, sf)).contains("tok_stats"),

@@ -200,6 +200,15 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(!parsed.columns.contains("_corrupt_record"), "no malformed lines")
   }
 
+  test("the one JSON string escaper round-trips quote, backslash and control chars") {
+    // Verify's oracle dump and every alert transport escape through it;
+    // Jackson rejects a raw control char, so this is a strict check
+    val s = "q\"b\\t\tr\rn\nu\u0001end"
+    val lit = graft.pipeline.AlertJson.jsonStr(s)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(lit, classOf[String]) === s, lit)
+  }
+
   test("http notifier POSTs the shared alert JSON to the configured webhook") {
     import graft.pipeline.HttpNotifier
     val received = new java.util.concurrent.LinkedBlockingQueue[(String, String)]()

@@ -119,6 +119,18 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     assert(after - warm <= 1, "only the new path may read")
   }
 
+  test("one load lists its table once") {
+    // the spread verdict and the read (or the events ts unit) share one
+    // metadata lookup per load
+    def listed(load: => Any): Long = {
+      val before = Tables.listings.get()
+      load
+      Tables.listings.get() - before
+    }
+    assert(listed(Tables.loadBalanced(spark, SF, "lineitem")) === 1L)
+    assert(listed(Tables.loadEvents(spark, SF)) === 1L)
+  }
+
   test("cached balance still spreads an unsplittable small input") {
     // the decision itself must survive caching: tiny single-row-group
     // parquet at local[4] should come back repartitioned to cluster
