@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   * again only when the digest changes — no Spark job, and any
   * rewrite, added part or touched file at any depth misses the cache.
   * The same digest is the source fingerprint of state kept at rest
-  * ([[fingerprint]], `Bucketing.ensureBuilt`). Every read passes the
+  * ([[loadWithMeta]], `Bucketing.ensureBuilt`). Every read passes the
   * cached schema to `spark.read.schema(...)`: a schema-less
   * `spark.read.parquet` runs a footer-merge job on every call, and
   * `count()` runs two. Reads of state at rest go through [[read]];
@@ -109,9 +109,10 @@ object Tables {
     * guarantee (TablesSpec); no production reads. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Listing counter — spec probe for the one-listing-per-load
+  /** Listings per path — spec probe for the one-listing-per-load
     * guarantee (TablesSpec); no production reads. */
-  private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val listings =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
 
   /** The cached metadata of the table at `path`, read again when the
     * digest of its data-file listing changed; None when `path` does
@@ -136,19 +137,13 @@ object Tables {
     }
   }
 
-  /** The fingerprint of the table at `path` for state built from it at
-    * rest (`Bucketing.ensureBuilt`): the digest [[meta]] keys on. None
-    * when `path` does not exist or holds no data file, so the caller
-    * rebuilds. */
-  def fingerprint(spark: SparkSession, path: String): Option[String] =
-    meta(spark, path).map(_.fingerprint)
-
   /** Non-empty data files under `p`, in name order, with the digest of
     * the qualified root and each file's (relative path, length, mtime);
     * None when `p` does not exist or holds no data file. The digest is
     * the same however the root is spelled (`/x` or `file:/x`). */
   private def listing(fs: FileSystem, p: Path): Option[(String, Seq[FileStatus])] = {
-    listings.incrementAndGet()
+    listings.computeIfAbsent(p.toString, _ => new java.util.concurrent.atomic.LongAdder)
+      .increment()
     val root = try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
     root.flatMap { st =>
@@ -213,6 +208,19 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     val m = meta(spark, path)
     balance(spark, m, readWith(spark, path, m))
+  }
+
+  /** A catalog table for state built from it at rest: the frame
+    * ([[loadBalanced]] when `balanced`, else [[load]]) and the [[Meta]]
+    * its read came from, whose `fingerprint` keys the build
+    * (`Bucketing.ensureBuilt`) and whose `rows` size the query side —
+    * so one call lists its source table once. */
+  private[graft] def loadWithMeta(spark: SparkSession, sfDir: String, name: String,
+      balanced: Boolean): (DataFrame, Meta) = {
+    val path = s"$sfDir/$name.parquet"
+    val m = metaOf(spark, path)
+    val df = readWith(spark, path, Some(m))
+    (if (balanced) balance(spark, Some(m), df) else df, m)
   }
 
   /** The spread verdict takes the load's own [[Meta]], so one load

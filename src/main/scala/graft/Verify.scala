@@ -40,34 +40,6 @@ object Verify {
       .filter { case (k, _) => only.forall(_(k)) }
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-
-    // Per-round QUALITY regeneration: the gates behind the no-oracle
-    // entries are re-evaluated by the SAME run that produces the
-    // correctness dump, so they can never ship on a stale artifact.
-    // Round N = 1 + the latest CORRECTNESS_r*.json in the cwd (the
-    // repo root when the driver runs); skipped for subset runs (local
-    // iteration) and when no round artifacts are visible. A quality
-    // failure must never sink the correctness dump — log and continue.
-    if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_SKIP_QUALITY")) {
-      val cwd = new java.io.File(".").getCanonicalFile
-      val roundRe = "CORRECTNESS_r0*(\\d+)\\.json".r
-      val rounds = Option(cwd.listFiles).getOrElse(Array.empty).flatMap(f =>
-        roundRe.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      if (rounds.nonEmpty) try {
-        val out = sys.env.getOrElse("SPARK_GRAFT_QUALITY_OUT",
-          new java.io.File(cwd, s"QUALITY_r${rounds.max + 1}.json").getPath)
-        // sf-scaled ANN corpus recall rides along when the bench corpus
-        // is present (graft.BenchData writes it; see BASELINE.md)
-        val annDir = sys.env.get("SPARK_GRAFT_QUALITY_ANN_DIR").orElse(
-          Some(new java.io.File(cwd, "target/benchdata/sf1").getPath)
-            .filter(p => new java.io.File(p, "embeddings.parquet").isDirectory))
-        val failed = QualityHarness.writeArtifact(spark, sfDir, out, annDir)
-        if (failed.nonEmpty)
-          System.err.println(s"[quality] FAILED gates: ${failed.mkString(", ")}")
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[quality] artifact generation failed: ${e.getMessage}")
-      }
-    }
     spark.stop()
   }
 }

@@ -621,8 +621,8 @@ object Dedup {
     * documents frame for the caller's batch side. Idempotent per
     * corpus state. */
   private[graft] def ensureIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
-    val docs = Tables.loadBalanced(spark, dir, "documents")
+    val (docs, m) = Tables.loadWithMeta(spark, dir, "documents", balanced = true)
+    val fp = Some(m.fingerprint)
     val idxSigs = signatures(docs).filter(!isBatch)
     // shared by the two table builds, and filled only when one runs:
     // ensureBucketed takes its frame by name, and a fresh index is the

@@ -485,19 +485,19 @@ object Relational {
   private[graft] val ordBucketTable = "graft_q13_orders_bkt"
 
   def q13(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.loadBalanced(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    val o = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate"))
+    val (lineitem, liMeta) = Tables.loadWithMeta(spark, dir, "lineitem", balanced = true)
+    val li = lineitem.select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+    val (orders, oMeta) = Tables.loadWithMeta(spark, dir, "orders", balanced = false)
+    val o = orders.select(col("o_orderkey").as("l_orderkey"), col("o_orderdate"))
     // build-once-join-many: the bucket write runs only when the source
     // files changed since this JVM last built the tables (fingerprint
     // gate) — the at-rest shape bucketing exists for. The first
     // invocation per (JVM, source state) pays the one-time shuffle;
     // repeats measure the exchange-free join.
     graft.sources.Bucketing.ensureBucketed(spark, li, liBucketTable, 8, Seq("l_orderkey"),
-      Tables.fingerprint(spark, s"$dir/lineitem.parquet"))
+      Some(liMeta.fingerprint))
     graft.sources.Bucketing.ensureBucketed(spark, o, ordBucketTable, 8, Seq("l_orderkey"),
-      Tables.fingerprint(spark, s"$dir/orders.parquet"))
+      Some(oMeta.fingerprint))
     graft.sources.Bucketing
       .coLocatedJoin(spark, liBucketTable, ordBucketTable, Seq("l_orderkey"))
       .groupBy(year(col("o_orderdate")).as("o_year"))

@@ -700,11 +700,9 @@ object Similarity {
   // filter that yields the query vectors (SimilaritySpec asserts the
   // single scan, and that served output == inline output row-for-row).
   // ---------------------------------------------------------------------
-  private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String,
-      indexDir: String): Unit = {
+  private[graft] def buildIvfPqIndex(corpus: DataFrame, indexDir: String): Unit = {
     val (centroids, codebook, postings) = ivfPqIndex(
-      Tables.loadBalanced(spark, dir, "embeddings")
-        .withColumn("norm", expr("vec_norm(embedding)"))
+      corpus.withColumn("norm", expr("vec_norm(embedding)"))
         .select("vec_id", "embedding", "norm"))
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
@@ -715,15 +713,16 @@ object Similarity {
     centroids.unpersist(blocking = false): Unit
   }
 
-  /** Serve top-k from a built index: corpus side = artifacts only. */
-  private[graft] def ivfPqServe(spark: SparkSession, dir: String,
+  /** Serve top-k from a built index: corpus side = artifacts only;
+    * `corpus` supplies the query vectors. */
+  private[graft] def ivfPqServe(spark: SparkSession, corpus: DataFrame,
       indexDir: String, queryStride: Int = 1,
       emitMod: Boolean = false): DataFrame = {
     val centroids = Tables.read(spark, s"$indexDir/centroids")
     val codebook = Tables.read(spark, s"$indexDir/codebook")
     val postings = Tables.read(spark, s"$indexDir/postings")
     // shared by qtab and the probes
-    val q = Materialized(Tables.loadBalanced(spark, dir, "embeddings")
+    val q = Materialized(corpus
       .filter(col("vec_id") % queryModFor(queryStride) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         expr("vec_norm(embedding)").as("q_norm")))
@@ -746,15 +745,17 @@ object Similarity {
   def ivfPqServed(spark: SparkSession, dir: String): DataFrame = {
     // same metadata-derived stride as the inline twin, so QUALITY's
     // served≡inline contrast compares identical query sets
-    val stride = annQueryStrideFor(Tables.rows(spark, dir, "embeddings"))
+    // one listing of the corpus feeds the stride, the freshness key,
+    // the build and the query side
+    val (corpus, m) = Tables.loadWithMeta(spark, dir, "embeddings", balanced = true)
+    val stride = annQueryStrideFor(m.rows)
     val indexDir = servedIndexDir(spark, dir)
     val indexPath = new Path(indexDir)
-    graft.sources.Bucketing.ensureBuilt(indexDir,
-      Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
+    graft.sources.Bucketing.ensureBuilt(indexDir, Some(m.fingerprint),
       indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(indexPath)) {
-      buildIvfPqIndex(spark, dir, indexDir)
+      buildIvfPqIndex(corpus, indexDir)
     }
-    ivfPqServe(spark, dir, indexDir, stride, emitMod = true)
+    ivfPqServe(spark, corpus, indexDir, stride, emitMod = true)
   }
 
   /** Ascending-index dot-product fold over one 16-dim sub-block, both

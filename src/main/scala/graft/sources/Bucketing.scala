@@ -75,7 +75,7 @@ object Bucketing {
     * the rule for everything kept at rest (bucketed tables, the served
     * ANN index): built once, then served many times; paying the build
     * per call would cancel the point of keeping it. `fingerprint`
-    * (from `graft.Tables.fingerprint`) keys the decision: None always
+    * (the source's `Tables.Meta` fingerprint) keys the decision: None always
     * rebuilds, a changed source fingerprint (regenerated source,
     * different sfDir in the same JVM) rebuilds, an unchanged one
     * skips. Serialized in-JVM; concurrent cross-process builders of the

@@ -48,7 +48,7 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     Bucketing.resetBuiltStamps()
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val fp1 = Tables.fingerprint(spark, s"$SF/nation.parquet")
+    val fp1 = Tables.meta(spark, s"$SF/nation.parquet").map(_.fingerprint)
     assert(fp1.isDefined, "test table must fingerprint")
     val before = Bucketing.ensureRebuilds.get()
     Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), fp1)
@@ -58,7 +58,7 @@ class BucketingSpec extends AnyFunSuite with SparkSuite {
       "unchanged fingerprint must not rebuild")
     assert(spark.table("graft_ensure_spec").count() === 2)
     // a changed source fingerprint rebuilds
-    val fp2 = Tables.fingerprint(spark, s"$SF/region.parquet")
+    val fp2 = Tables.meta(spark, s"$SF/region.parquet").map(_.fingerprint)
     Bucketing.ensureBucketed(spark, df, "graft_ensure_spec", 4, Seq("k"), fp2)
     assert(Bucketing.ensureRebuilds.get() === before + 2,
       "changed fingerprint must rebuild")

@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * with neither check: the driver would record a rows-only smoke pass
   * and the entry would look green while being unverified.
   *
-  * `QualityHarness.writeArtifact` asserts the other direction at run
-  * time (the evaluated gates match the declared set), so between the
-  * two checks the declaration, the evaluation, and the catalog cannot
-  * drift apart.
+  * `QualityHarness.gates` asserts the other direction (the evaluated
+  * gates match the declared set) every time it runs, in `QualitySpec`
+  * and in the `graft.Quality` artifact, so between the two checks the
+  * declaration, the evaluation, and the catalog cannot drift apart.
   */
 class CatalogSpec extends AnyFunSuite {
 

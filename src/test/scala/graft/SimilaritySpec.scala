@@ -135,18 +135,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(recall > 0.07, s"recall $recall not better than random scan")
   }
 
-  /** Planted-cluster fixture + recall — shared with the QUALITY
-    * artifact (QualityHarness scaladoc has the construction). */
+  /** Planted-cluster fixture + recall, shared with the quality gates
+    * (QualityHarness scaladoc has the construction). */
   private def plantedCorpus: org.apache.spark.sql.DataFrame =
     QualityHarness.plantedCorpus(spark)
 
-  private def recallOnPlanted(ann: Array[org.apache.spark.sql.Row]): Double =
-    recallChecked(ann)
-
-  /** The harness assumes each planted query's true top-10 is its own
-    * cluster; verify that assumption against the EXACT scorer here so
-    * the shared recall stays honest. */
-  private def recallChecked(ann: Array[org.apache.spark.sql.Row]): Double = {
+  /** The recall assumes each planted query's true top-10 is its own
+    * cluster; verify that against the EXACT scorer here so the shared
+    * recall stays honest. */
+  private def recallOnPlanted(ann: Array[org.apache.spark.sql.Row]): Double = {
     val exact = Similarity.cosineTopKOver(plantedCorpus).collect()
       .filter(_.getLong(0) < 1000)   // planted queries only
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
@@ -158,16 +155,14 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("LSH recall on planted clusters discriminates from a random scan") {
-    val corpus = plantedCorpus
-    val recall = recallOnPlanted(Similarity.annLshOver(corpus).collect())
+    val recall = recallOnPlanted(Similarity.annLshOver(plantedCorpus).collect())
     // 9 of 256 buckets probed ≈ 3.5% scanned; planted members are
     // near-duplicates of their query, so multiprobe must catch most
     assert(recall > 0.85, s"LSH planted recall $recall (random scan ≈ 0.035)")
   }
 
   test("IVF recall on planted clusters discriminates from a random scan") {
-    val corpus = plantedCorpus
-    val recall = recallOnPlanted(Similarity.ivfTopKOver(corpus).collect())
+    val recall = recallOnPlanted(Similarity.ivfTopKOver(plantedCorpus).collect())
     // nprobe=4 of K=16 lists ≈ 25% scanned; co-clustered members land
     // in the probed lists, so recall must far exceed that fraction
     assert(recall > 0.9, s"IVF planted recall $recall (random scan ≈ 0.25)")
@@ -196,8 +191,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("IVF-PQ recall on planted clusters discriminates from a random scan") {
-    val corpus = plantedCorpus
-    val recall = recallOnPlanted(Similarity.ivfPqTopKOver(corpus).collect())
+    val recall = recallOnPlanted(Similarity.ivfPqTopKOver(plantedCorpus).collect())
     // same nprobe=4/16 coarse stage as plain IVF; candidates are
     // SHORTLISTED from PQ codes via the ADC table, then the shortlist
     // is re-ranked exactly — quantization costs shortlist membership
@@ -247,14 +241,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     val indexDir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_spec").toFile
     try {
-      Similarity.buildIvfPqIndex(spark, SF, indexDir.getPath)
+      val corpus = Tables.loadBalanced(spark, SF, "embeddings")
+      Similarity.buildIvfPqIndex(corpus, indexDir.getPath)
       spark.catalog.clearCache() // index build persists are done with
-      val served = Similarity.ivfPqServe(spark, SF, indexDir.getPath)
+      val served = Similarity.ivfPqServe(spark, corpus, indexDir.getPath)
       // identical algebra from at-rest artifacts: output must match the
       // inline (train-per-call) query row for row — which also carries
       // the planted-recall guarantee over to the served path unchanged.
       val inline = Similarity
-        .ivfPqTopKOver(Tables.loadBalanced(spark, SF, "embeddings"))
+        .ivfPqTopKOver(corpus)
         .collect().toSeq
       assert(served.collect().toSeq === inline,
         "served top-k must be identical to the inline query")
@@ -337,9 +332,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     try {
       java.nio.file.Files.copy(
         new java.io.File(SF, "embeddings.parquet").toPath, dst.toPath): Unit
-      val plain = Tables.fingerprint(spark, dst.getPath)
+      val plain = Tables.meta(spark, dst.getPath).map(_.fingerprint)
         .getOrElse(fail("plain local corpus must fingerprint"))
-      val uri = Tables.fingerprint(spark, "file:" + dst.getPath)
+      val uri = Tables.meta(spark, "file:" + dst.getPath).map(_.fingerprint)
         .getOrElse(fail("file:-scheme corpus must fingerprint, not degrade"))
       assert(plain === uri,
         "the fingerprint must not depend on how the path is spelled")

@@ -121,14 +121,28 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
 
   test("one load lists its table once") {
     // the spread verdict and the read (or the events ts unit) share one
-    // metadata lookup per load
-    def listed(load: => Any): Long = {
-      val before = Tables.listings.get()
+    // metadata lookup per load; an entry serving state at rest takes
+    // its source fingerprint (and the served index its stride) from
+    // that same lookup, on the building call and on the serving call
+    def count(table: String): Long =
+      Option(Tables.listings.get(s"$SF/$table.parquet")).fold(0L)(_.sum)
+    def listed(tables: String*)(load: => Any): Seq[Long] = {
+      val before = tables.map(count)
       load
-      Tables.listings.get() - before
+      tables.map(count).zip(before).map { case (a, b) => a - b }
     }
-    assert(listed(Tables.loadBalanced(spark, SF, "lineitem")) === 1L)
-    assert(listed(Tables.loadEvents(spark, SF)) === 1L)
+    assert(listed("lineitem")(Tables.loadBalanced(spark, SF, "lineitem")) === Seq(1L))
+    assert(listed("events")(Tables.loadEvents(spark, SF)) === Seq(1L))
+    val atRest = Seq(
+      "q13_bucketed_join" -> Seq("lineitem", "orders"),
+      "dedup_incremental_bucketed" -> Seq("documents"),
+      "sim_ann_ivfpq_served" -> Seq("embeddings"))
+    try atRest.foreach { case (entry, tables) =>
+      (1 to 2).foreach { call =>
+        assert(listed(tables: _*)(SparkEntry.queries(entry)(spark, SF)) ===
+          tables.map(_ => 1L), s"$entry, call $call")
+      }
+    } finally spark.catalog.clearCache()
   }
 
   test("cached balance still spreads an unsplittable small input") {

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Dev loop: run graft.Verify directly (no sbt JVM startup), then the
-# DuckDB comparison. Usage: tools/verify.sh [sfDir] [outDir] [mainClass]
+# DuckDB comparison. Usage: tools/verify.sh [sfDir] [outDir] [mainClass] [mainArgs...]
+# (mainArgs follow sfDir and outDir on the main's command line)
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
@@ -23,7 +24,7 @@ export SPARK_HOME="${SPARK_HOME:-/opt/spark}"
 export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $OPENS -Xmx12g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$MAIN" "$SF" "$OUT" 2>&1 | grep -v '^2[0-9/]*' || true
+  -cp "$CP" "$MAIN" "$SF" "$OUT" "${@:4}" 2>&1 | grep -v '^2[0-9/]*' || true
 if [ "$MAIN" = "graft.Verify" ]; then
   # sf1 runs emit the driver-format artifact for the CURRENT round
   # (latest committed CORRECTNESS_r{N} + 1), so 10x-scale oracle
